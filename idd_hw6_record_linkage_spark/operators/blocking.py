@@ -19,6 +19,8 @@ scale where mega-domains create hot keys):
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -71,6 +73,35 @@ def _apply_salt(keys: DataFrame, big: DataFrame, basis: Column,
     return out.drop("n_sub")
 
 
+def _block_sizes(tables: list[DataFrame]) -> DataFrame:
+    """(block_key, n) over the union of the key tables."""
+    keys = reduce(DataFrame.unionAll, [t.select("block_key") for t in tables])
+    return keys.groupBy("block_key").agg(F.count("*").alias("n"))
+
+
+def _cap_blocks(tables: list[DataFrame], max_block_size: int,
+                salt_col: str | None) -> list[DataFrame]:
+    """The block-size cap over one or more key tables: ONE oversized-
+    block list and ONE n_sub modulus over their union, applied
+    identically to every table (see :func:`cap_blocks` for the salting
+    tiers and :func:`cap_blocks_pair` for why the list is shared)."""
+    big = _oversized(_block_sizes(tables), max_block_size)
+    basis = F.xxhash64(salt_col) if salt_col else F.xxhash64("id")
+    salted = [_apply_salt(t, big, basis, flag="_salted") for t in tables]
+    if salt_col is None:
+        # id basis is already max-entropy; one tier suffices.
+        return [s.drop("_salted") for s in salted]
+    big2 = _oversized(
+        _block_sizes([s.where(F.col("_salted")) for s in salted]),
+        4 * max_block_size,
+        target=max_block_size,
+    )
+    # The second tier salts by record id: across sources, ids land in
+    # arbitrary sub-blocks, so residual oversized blocks trade cross-
+    # source recall for the hard quadratic bound.
+    return [_apply_salt(s, big2, F.xxhash64("id")).drop("_salted") for s in salted]
+
+
 def cap_blocks(keys: DataFrame, max_block_size: int,
                salt_col: str | None = None) -> DataFrame:
     """Deterministically split oversized blocks into ~max_block_size
@@ -96,20 +127,7 @@ def cap_blocks(keys: DataFrame, max_block_size: int,
     collapse (the whole block in one slot overshoots by ~n_sub x):
     residual sub-blocks are bounded by 4x cap, never by the data.
     """
-    sizes = keys.groupBy("block_key").agg(F.count("*").alias("n"))
-    big = _oversized(sizes, max_block_size)
-    basis = F.xxhash64(salt_col) if salt_col else F.xxhash64("id")
-    salted = _apply_salt(keys, big, basis, flag="_salted")
-    if salt_col is None:
-        # id basis is already max-entropy; one tier suffices.
-        return salted.drop("_salted")
-    sizes2 = (
-        salted.where(F.col("_salted"))
-        .groupBy("block_key")
-        .agg(F.count("*").alias("n"))
-    )
-    big2 = _oversized(sizes2, 4 * max_block_size, target=max_block_size)
-    return _apply_salt(salted, big2, F.xxhash64("id")).drop("_salted")
+    return _cap_blocks([keys], max_block_size, salt_col)[0]
 
 
 def cap_blocks_pair(
@@ -126,33 +144,7 @@ def cap_blocks_pair(
     cross-source equi-join silently drops candidates for exactly the
     hot blocks the cap targets.
     """
-    both = keys_l.select("block_key").unionAll(keys_r.select("block_key"))
-    big = _oversized(
-        both.groupBy("block_key").agg(F.count("*").alias("n")), max_block_size
-    )
-    basis = F.xxhash64(salt_col) if salt_col else F.xxhash64("id")
-    out_l = _apply_salt(keys_l, big, basis, flag="_salted")
-    out_r = _apply_salt(keys_r, big, basis, flag="_salted")
-    if salt_col is None:
-        return out_l.drop("_salted"), out_r.drop("_salted")
-    # second tier (content salt collapsed): same union-consistent list.
-    salted_union = (
-        out_l.where(F.col("_salted")).select("block_key")
-        .unionAll(out_r.where(F.col("_salted")).select("block_key"))
-    )
-    big2 = _oversized(
-        salted_union.groupBy("block_key").agg(F.count("*").alias("n")),
-        4 * max_block_size,
-        target=max_block_size,
-    )
-    # NOTE: the second tier salts by record id — ids from different
-    # sources land in arbitrary sub-blocks, so residual oversized
-    # blocks trade cross-source recall for the hard quadratic bound
-    # (exactly the documented cap semantics).
-    return (
-        _apply_salt(out_l, big2, F.xxhash64("id")).drop("_salted"),
-        _apply_salt(out_r, big2, F.xxhash64("id")).drop("_salted"),
-    )
+    return tuple(_cap_blocks([keys_l, keys_r], max_block_size, salt_col))
 
 
 def candidate_pairs_self(keys: DataFrame) -> DataFrame:

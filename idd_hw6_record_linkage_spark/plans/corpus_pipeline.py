@@ -75,9 +75,6 @@ class CorpusPipeline(StagedPlan):
     (original columns preserved; ``text_col`` rewritten in place by
     boilerplate/pii; packing appends shard_id/shard_pos)."""
 
-    def __init__(self, spark: SparkSession, cfg: CorpusConfig):
-        super().__init__(spark, cfg)
-
     # --- stages ----------------------------------------------------------
 
     def collapse(self, docs: DataFrame) -> DataFrame:

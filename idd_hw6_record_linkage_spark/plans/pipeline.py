@@ -1,7 +1,7 @@
 """End-to-end linkage pipeline over the pages table.
 
-Stage DAG (one declarative DataFrame plan per stage; parquet stage
-boundaries double as resumable checkpoints, SURVEY §3.1):
+One stage DAG (one declarative DataFrame plan per stage), wired once in
+``_link`` for every entry point:
 
     read pages → normalize → {block_b1, block_b2, block_lsh}
       → pairs (salted equi-join ∪ passes, dedup)
@@ -9,6 +9,14 @@ boundaries double as resumable checkpoints, SURVEY §3.1):
       → edges (threshold w/ 0.5→0.3 fallback)
       → cluster (large-star/small-star CC)
       → eval (P/R/F1 vs labeled pairs / expected clusters)
+
+Two stage stores decide how each stage output is materialized:
+
+- memory (``run_in_memory``, ``link_sources``): ``persist()`` per
+  stage, every cache released by the result's ``release()``;
+- staged (``LinkagePipeline``, ``dedupe_pages``): parquet or iceberg
+  stage tables with lineage rows in the metrics table; a stage's
+  completion row doubles as its resume checkpoint (SURVEY §3.1).
 
 The reference runs the same lifecycle eagerly in pandas
 (record_linkage.py:588-693); every stage here is relational and
@@ -19,6 +27,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +42,6 @@ from idd_hw6_record_linkage_spark.operators.clustering import clusters_from_edge
 from idd_hw6_record_linkage_spark.operators.minhash import lsh_key_table
 from idd_hw6_record_linkage_spark.operators import scoring
 from idd_hw6_record_linkage_spark.operators.evaluation import (
-    PRF1,
     pairwise_cluster_f1,
     precision_recall_f1,
 )
@@ -269,7 +277,6 @@ def _scored_features(feats: DataFrame, cfg: "PipelineConfig",
     scorer's weighted mean, or a per-run LogisticRegression fit on
     labeled pairs (M1/M2) — identical downstream threshold-with-
     fallback semantics either way."""
-    _validate_scorer(cfg, labeled_pairs)
     if cfg.scorer == "lr":
         labels = labeled_pairs.select(
             F.col("url_l").alias("id_l"),
@@ -283,50 +290,121 @@ def _scored_features(feats: DataFrame, cfg: "PipelineConfig",
     return scoring.score(feats, cfg.comparator_config)
 
 
-def run_in_memory(spark: SparkSession, pages: DataFrame,
-                  cfg: "PipelineConfig | None" = None,
-                  labeled_pairs: DataFrame | None = None) -> dict:
-    """Compose the full linkage DAG lazily (no parquet stage
-    boundaries) — for small inputs, smoke checks, and plan inspection."""
-    cfg = cfg or PipelineConfig(workdir="/tmp/_unused", run_id="mem")
+def _link(sources: list[DataFrame], cfg: "PipelineConfig",
+          labeled_pairs: DataFrame | None, store) -> dict:
+    """The linkage DAG, wired once for every entry point. ``sources`` is
+    one pages table (self-linkage → clusters) or two (two-source
+    linkage → matched pairs, the reference's output for that case,
+    record_linkage.py:528-536). The two differ only in the pair join
+    and in the record table right-hand ids resolve against.
+
+    ``store`` decides how each stage output is materialized:
+    :class:`_MemoryStore` persists it, :class:`StagedPlan` writes it as
+    a resumable stage table. Either way ``store._cache`` holds a fan-out
+    point inside a stage and ``store._record`` files a metrics row."""
     _validate_scorer(cfg, labeled_pairs)
-    # Persist the fan-out points: records feeds key-gen + both sides of
-    # the feature joins; keys feeds the size-count and both sides of the
-    # self-join (projection differences defeat ReuseExchange there).
-    records = normalize_plan(_pre_stages(pages, cfg)).persist()
-    raw_keys = block_keys_plan(records, cfg).persist()
-    keys = blocking.cap_blocks(
-        raw_keys, cfg.max_block_size, salt_col="salt_basis"
-    ).persist()
-    pairs = blocking.candidate_pairs_self(keys).persist()
-    feats = scoring.compute_features(pairs, records, cfg.comparator_config, "url")
-    # persist: threshold_with_fallback's existence probe executes the
-    # scoring plan once; without the persist, clusters/consumers would
-    # re-run the whole Arrow-UDF scoring pass a second time.
-    scored = _scored_features(feats, cfg, labeled_pairs).persist()
-    edges, _ = scoring.threshold_with_fallback(
-        scored, cfg.score_threshold, cfg.fallback_threshold
-    )
-    clusters = clusters_from_edges(
+    recs = [
+        store._run_stage("normalize", lambda p=p: normalize_plan(_pre_stages(p, cfg)))
+        for p in sources
+    ]
+
+    def build_pairs() -> DataFrame:
+        # Fan-out points: raw keys feed the oversize count + the cap
+        # join; capped keys feed both sides of the pair join. One cap
+        # over every source's keys: capping sources independently would
+        # salt a hot key on one side only and drop its cross-source
+        # candidates.
+        raw = [store._cache(block_keys_plan(r, cfg)) for r in recs]
+        keys = [
+            store._cache(k)
+            for k in blocking._cap_blocks(raw, cfg.max_block_size, "salt_basis")
+        ]
+
+        def block_stats() -> dict:
+            # Blocking quality per run, like the reference's blocking
+            # logs (blocking_B1.py:92-127).
+            stats = blocking.block_size_stats(
+                reduce(DataFrame.unionByName, keys)
+            ).collect()[0]
+            return {"rows_in": int(stats["records_in_blocks"]),
+                    "pair_count": int(stats["candidate_pairs"])}
+
+        store._record("block_stats", block_stats)
+        if len(keys) == 1:
+            return blocking.candidate_pairs_self(keys[0])
+        return blocking.candidate_pairs_cross(*keys)
+
+    pairs = store._run_stage("pairs", build_pairs)
+    # Right-hand ids resolve against the last source: for self-linkage
+    # that is the one record table.
+    scored = store._run_stage("score", lambda: _scored_features(
+        scoring.compute_features_two(
+            pairs, recs[0], recs[-1], cfg.comparator_config, "url"
+        ),
+        cfg, labeled_pairs,
+    ))
+    threshold_used = None
+
+    def build_edges() -> DataFrame:
+        nonlocal threshold_used
+        edges, threshold_used = scoring.threshold_with_fallback(
+            scored, cfg.score_threshold, cfg.fallback_threshold
+        )
+        return edges.select("id_l", "id_r", "score")
+
+    edges = store._run_stage("edges", build_edges, counts=lambda out: {
+        "pair_count": scored.count(), "match_count": out.count(),
+    })
+    if len(recs) == 2:
+        return {"records_l": recs[0], "records_r": recs[1], "pairs": pairs,
+                "scored": scored, "matches": edges,
+                "threshold_used": threshold_used}
+    records = recs[0]
+    clusters = store._run_stage("cluster", lambda: clusters_from_edges(
         edges.select("id_l", "id_r"), records.select("url"), id_col="url"
-    )
-    # The persisted stages are intentionally session-scoped (the caller
-    # keeps using records/pairs/scored); "release" unpersists them all
-    # once the caller is done — long-lived sessions running many
-    # pipelines should call it to avoid cache accumulation.
-    handles = [records, raw_keys, keys, pairs, scored]
-    result = {
-        "records": records,
-        "pairs": pairs,
-        "scored": scored,
-        "edges": edges,
-        "clusters": clusters,
-        "release": lambda: [h.unpersist() for h in handles],
-    }
+    ))
+    result = {"records": records, "pairs": pairs, "scored": scored,
+              "edges": edges, "clusters": clusters}
     golden = _maybe_golden(records, clusters, cfg)
     if golden is not None:
         result["golden"] = golden
     return result
+
+
+class _MemoryStore:
+    """Stage store of the lazy in-memory DAG: every stage output and
+    fan-out cache is persisted (materialized by the first consumer) and
+    stays cached until ``release`` — the caller keeps using records,
+    pairs and scored, so long-lived sessions running many pipelines
+    call ``release`` once done with them."""
+
+    def __init__(self) -> None:
+        self.handles: list[DataFrame] = []
+
+    def _run_stage(self, stage: str, build, counts=None) -> DataFrame:
+        return self._cache(build())
+
+    def _cache(self, df: DataFrame) -> DataFrame:
+        self.handles.append(df.persist())
+        return df
+
+    def _record(self, stage: str, counts) -> None:
+        pass
+
+    def release(self) -> None:
+        for h in self.handles:
+            h.unpersist()
+
+
+def run_in_memory(spark: SparkSession, pages: DataFrame,
+                  cfg: "PipelineConfig | None" = None,
+                  labeled_pairs: DataFrame | None = None) -> dict:
+    """Compose the full linkage DAG lazily (no parquet stage
+    boundaries) — for small inputs, smoke checks, and plan inspection.
+    ``result["release"]()`` unpersists every cached stage."""
+    cfg = cfg or PipelineConfig(workdir="/tmp/_unused", run_id="mem")
+    store = _MemoryStore()
+    return {**_link([pages], cfg, labeled_pairs, store), "release": store.release}
 
 
 def link_sources(
@@ -343,40 +421,9 @@ def link_sources(
     emits pairs, not clusters, for two-source linkage:
     record_linkage.py:528-536)."""
     cfg = cfg or PipelineConfig(workdir="/tmp/_unused", run_id="link")
-    _validate_scorer(cfg, labeled_pairs)
-    rec_l = normalize_plan(_pre_stages(pages_l, cfg)).persist()
-    rec_r = normalize_plan(_pre_stages(pages_r, cfg)).persist()
-    # ONE oversized-block list over the union of both sources: capping
-    # each side independently would salt hot keys on one side only and
-    # silently drop their cross-source candidates.
-    keys_l, keys_r = blocking.cap_blocks_pair(
-        block_keys_plan(rec_l, cfg),
-        block_keys_plan(rec_r, cfg),
-        cfg.max_block_size,
-        salt_col="salt_basis",
-    )
-    keys_l = keys_l.persist()
-    keys_r = keys_r.persist()
-    pairs = blocking.candidate_pairs_cross(keys_l, keys_r).persist()
-    feats = scoring.compute_features_two(
-        pairs, rec_l, rec_r, cfg.comparator_config, "url"
-    )
-    # persist: the threshold probe executes the scoring plan; without it
-    # the matches consumer re-runs the Arrow scoring pass a second time.
-    scored = _scored_features(feats, cfg, labeled_pairs).persist()
-    matches, used = scoring.threshold_with_fallback(
-        scored, cfg.score_threshold, cfg.fallback_threshold
-    )
-    handles = [rec_l, rec_r, keys_l, keys_r, pairs, scored]
-    return {
-        "records_l": rec_l,
-        "records_r": rec_r,
-        "pairs": pairs,
-        "scored": scored,
-        "matches": matches,
-        "threshold_used": used,
-        "release": lambda: [h.unpersist() for h in handles],
-    }
+    store = _MemoryStore()
+    return {**_link([pages_l, pages_r], cfg, labeled_pairs, store),
+            "release": store.release}
 
 
 class StagedPlan:
@@ -391,6 +438,7 @@ class StagedPlan:
     def __init__(self, spark: SparkSession, cfg) -> None:
         self.spark = spark
         self.cfg = cfg
+        self._fanout: list[DataFrame] = []
         os.makedirs(cfg.workdir, exist_ok=True)
 
     # --- stage plumbing ------------------------------------------------
@@ -422,125 +470,67 @@ class StagedPlan:
             return self.spark.read.format("iceberg").load(target)
         return self.spark.read.parquet(target)
 
-    def _run_stage(self, stage: str, build, rows_in: int | None = None,
-                   pair_count: int | None = None, match_count: int | None = None,
-                   ) -> DataFrame:
+    def _run_stage(self, stage: str, build, counts=None, **metrics) -> DataFrame:
         """Materialize a stage to the configured table format unless
-        already completed for this run_id (resume)."""
+        already completed for this run_id (resume). ``counts(out)``
+        returns extra metrics for the completion row, computed only
+        when the stage is built."""
         path = self._stage_path(stage)
         if self.cfg.resume and M.stage_completed(
             self.spark, self.cfg.workdir, self.cfg.run_id, stage
         ):
             return self._read_stage(path)
-        df = build()
-        self._write_stage(df, path)
+        try:
+            self._write_stage(build(), path)
+        finally:
+            # The stage table is written: its fan-out caches are dead.
+            for h in self._fanout:
+                h.unpersist()
+            self._fanout.clear()
         out = self._read_stage(path)
+        if counts is not None:
+            metrics.update(counts(out))
         M.append_stage_metrics(
-            self.spark, self.cfg.workdir, self.cfg.run_id, stage, out,
-            rows_in=rows_in, pair_count=pair_count, match_count=match_count,
+            self.spark, self.cfg.workdir, self.cfg.run_id, stage, out, **metrics
         )
         return out
+
+    def _cache(self, df: DataFrame) -> DataFrame:
+        """Persist a fan-out point of the stage being built; released
+        once that stage is written."""
+        self._fanout.append(df.persist())
+        return df
+
+    def _record(self, stage: str, counts) -> None:
+        """Completion-only metrics row (no stage table) from ``counts()``."""
+        M.append_stage_metrics(
+            self.spark, self.cfg.workdir, self.cfg.run_id, stage, None,
+            **counts(),
+        )
 
 
 class LinkagePipeline(StagedPlan):
-    def __init__(self, spark: SparkSession, cfg: PipelineConfig):
-        super().__init__(spark, cfg)
-
-    # --- stages ---------------------------------------------------------
-
-    def normalize(self, pages: DataFrame) -> DataFrame:
-        return self._run_stage(
-            "normalize",
-            lambda: normalize_plan(_pre_stages(pages, self.cfg)),
-        )
-
-    def pairs(self, records: DataFrame) -> DataFrame:
-        def build():
-            # skew control: deterministic sub-blocking of oversized keys.
-            # Persist both fan-out points: raw keys feed the oversize
-            # count + the cap join; capped keys feed both sides of the
-            # candidate self-join.
-            raw = block_keys_plan(records, self.cfg).persist()
-            keys = blocking.cap_blocks(
-                raw, self.cfg.max_block_size, salt_col="salt_basis"
-            ).persist()
-            # blocking quality metrics, like the reference's per-run
-            # blocking logs (blocking_B1.py:92-127): stats per pass
-            # land in the metrics table alongside lineage rows.
-            stats = blocking.block_size_stats(keys).collect()[0]
-            M.append_stage_metrics(
-                self.spark, self.cfg.workdir, self.cfg.run_id, "block_stats",
-                None,
-                rows_in=int(stats["records_in_blocks"]),
-                pair_count=int(stats["candidate_pairs"]),
-            )
-            return blocking.candidate_pairs_self(keys)
-
-        return self._run_stage("pairs", build)
-
-    def score(self, records: DataFrame, pairs: DataFrame,
-              labeled_pairs: DataFrame | None = None) -> DataFrame:
-        def build():
-            feats = scoring.compute_features(
-                pairs, records, self.cfg.comparator_config, id_col="url"
-            )
-            return _scored_features(feats, self.cfg, labeled_pairs)
-
-        return self._run_stage("score", build)
-
-    def edges(self, scored: DataFrame) -> DataFrame:
-        def build():
-            edges, _used = scoring.threshold_with_fallback(
-                scored, self.cfg.score_threshold, self.cfg.fallback_threshold
-            )
-            return edges.select("id_l", "id_r", "score")
-
-        n_pairs = scored.count()
-        out = self._run_stage("edges", build, pair_count=n_pairs)
-        return out
-
-    def cluster(self, records: DataFrame, edges: DataFrame) -> DataFrame:
-        def build():
-            return clusters_from_edges(edges, records.select("url"), id_col="url")
-
-        return self._run_stage("cluster", build)
-
-    # --- end-to-end ------------------------------------------------------
-
     def run(
         self,
         pages: DataFrame,
         labeled_pairs: DataFrame | None = None,
         expected_clusters: DataFrame | None = None,
     ) -> dict:
-        records = self.normalize(pages)
-        pairs = self.pairs(records)
-        scored = self.score(records, pairs, labeled_pairs)
-        edges = self.edges(scored)
-        clusters = self.cluster(records, edges)
-
-        result: dict = {
-            "records": records,
-            "pairs": pairs,
-            "scored": scored,
-            "edges": edges,
-            "clusters": clusters,
-        }
-        golden = _maybe_golden(records, clusters, self.cfg)
-        if golden is not None:
-            result["golden"] = golden
+        result = _link([pages], self.cfg, labeled_pairs, self)
         if labeled_pairs is not None:
             truth_pos = labeled_pairs.where(F.col("label") == 1).select(
                 F.col("url_l").alias("id_l"), F.col("url_r").alias("id_r")
             )
             result["edge_prf1"] = precision_recall_f1(
-                edges.select("id_l", "id_r"), truth_pos
+                result["edges"].select("id_l", "id_r"), truth_pos
             )
             result["pairs_completeness"] = blocking.pairs_completeness(
-                pairs, truth_pos
+                result["pairs"], truth_pos
             )
         if expected_clusters is not None:
-            result["cluster_prf1"] = pairwise_cluster_f1(clusters, expected_clusters)
+            result["cluster_prf1"] = pairwise_cluster_f1(
+                result["clusters"], expected_clusters
+            )
         return result
 
 

@@ -55,6 +55,14 @@ def test_pipeline_f1(tmp_path, spark, raw):
         r["stage"] for r in m.where(F.col("partition_id") == -1).collect()
     }
     assert {"normalize", "pairs", "score", "edges", "cluster"} <= stages
+    # the edges completion row records scored pairs in and edges out
+    done = m.where((F.col("stage") == "edges") & (F.col("partition_id") == -1))
+    row = done.collect()[0]
+    n_scored, n_edges = res["scored"].count(), res["edges"].count()
+    assert row["pair_count"] == n_scored
+    assert row["match_count"] == n_edges
+    assert row["match_rate"] is not None
+    assert row["match_rate"] == pytest.approx(n_edges / n_scored)
 
 
 def test_blocking_stats_and_rr(spark, raw):
@@ -132,6 +140,57 @@ def test_run_in_memory_release_unpersists(spark):
     assert not cm.isEmpty()
     res["release"]()
     assert cm.isEmpty()
+
+
+def test_staged_run_and_link_sources_leave_no_cache(tmp_path, spark):
+    """The staged pipeline releases its fan-out caches (raw and capped
+    key tables) once the pairs stage is written, and link_sources'
+    release() drops every cache it made."""
+    from idd_hw6_record_linkage_spark.plans.pipeline import (
+        dedupe_pages,
+        link_sources,
+    )
+
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    pages = G.generate_pages(spark, 80)
+    res = dedupe_pages(spark, pages, workdir=str(tmp_path / "wd"))
+    res["clusters"].count()
+    assert cm.isEmpty()
+
+    raw = G.generate_raw(spark, 80)
+    cols = ["url", "warc_ts", "html", "text", "lang"]
+    res = link_sources(spark, raw.where(F.col("member") == 0).select(*cols),
+                       raw.where(F.col("member") > 0).select(*cols))
+    res["matches"].count()
+    assert not cm.isEmpty()
+    res["release"]()
+    assert cm.isEmpty()
+
+
+def test_in_memory_and_staged_runs_agree(tmp_path, spark):
+    """run_in_memory and LinkagePipeline.run are one DAG behind two
+    stage stores: same scores on every candidate pair, same clusters."""
+    from idd_hw6_record_linkage_spark.plans.pipeline import run_in_memory
+
+    def fingerprint(df, cols):
+        return df.agg(
+            F.count("*"), F.expr(f"bit_xor(xxhash64({', '.join(cols)}))")
+        ).collect()[0]
+
+    pages = G.generate_pages(spark, 120)
+    mem = run_in_memory(spark, pages)
+    staged = LinkagePipeline(
+        spark, PipelineConfig(workdir=str(tmp_path / "wd"), run_id="p")
+    ).run(pages)
+    try:
+        for key, cols in (("clusters", ["url", "entity_id"]),
+                          ("scored", ["id_l", "id_r", "score"])):
+            got = fingerprint(staged[key], cols)
+            assert got == fingerprint(mem[key], cols), key
+            assert got[0] > 0, key
+    finally:
+        mem["release"]()
 
 
 def test_pipeline_collapse_recrawls_flag(spark):
