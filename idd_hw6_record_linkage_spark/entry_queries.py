@@ -349,13 +349,7 @@ SQL_RL_TOP_BLOCKS = (
 
 def rl_candidate_pairs(spark, sf_dir):
     keys = blocking.key_table(_docs(spark, sf_dir), "doc_id", _block_key(), "b1")
-    left = keys.select(F.col("id").alias("id_l"), "block_key")
-    right = keys.select(F.col("id").alias("id_r"), "block_key")
-    return (
-        left.join(right, "block_key")
-        .where(F.col("id_l") < F.col("id_r"))
-        .select("id_l", "id_r", "block_key")
-    )
+    return blocking.self_pair_join(keys, "id").select("id_l", "id_r", "block_key")
 
 
 SQL_RL_CANDIDATE_PAIRS = f"""
@@ -376,13 +370,14 @@ Feature semantics shared with the oracle:
 """
 
 
-def rl_pair_features(spark, sf_dir):
-    # token arrays hashed to int64: the pair join ships ~3x fewer
-    # bytes and set Jaccard is hash-invariant, so the oracle (which
-    # compares OUTPUT values, computed over string tokens in DuckDB)
-    # still matches value-exactly.
-    _warm_python_workers(spark)
-    docs = _stage(_docs(spark, sf_dir).select(
+def _pair_feature_docs(spark, sf_dir):
+    """The staged comparator basis of rl_pair_features, the match rules
+    and the cross-source scorer: 40-char prefix, distinct token set,
+    n_chars, block key. Token arrays are hashed to int64: the pair join
+    ships ~3x fewer bytes and set Jaccard is hash-invariant, so the
+    oracle (which compares OUTPUT values, computed over string tokens
+    in DuckDB) still matches value-exactly."""
+    return _stage(_docs(spark, sf_dir).select(
         "doc_id",
         F.substring("text", 1, 40).alias("t40"),
         F.array_distinct(
@@ -393,15 +388,13 @@ def rl_pair_features(spark, sf_dir):
         F.col("n_chars").cast("double").alias("nc"),
         _block_key().alias("block_key"),
     ))
-    l = docs.select(  # noqa: E741
-        F.col("doc_id").alias("id_l"), F.col("t40").alias("t40_l"),
-        F.col("toks").alias("toks_l"), F.col("nc").alias("nc_l"), "block_key",
-    )
-    r = docs.select(
-        F.col("doc_id").alias("id_r"), F.col("t40").alias("t40_r"),
-        F.col("toks").alias("toks_r"), F.col("nc").alias("nc_r"), "block_key",
-    )
-    pairs = l.join(r, "block_key").where(F.col("id_l") < F.col("id_r"))
+
+
+_PAIR_FEATURE_COLS = ("t40", "toks", "nc")
+
+
+def _pair_feature_sims():
+    """(lev, jac, gauss) over a pair join of :func:`_pair_feature_docs`."""
     lev = F.when(
         F.greatest(F.length("t40_l"), F.length("t40_r")) == 0, F.lit(1.0)
     ).otherwise(
@@ -413,6 +406,14 @@ def rl_pair_features(spark, sf_dir):
         F.array_union("toks_l", "toks_r")
     ).cast("double")
     gauss = F.pow(F.lit(2.0), -F.pow((F.col("nc_l") - F.col("nc_r")) / 100.0, 2))
+    return lev, jac, gauss
+
+
+def rl_pair_features(spark, sf_dir):
+    _warm_python_workers(spark)
+    docs = _pair_feature_docs(spark, sf_dir)
+    pairs = blocking.self_pair_join(docs, "doc_id", _PAIR_FEATURE_COLS)
+    lev, jac, gauss = _pair_feature_sims()
     out = pairs.select(
         "id_l",
         "id_r",
@@ -557,17 +558,10 @@ def rl_pair_token_sims(spark, sf_dir):
         ).alias("toks"),
         _block_key().alias("block_key"),
     ))
-    l = docs.select(  # noqa: E741
-        F.col("doc_id").alias("id_l"), F.col("toks").alias("toks_l"), "block_key"
-    )
-    r = docs.select(
-        F.col("doc_id").alias("id_r"), F.col("toks").alias("toks_r"), "block_key"
-    )
     inter = F.size(F.array_intersect("toks_l", "toks_r")).cast("double")
     nl, nr = F.size("toks_l"), F.size("toks_r")
     return (
-        l.join(r, "block_key")
-        .where(F.col("id_l") < F.col("id_r"))
+        blocking.self_pair_join(docs, "doc_id", ["toks"])
         .select(
             "id_l",
             "id_r",
@@ -629,15 +623,7 @@ def rl_qgram_cosine(spark, sf_dir):
         ).alias("qkey"),
         _block_key().alias("block_key"),
     ))
-    pairs = (
-        docs.select(F.col("doc_id").alias("id_l"), "block_key")
-        .join(
-            docs.select(F.col("doc_id").alias("id_r"), "block_key"),
-            "block_key",
-        )
-        .where(F.col("id_l") < F.col("id_r"))
-        .select("id_l", "id_r")
-    )
+    pairs = blocking.self_pair_join(docs, "doc_id").select("id_l", "id_r")
     return qgram_cosine_for_pairs(docs, pairs, "doc_id", "qkey", q=3)
 
 
@@ -703,15 +689,7 @@ def rl_weighted_jaccard(spark, sf_dir):
         _block_key().alias("block_key"),
     ))
     n_docs = docs.count()
-    pairs = (
-        docs.select(F.col("doc_id").alias("id_l"), "block_key")
-        .join(
-            docs.select(F.col("doc_id").alias("id_r"), "block_key"),
-            "block_key",
-        )
-        .where(F.col("id_l") < F.col("id_r"))
-        .select("id_l", "id_r")
-    )
+    pairs = blocking.self_pair_join(docs, "doc_id").select("id_l", "id_r")
     return weighted_jaccard_for_pairs(
         docs, pairs, "doc_id", "s", n_docs=n_docs
     ).select("id_l", "id_r", "w_jaccard")
@@ -843,15 +821,8 @@ def rl_jaro_duck(spark, sf_dir):
         F.coalesce(s, F.lit("")).alias("s"),
         _block_key().alias("block_key"),
     ))
-    l = docs.select(  # noqa: E741
-        F.col("doc_id").alias("id_l"), F.col("s").alias("s_l"), "block_key"
-    )
-    r = docs.select(
-        F.col("doc_id").alias("id_r"), F.col("s").alias("s_r"), "block_key"
-    )
     return (
-        l.join(r, "block_key")
-        .where(F.col("id_l") < F.col("id_r"))
+        blocking.self_pair_join(docs, "doc_id", ["s"])
         .select(
             "id_l",
             "id_r",
@@ -911,16 +882,9 @@ def rl_nw_unit(spark, sf_dir):
         F.coalesce(s, F.lit("")).alias("s"),
         _block_key().alias("block_key"),
     ))
-    l = docs.select(  # noqa: E741
-        F.col("doc_id").alias("id_l"), F.col("s").alias("s_l"), "block_key"
-    )
-    r = docs.select(
-        F.col("doc_id").alias("id_r"), F.col("s").alias("s_r"), "block_key"
-    )
     denom = F.greatest(F.length("s_l"), F.length("s_r"), F.lit(1))
     return (
-        l.join(r, "block_key")
-        .where(F.col("id_l") < F.col("id_r"))
+        blocking.self_pair_join(docs, "doc_id", ["s"])
         .withColumn("nw_dist", nw_unit_distance("s_l", "s_r"))
         .select(
             "id_l",
@@ -979,19 +943,12 @@ def rl_bag_distance(spark, sf_dir):
         F.coalesce(s, F.lit("")).alias("s"),
         _block_key().alias("block_key"),
     ))
-    l = docs.select(  # noqa: E741
-        F.col("doc_id").alias("id_l"), F.col("s").alias("s_l"), "block_key"
-    )
-    r = docs.select(
-        F.col("doc_id").alias("id_r"), F.col("s").alias("s_r"), "block_key"
-    )
     denom = F.greatest(F.length("s_l"), F.length("s_r"), F.lit(1))
     # The fixed-alphabet codegen form is exact here because the basis
     # is regex-sanitized to [a-z0-9 ] (see bag.py — pytest-pinned
     # equal to the generic HOF form on in-alphabet strings).
     return (
-        l.join(r, "block_key")
-        .where(F.col("id_l") < F.col("id_r"))
+        blocking.self_pair_join(docs, "doc_id", ["s"])
         .withColumn(
             "bag_dist",
             bag_distance_fixed_alphabet(
@@ -1079,16 +1036,9 @@ def rl_lcs(spark, sf_dir):
         F.coalesce(s, F.lit("")).alias("s"),
         _block_key().alias("block_key"),
     ))
-    l = docs.select(  # noqa: E741
-        F.col("doc_id").alias("id_l"), F.col("s").alias("s_l"), "block_key"
-    )
-    r = docs.select(
-        F.col("doc_id").alias("id_r"), F.col("s").alias("s_r"), "block_key"
-    )
     denom = F.greatest(F.length("s_l"), F.length("s_r"), F.lit(1))
     return (
-        l.join(r, "block_key")
-        .where(F.col("id_l") < F.col("id_r"))
+        blocking.self_pair_join(docs, "doc_id", ["s"])
         .withColumn("lcs_len", lcs_len("s_l", "s_r"))
         .select(
             "id_l",
@@ -1165,15 +1115,8 @@ def rl_sw_unit(spark, sf_dir):
         F.coalesce(s, F.lit("")).alias("s"),
         _block_key().alias("block_key"),
     ))
-    l = docs.select(  # noqa: E741
-        F.col("doc_id").alias("id_l"), F.col("s").alias("s_l"), "block_key"
-    )
-    r = docs.select(
-        F.col("doc_id").alias("id_r"), F.col("s").alias("s_r"), "block_key"
-    )
     return (
-        l.join(r, "block_key")
-        .where(F.col("id_l") < F.col("id_r"))
+        blocking.self_pair_join(docs, "doc_id", ["s"])
         .select(
             "id_l",
             "id_r",
@@ -1249,15 +1192,8 @@ def rl_editex_unit(spark, sf_dir):
         F.coalesce(s, F.lit("")).alias("s"),
         _block_key().alias("block_key"),
     ))
-    l = docs.select(  # noqa: E741
-        F.col("doc_id").alias("id_l"), F.col("s").alias("s_l"), "block_key"
-    )
-    r = docs.select(
-        F.col("doc_id").alias("id_r"), F.col("s").alias("s_r"), "block_key"
-    )
     return (
-        l.join(r, "block_key")
-        .where(F.col("id_l") < F.col("id_r"))
+        blocking.self_pair_join(docs, "doc_id", ["s"])
         .select(
             "id_l",
             "id_r",
@@ -1306,15 +1242,8 @@ def rl_editex_gate(spark, sf_dir):
         F.coalesce(s, F.lit("")).alias("s"),
         _block_key().alias("block_key"),
     ))
-    l = docs.select(  # noqa: E741
-        F.col("doc_id").alias("id_l"), F.col("s").alias("s_l"), "block_key"
-    )
-    r = docs.select(
-        F.col("doc_id").alias("id_r"), F.col("s").alias("s_r"), "block_key"
-    )
     pairs = (
-        l.join(r, "block_key")
-        .where(F.col("id_l") < F.col("id_r"))
+        blocking.self_pair_join(docs, "doc_id", ["s"])
         .select(
             "s_l",
             "s_r",
@@ -1898,26 +1827,32 @@ FROM f
 """
 
 
-def rl_eval_metrics(spark, sf_dir):
-    """A5: P/R/F1 of the match edges against a deterministic 'truth'
-    (same source, |n_chars diff| <= 10) via semi/anti joins.
-
-    The truth here is a per-source self-join — quadratic in the
-    largest source, acceptable ONLY for the fixed-size contract
-    tables. It exists to exercise the semi/anti evaluation operators
-    against a DuckDB oracle, not as a truth-builder; production truth
-    comes from labeled pairs (ground_truth.py) or the generator's
-    entity ids (expected_clusters)."""
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "n_chars")
-    l = docs.withColumnsRenamed(  # noqa: E741
+def _source_truth(spark, sf_dir):
+    """The synthetic truth of the evaluation queries: (id_l, id_r) doc
+    pairs of one source with |n_chars diff| <= 10. A per-source
+    self-join — quadratic in the largest source, acceptable ONLY for
+    the fixed-size contract tables. It exists to exercise the
+    evaluation operators against a DuckDB oracle, not as a
+    truth-builder; production truth comes from labeled pairs
+    (ground_truth.py) or the generator's entity ids
+    (expected_clusters)."""
+    d = _docs(spark, sf_dir).select("doc_id", "source", "n_chars")
+    l = d.withColumnsRenamed(  # noqa: E741
         {"doc_id": "id_l", "source": "s_l", "n_chars": "n_l"}
     )
-    r = docs.withColumnsRenamed({"doc_id": "id_r", "source": "s_r", "n_chars": "n_r"})
-    truth = (
+    r = d.withColumnsRenamed({"doc_id": "id_r", "source": "s_r", "n_chars": "n_r"})
+    return (
         l.join(r, (F.col("s_l") == F.col("s_r")) & (F.col("id_l") < F.col("id_r")))
         .where(F.abs(F.col("n_l") - F.col("n_r")) <= 10)
         .select("id_l", "id_r")
     )
+
+
+def rl_eval_metrics(spark, sf_dir):
+    """A5: P/R/F1 of the match edges against a deterministic 'truth'
+    (same source, |n_chars diff| <= 10, :func:`_source_truth`) via
+    semi/anti joins."""
+    truth = _source_truth(spark, sf_dir)
     preds = rl_match_edges(spark, sf_dir).select("id_l", "id_r")
     tp = preds.join(truth, ["id_l", "id_r"], "leftsemi").count()
     fp = preds.join(truth, ["id_l", "id_r"], "leftanti").count()
@@ -2160,16 +2095,7 @@ def rl_blocking_scheme_eval(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     total = docs.count()
-    d = docs.select("doc_id", "source", "n_chars")
-    l = d.withColumnsRenamed(  # noqa: E741
-        {"doc_id": "id_l", "source": "s_l", "n_chars": "n_l"}
-    )
-    r = d.withColumnsRenamed({"doc_id": "id_r", "source": "s_r", "n_chars": "n_r"})
-    truth = (
-        l.join(r, (F.col("s_l") == F.col("s_r")) & (F.col("id_l") < F.col("id_r")))
-        .where(F.abs(F.col("n_l") - F.col("n_r")) <= 10)
-        .select("id_l", "id_r")
-    )
+    truth = _source_truth(spark, sf_dir)
     b2 = rl_candidate_pairs(spark, sf_dir).select("id_l", "id_r")
     sn = SN.sorted_neighborhood_pairs(
         docs.select(
@@ -2400,16 +2326,7 @@ def rl_score_auc(spark, sf_dir):
     from pyspark.sql.window import Window
 
     scored = rl_pair_features(spark, sf_dir).select("id_l", "id_r", "score")
-    d = _docs(spark, sf_dir).select("doc_id", "source", "n_chars")
-    l = d.withColumnsRenamed(  # noqa: E741
-        {"doc_id": "id_l", "source": "s_l", "n_chars": "n_l"}
-    )
-    r = d.withColumnsRenamed({"doc_id": "id_r", "source": "s_r", "n_chars": "n_r"})
-    truth = (
-        l.join(r, (F.col("s_l") == F.col("s_r")) & (F.col("id_l") < F.col("id_r")))
-        .where(F.abs(F.col("n_l") - F.col("n_r")) <= 10)
-        .select("id_l", "id_r")
-    )
+    truth = _source_truth(spark, sf_dir)
     flagged = scored.join(truth.withColumn("__t", F.lit(1)), ["id_l", "id_r"], "left")
     is_true = F.coalesce(F.col("__t"), F.lit(0))
     by_score = flagged.groupBy("score").agg(
@@ -2578,16 +2495,7 @@ def rl_threshold_sweep(spark, sf_dir):
     )
 
     scored = rl_pair_features(spark, sf_dir).select("id_l", "id_r", "score")
-    d = _docs(spark, sf_dir).select("doc_id", "source", "n_chars")
-    l = d.withColumnsRenamed(  # noqa: E741
-        {"doc_id": "id_l", "source": "s_l", "n_chars": "n_l"}
-    )
-    r = d.withColumnsRenamed({"doc_id": "id_r", "source": "s_r", "n_chars": "n_r"})
-    truth = (
-        l.join(r, (F.col("s_l") == F.col("s_r")) & (F.col("id_l") < F.col("id_r")))
-        .where(F.abs(F.col("n_l") - F.col("n_r")) <= 10)
-        .select("id_l", "id_r")
-    )
+    truth = _source_truth(spark, sf_dir)
     return threshold_sweep(
         scored, truth, [0.3, 0.4, 0.5, 0.6, 0.7, 0.8]
     )
@@ -2849,26 +2757,13 @@ def rl_mra(spark, sf_dir):
         tok.alias("tok"),
         mra_codex(tok).alias("mra"),
     ))
-    l = parts.select(  # noqa: E741
-        F.col("p_partkey").alias("id_l"),
-        F.col("tok").alias("tok_l"),
-        F.col("mra").alias("mra_l"),
-        "brand",
-        "psize",
-    )
-    r = parts.select(
-        F.col("p_partkey").alias("id_r"),
-        F.col("tok").alias("tok_r"),
-        F.col("mra").alias("mra_r"),
-        "brand",
-        "psize",
-    )
     rating = mra_rating("mra_l", "mra_r")
     minr = mra_min_rating("mra_l", "mra_r")
     cmp_ok = mra_comparable("mra_l", "mra_r")
     return (
-        l.join(r, ["brand", "psize"])
-        .where(F.col("id_l") < F.col("id_r"))
+        blocking.self_pair_join(
+            parts, "p_partkey", ["tok", "mra"], on=["brand", "psize"]
+        )
         .select(
             "id_l",
             "id_r",
@@ -3349,15 +3244,8 @@ def rl_monge_elkan(spark, sf_dir):
         F.slice(F.split(F.trim("text"), r"\s+"), 1, 6).alias("toks"),
         _block_key().alias("block_key"),
     ))
-    l = docs.select(  # noqa: E741
-        F.col("doc_id").alias("id_l"), F.col("toks").alias("toks_l"), "block_key"
-    )
-    r = docs.select(
-        F.col("doc_id").alias("id_r"), F.col("toks").alias("toks_r"), "block_key"
-    )
     return (
-        l.join(r, "block_key")
-        .where(F.col("id_l") < F.col("id_r"))
+        blocking.self_pair_join(docs, "doc_id", ["toks"])
         .select(
             "id_l",
             "id_r",
@@ -3415,18 +3303,11 @@ def rl_damerau(spark, sf_dir):
     docs = _stage(_docs(spark, sf_dir).select(
         "doc_id", s.alias("s"), _block_key().alias("block_key")
     ))
-    l = docs.select(  # noqa: E741
-        F.col("doc_id").alias("id_l"), F.col("s").alias("s_l"), "block_key"
-    )
-    r = docs.select(
-        F.col("doc_id").alias("id_r"), F.col("s").alias("s_r"), "block_key"
-    )
     denom = F.greatest(
         F.octet_length("s_l"), F.octet_length("s_r"), F.lit(1)
     )
     return (
-        l.join(r, "block_key")
-        .where(F.col("id_l") < F.col("id_r"))
+        blocking.self_pair_join(docs, "doc_id", ["s"])
         .withColumn("dl_dist", damerau_distance("s_l", "s_r"))
         .select(
             "id_l",
@@ -3845,16 +3726,7 @@ def rl_score_ap(spark, sf_dir):
     )
 
     scored = rl_pair_features(spark, sf_dir).select("id_l", "id_r", "score")
-    d = _docs(spark, sf_dir).select("doc_id", "source", "n_chars")
-    l = d.withColumnsRenamed(  # noqa: E741
-        {"doc_id": "id_l", "source": "s_l", "n_chars": "n_l"}
-    )
-    r = d.withColumnsRenamed({"doc_id": "id_r", "source": "s_r", "n_chars": "n_r"})
-    truth = (
-        l.join(r, (F.col("s_l") == F.col("s_r")) & (F.col("id_l") < F.col("id_r")))
-        .where(F.abs(F.col("n_l") - F.col("n_r")) <= 10)
-        .select("id_l", "id_r")
-    )
+    truth = _source_truth(spark, sf_dir)
     return average_precision(scored, truth)
 
 
@@ -3957,22 +3829,12 @@ def rl_soft_tfidf(spark, sf_dir):
     n_docs = docs.count()
     w = doc_token_weights(docs, "doc_id", "toks", n_docs=n_docs)
     base = docs.join(w, "doc_id")
-    l = base.select(  # noqa: E741
-        F.col("doc_id").alias("id_l"), F.col("wtoks").alias("wa"), "block_key"
-    )
-    r = base.select(
-        F.col("doc_id").alias("id_r"), F.col("wtoks").alias("wb"), "block_key"
-    )
-    return (
-        l.join(r, "block_key")
-        .where(F.col("id_l") < F.col("id_r"))
-        .select(
-            "id_l",
-            "id_r",
-            F.round(soft_tfidf("wa", "wb", threshold=0.8), 6).alias(
-                "soft_tfidf"
-            ),
-        )
+    return blocking.self_pair_join(base, "doc_id", ["wtoks"]).select(
+        "id_l",
+        "id_r",
+        F.round(soft_tfidf("wtoks_l", "wtoks_r", threshold=0.8), 6).alias(
+            "soft_tfidf"
+        ),
     )
 
 
@@ -4091,15 +3953,8 @@ def rl_sw_gate(spark, sf_dir):
         F.lower(F.substring(F.coalesce("text", F.lit("")), 1, 40)).alias("snip"),
         _block_key().alias("block_key"),
     ))
-    l = docs.select(  # noqa: E741
-        F.col("doc_id").alias("id_l"), F.col("snip").alias("snip_l"), "block_key"
-    )
-    r = docs.select(
-        F.col("doc_id").alias("id_r"), F.col("snip").alias("snip_r"), "block_key"
-    )
     pairs = (
-        l.join(r, "block_key")
-        .where(F.col("id_l") < F.col("id_r"))
+        blocking.self_pair_join(docs, "doc_id", ["snip"])
         .select(
             "snip_l",
             "snip_r",
@@ -4204,13 +4059,7 @@ def pair_tfidf_cosine(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     keys = blocking.key_table(docs, "doc_id", _block_key(), "b1")
-    left = keys.select(F.col("id").alias("id_l"), "block_key")
-    right = keys.select(F.col("id").alias("id_r"), "block_key")
-    pairs = (
-        left.join(right, "block_key")
-        .where(F.col("id_l") < F.col("id_r"))
-        .select("id_l", "id_r")
-    )
+    pairs = blocking.self_pair_join(keys, "id").select("id_l", "id_r")
     out = tfidf_cosine_for_pairs(docs, pairs, id_col="doc_id", text_col="text")
     return out.select(
         "id_l", "id_r", F.round("tfidf_cosine", 6).alias("tfidf_cosine")
@@ -4269,37 +4118,11 @@ def _cross_source_scored(spark, sf_dir, l_filter=None, r_filter=None):
         l_filter = F.col("doc_id") % 3 == 0
     if r_filter is None:
         r_filter = F.col("doc_id") % 3 != 0
-    docs = _stage(_docs(spark, sf_dir).select(
-        "doc_id",
-        F.substring("text", 1, 40).alias("t40"),
-        F.array_distinct(
-            F.transform(
-                F.split(F.trim("text"), r"\s+"), lambda t: F.xxhash64(t)
-            )
-        ).alias("toks"),
-        F.col("n_chars").cast("double").alias("nc"),
-        _block_key().alias("block_key"),
-    )).where(F.col("block_key").isNotNull())
-    l = docs.where(l_filter).select(  # noqa: E741
-        F.col("doc_id").alias("id_l"), F.col("t40").alias("t40_l"),
-        F.col("toks").alias("toks_l"), F.col("nc").alias("nc_l"), "block_key",
+    docs = _pair_feature_docs(spark, sf_dir).where(F.col("block_key").isNotNull())
+    pairs = blocking.cross_pair_join(
+        docs.where(l_filter), docs.where(r_filter), "doc_id", _PAIR_FEATURE_COLS
     )
-    r = docs.where(r_filter).select(
-        F.col("doc_id").alias("id_r"), F.col("t40").alias("t40_r"),
-        F.col("toks").alias("toks_r"), F.col("nc").alias("nc_r"), "block_key",
-    )
-    pairs = l.join(r, "block_key")
-    lev = F.when(
-        F.greatest(F.length("t40_l"), F.length("t40_r")) == 0, F.lit(1.0)
-    ).otherwise(
-        1.0
-        - F.levenshtein("t40_l", "t40_r")
-        / F.greatest(F.length("t40_l"), F.length("t40_r")).cast("double")
-    )
-    jac = F.size(F.array_intersect("toks_l", "toks_r")) / F.size(
-        F.array_union("toks_l", "toks_r")
-    ).cast("double")
-    gauss = F.pow(F.lit(2.0), -F.pow((F.col("nc_l") - F.col("nc_r")) / 100.0, 2))
+    lev, jac, gauss = _pair_feature_sims()
     score = F.round((lev + jac + gauss) / 3.0, 6)
     return pairs.select("id_l", "id_r", score.alias("score"))
 
@@ -6663,29 +6486,9 @@ def _match_rule_pairs(spark, sf_dir):
         apply_match_rules,
     )
 
-    docs = _stage(_docs(spark, sf_dir).select(
-        "doc_id",
-        F.substring("text", 1, 40).alias("t40"),
-        F.array_distinct(
-            F.transform(
-                F.split(F.trim("text"), r"\s+"), lambda t: F.xxhash64(t)
-            )
-        ).alias("toks"),
-        F.col("n_chars").cast("double").alias("nc"),
-        _block_key().alias("block_key"),
-    ))
-    l = docs.select(  # noqa: E741
-        F.col("doc_id").alias("id_l"), F.col("t40").alias("t40_l"),
-        F.col("toks").alias("toks_l"), F.col("nc").alias("nc_l"), "block_key",
-    )
-    r = docs.select(
-        F.col("doc_id").alias("id_r"), F.col("t40").alias("t40_r"),
-        F.col("toks").alias("toks_r"), F.col("nc").alias("nc_r"), "block_key",
-    )
-    pairs = l.join(r, "block_key").where(F.col("id_l") < F.col("id_r"))
-    jac = F.size(F.array_intersect("toks_l", "toks_r")) / F.size(
-        F.array_union("toks_l", "toks_r")
-    ).cast("double")
+    docs = _pair_feature_docs(spark, sf_dir)
+    pairs = blocking.self_pair_join(docs, "doc_id", _PAIR_FEATURE_COLS)
+    _, jac, _ = _pair_feature_sims()
     rules = [
         ("exact_prefix", F.col("t40_l") == F.col("t40_r")),
         ("tight_edit", F.levenshtein("t40_l", "t40_r") <= 20),

@@ -3,9 +3,10 @@
 The reference builds ``dict {block_key: [row indices]}`` in Python
 loops and takes within-key Cartesian products (blocking_B1.py:79-89,
 130-154). Here a blocking pass is a ``(record_id, block_key)``
-DataFrame and candidate generation is an equi-join on ``block_key`` —
-the within-block Cartesian product is exactly the join output, and
-Spark executes it shuffle-partitioned with AQE skew splitting.
+DataFrame and candidate generation is an equi-join on ``block_key``
+(:func:`self_pair_join` / :func:`cross_pair_join`, the one pair join
+every blocked comparator uses) — the within-block Cartesian product is
+exactly the join output, shuffle-partitioned with AQE skew splitting.
 
 Skew controls (SURVEY §4 — absent in the reference, mandatory at web
 scale where mega-domains create hot keys):
@@ -19,6 +20,7 @@ scale where mega-domains create hot keys):
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
@@ -39,11 +41,8 @@ def key_table(df: DataFrame, id_col: str, key_expr: Column, pass_name: str,
     if salt_basis is not None:
         cols.append(salt_basis.alias("salt_basis"))
     cols.extend(F.col(c) for c in (extra_cols or []))
-    return (
-        df.select(*cols)
-        .where(F.col("block_key").isNotNull())
-        .withColumn("pass", F.lit(pass_name))
-    )
+    keys = df.select(*cols).where(F.col("block_key").isNotNull())
+    return keys.withColumn("pass", F.lit(pass_name))
 
 
 def _oversized(sizes: DataFrame, threshold: int, target: int | None = None) -> DataFrame:
@@ -147,32 +146,38 @@ def cap_blocks_pair(
     return tuple(_cap_blocks([keys_l, keys_r], max_block_size, salt_col))
 
 
+def _pair_side(df: DataFrame, id_col: str, cols, on, sfx: str) -> DataFrame:
+    """``id{sfx}``, ``{c}{sfx}`` per carried column, then the key(s)."""
+    return df.select(F.col(id_col).alias("id" + sfx),
+                     *(F.col(c).alias(c + sfx) for c in cols), *on)
+
+
+def cross_pair_join(left: DataFrame, right: DataFrame, id_col: str,
+                    cols: Sequence[str] = (),
+                    on: str | list[str] = "block_key") -> DataFrame:
+    """Equi-join on ``on`` (a column or a list) → ``on``, ``id_l, {c}_l…, id_r,
+    {c}_r…``: NULL keys never match, one row per shared key, no id order."""
+    on = [on] if isinstance(on, str) else list(on)
+    return _pair_side(left, id_col, cols, on, "_l").join(
+        _pair_side(right, id_col, cols, on, "_r"), on)
+
+
+def self_pair_join(df: DataFrame, id_col: str, cols: Sequence[str] = (),
+                   on: str | list[str] = "block_key") -> DataFrame:
+    """Within-block pairs (J3 in SURVEY §2.4): :func:`cross_pair_join`
+    of ``df`` with itself in canonical order id_l < id_r."""
+    return cross_pair_join(df, df, id_col, cols, on).where(F.col("id_l") < F.col("id_r"))
+
+
 def candidate_pairs_self(keys: DataFrame) -> DataFrame:
     """Self-linkage candidates: within-block pairs, canonical order
     id_l < id_r, deduped across blocks/passes (J3+J4 in SURVEY §2.4)."""
-    left = keys.select(F.col("id").alias("id_l"), "block_key")
-    right = keys.select(F.col("id").alias("id_r"), "block_key")
-    pairs = left.join(right, "block_key").where(F.col("id_l") < F.col("id_r"))
-    return pairs.select("id_l", "id_r").dropDuplicates(["id_l", "id_r"])
+    return self_pair_join(keys, "id").select("id_l", "id_r").dropDuplicates()
 
 
 def candidate_pairs_cross(keys_l: DataFrame, keys_r: DataFrame) -> DataFrame:
     """Two-source candidates (reference main case: Craigslist × US)."""
-    left = keys_l.select(F.col("id").alias("id_l"), "block_key")
-    right = keys_r.select(F.col("id").alias("id_r"), "block_key")
-    return (
-        left.join(right, "block_key")
-        .select("id_l", "id_r")
-        .dropDuplicates(["id_l", "id_r"])
-    )
-
-
-def union_pairs(*pair_dfs: DataFrame) -> DataFrame:
-    """J4: union of blocking passes, set semantics."""
-    out = pair_dfs[0]
-    for p in pair_dfs[1:]:
-        out = out.unionByName(p)
-    return out.dropDuplicates(["id_l", "id_r"])
+    return cross_pair_join(keys_l, keys_r, "id").select("id_l", "id_r").dropDuplicates()
 
 
 # --- statistics (A2-A4 in SURVEY §2.5) --------------------------------------
@@ -210,13 +215,7 @@ def block_size_stats(keys: DataFrame) -> DataFrame:
 
 def reduction_ratio(keys: DataFrame, total_records: int) -> float:
     """A3: 1 - within-block pairs / all pairs (blocking_B1.py:119-127)."""
-    row = (
-        keys.groupBy("block_key")
-        .agg(F.count("*").alias("s"))
-        .agg(F.sum(F.expr("s * (s - 1) / 2")).alias("cand"))
-        .collect()[0]
-    )
-    cand = float(row["cand"] or 0.0)
+    cand = block_size_stats(keys).first()["candidate_pairs"]
     total = total_records * (total_records - 1) / 2
     return 1.0 - cand / total if total > 0 else 0.0
 

@@ -150,7 +150,7 @@ def lsh_key_table(
     """(id, block_key, pass='lsh'[, *extra_cols]) rows — one per
     (record, band).
 
-    Feed into blocking.candidate_pairs_self / union_pairs like any
+    Feed into blocking.candidate_pairs_self like any
     other blocking pass; empty/short texts still emit a degenerate
     shingle so they can only collide with identical texts.
     ``extra_cols`` pass through verbatim (see blocking.key_table) —

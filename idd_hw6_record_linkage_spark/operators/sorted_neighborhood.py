@@ -4,7 +4,7 @@ blocking key and emit every pair within a sliding window of ``w``
 positions. Catches near-misses that hash/equality blocking drops
 (typo in the block key → different block → pair lost) at a bounded
 candidate cost of ~w·n pairs. Classic practice runs several passes
-with different keys and unions the pairs (`blocking.union_pairs`).
+with different keys and unions the pairs (`unionByName` + `dropDuplicates`).
 
 Scale shape — the global sort position is NOT a single unpartitioned
 window (that serializes the corpus through one task, the same trap

@@ -1,5 +1,5 @@
-"""TF-IDF cosine (C7) vs a direct numpy computation; multimodal stub
-plumbing; streaming ingest parity with the batch plan."""
+"""TF-IDF cosine (C7) vs a direct numpy computation; streaming ingest
+parity with the batch plan."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from idd_hw6_record_linkage_spark.operators.tfidf import tfidf_cosine_for_pairs
-from idd_hw6_record_linkage_spark.operators import multimodal as MM
 
 
 def _ref_tfidf_cosine(corpus: dict, id_l, id_r):
@@ -56,48 +55,6 @@ def test_tfidf_cosine_pairs(spark):
         assert v == pytest.approx(expect, abs=1e-9), (l, r)
     assert got[("a", "b")] > 0.5
     assert got[("c", "d")] == 0.0
-
-
-def test_media_meta_and_decode(spark):
-    rows = [
-        ("p1", b"\x89PNG\r\n\x1a\nrest-of-png"),
-        ("p2", b"\xff\xd8\xff\xe0jpegdata"),
-        ("p3", b"plain bytes"),
-        ("p4", None),
-    ]
-    df = spark.createDataFrame(rows, "id string, payload binary")
-    meta = {
-        r["id"]: (r["media_bytes"], r["media_format"])
-        for r in df.select("id", *MM.media_meta_exprs("payload")).collect()
-    }
-    assert meta["p1"][1] == "png" and meta["p2"][1] == "jpeg"
-    assert meta["p3"][1] == "unknown"
-    assert meta["p4"] == (None, None)
-
-    feats = MM.decode_image_features(df, "id", "payload", feature_dim=8)
-    got = {r["id"]: r for r in feats.collect()}
-    assert set(got) == {"p1", "p2", "p3", "p4"}
-    assert len(got["p1"]["features"]) == 8
-    assert got["p4"]["width"] == 0 and got["p4"]["features"] == [0.0] * 8
-    # deterministic across recomputation
-    again = {r["id"]: r["features"] for r in MM.decode_image_features(
-        df, "id", "payload", feature_dim=8).collect()}
-    assert again["p1"] == got["p1"]["features"]
-
-    frames = MM.sample_media_frames(df, "id", "payload", n_frames=3)
-    per = frames.groupBy("id").count().collect()
-    assert {r["id"]: r["count"] for r in per} == {"p1": 3, "p2": 3, "p3": 3}
-
-
-def test_real_decode_gated(spark):
-    df = spark.createDataFrame([("x", b"abc")], "id string, payload binary")
-    try:
-        import PIL  # noqa: F401
-        pytest.skip("Pillow present; stub gate not applicable")
-    except ImportError:
-        pass
-    with pytest.raises(NotImplementedError, match="Pillow"):
-        MM.decode_image_features(df, "id", "payload", fake_features=False)
 
 
 def test_streaming_ingest_matches_batch(spark, tmp_path):
