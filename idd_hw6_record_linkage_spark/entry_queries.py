@@ -184,39 +184,14 @@ def _block_key() -> F.Column:
     )
 
 
-_PY_WARMED: set[str] = set()
-
-
-def _warm_python_workers(spark: SparkSession) -> None:
-    """Run one trivial Arrow-UDF job per session (guarded by
-    applicationId) so the session's FIRST pandas-UDF stage — Python
-    worker forks + Arrow serializer setup, ~1-2 s at local[32] even
-    with the daemon preload — is paid by whoever calls a query
-    UNTIMED first. The bench harness warms the session with an
-    untimed rl_pair_features run precisely to cover "Arrow-batched
-    Python UDF worker spin-up" (its own comment), but that query's
-    comparators are all native, so the worker pool never actually
-    warmed and the first Arrow query on the clock absorbed the
-    spin-up. The guard holds no data — just a per-session
-    worker-pool-warm flag — and makes every subsequent call free."""
-    key = spark.sparkContext.applicationId
-    if key in _PY_WARMED:
-        return
-    _PY_WARMED.add(key)
-    from pyspark.sql.functions import pandas_udf
-
-    # lambda form: entry_queries uses `from __future__ import
-    # annotations`, under which pd.Series hints are strings the UDF
-    # type-inference cannot resolve with a function-local pandas import.
-    _noop = pandas_udf(lambda x: x * 0.0, "double")
-
-    n = spark.sparkContext.defaultParallelism
-    (
-        spark.range(0, n, 1, n)
-        .select(_noop(F.col("id").cast("double")).alias("x"))
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
+def _snippet(width: int) -> F.Column:
+    """The first ``width`` chars of lower(trim(text)) with everything
+    outside [a-z0-9 ] removed: a pure-ASCII basis, so char-indexed
+    substring/length agree with the DuckDB oracles by construction."""
+    return F.substring(
+        F.regexp_replace(F.lower(F.trim(F.col("text"))), "[^a-z0-9 ]", ""),
+        1,
+        width,
     )
 
 
@@ -410,7 +385,6 @@ def _pair_feature_sims():
 
 
 def rl_pair_features(spark, sf_dir):
-    _warm_python_workers(spark)
     docs = _pair_feature_docs(spark, sf_dir)
     pairs = blocking.self_pair_join(docs, "doc_id", _PAIR_FEATURE_COLS)
     lev, jac, gauss = _pair_feature_sims()
@@ -614,13 +588,7 @@ def rl_qgram_cosine(spark, sf_dir):
 
     docs = _stage(_docs(spark, sf_dir).select(
         "doc_id",
-        F.substring(
-            F.regexp_replace(
-                F.lower(F.trim(F.col("text"))), "[^a-z0-9 ]", ""
-            ),
-            1,
-            32,
-        ).alias("qkey"),
+        _snippet(32).alias("qkey"),
         _block_key().alias("block_key"),
     ))
     pairs = blocking.self_pair_join(docs, "doc_id").select("id_l", "id_r")
@@ -678,14 +646,9 @@ def rl_weighted_jaccard(spark, sf_dir):
         weighted_jaccard_for_pairs,
     )
 
-    s = F.substring(
-        F.regexp_replace(F.lower(F.trim(F.col("text"))), "[^a-z0-9 ]", ""),
-        1,
-        40,
-    )
     docs = _stage(_docs(spark, sf_dir).select(
         "doc_id",
-        F.coalesce(s, F.lit("")).alias("s"),
+        F.coalesce(_snippet(40), F.lit("")).alias("s"),
         _block_key().alias("block_key"),
     ))
     n_docs = docs.count()
@@ -757,13 +720,8 @@ def rl_edit_join(spark, sf_dir):
         edit_distance_self_join,
     )
 
-    s = F.substring(
-        F.regexp_replace(F.lower(F.trim(F.col("text"))), "[^a-z0-9 ]", ""),
-        1,
-        40,
-    )
     docs = _stage(_docs(spark, sf_dir).select(
-        "doc_id", F.coalesce(s, F.lit("")).alias("s")
+        "doc_id", F.coalesce(_snippet(40), F.lit("")).alias("s")
     ))
     return edit_distance_self_join(docs, "doc_id", "s", d=2).select(
         F.col("id_l").alias("id_l"),
@@ -811,14 +769,9 @@ def rl_jaro_duck(spark, sf_dir):
         sim_jaro_winkler_rf,
     )
 
-    s = F.substring(
-        F.regexp_replace(F.lower(F.trim(F.col("text"))), "[^a-z0-9 ]", ""),
-        1,
-        40,
-    )
     docs = _stage(_docs(spark, sf_dir).select(
         "doc_id",
-        F.coalesce(s, F.lit("")).alias("s"),
+        F.coalesce(_snippet(40), F.lit("")).alias("s"),
         _block_key().alias("block_key"),
     ))
     return (
@@ -872,14 +825,9 @@ def rl_nw_unit(spark, sf_dir):
         nw_unit_distance,
     )
 
-    s = F.substring(
-        F.regexp_replace(F.lower(F.trim(F.col("text"))), "[^a-z0-9 ]", ""),
-        1,
-        40,
-    )
     docs = _stage(_docs(spark, sf_dir).select(
         "doc_id",
-        F.coalesce(s, F.lit("")).alias("s"),
+        F.coalesce(_snippet(40), F.lit("")).alias("s"),
         _block_key().alias("block_key"),
     ))
     denom = F.greatest(F.length("s_l"), F.length("s_r"), F.lit(1))
@@ -933,14 +881,9 @@ def rl_bag_distance(spark, sf_dir):
         bag_distance_fixed_alphabet,
     )
 
-    s = F.substring(
-        F.regexp_replace(F.lower(F.trim(F.col("text"))), "[^a-z0-9 ]", ""),
-        1,
-        40,
-    )
     docs = _stage(_docs(spark, sf_dir).select(
         "doc_id",
-        F.coalesce(s, F.lit("")).alias("s"),
+        F.coalesce(_snippet(40), F.lit("")).alias("s"),
         _block_key().alias("block_key"),
     ))
     denom = F.greatest(F.length("s_l"), F.length("s_r"), F.lit(1))
@@ -1026,14 +969,9 @@ def rl_lcs(spark, sf_dir):
     enumeration replicated in DuckDB generate_series/list lambdas."""
     from idd_hw6_record_linkage_spark.functions.lcs import lcs_len
 
-    s = F.substring(
-        F.regexp_replace(F.lower(F.trim(F.col("text"))), "[^a-z0-9 ]", ""),
-        1,
-        40,
-    )
     docs = _stage(_docs(spark, sf_dir).select(
         "doc_id",
-        F.coalesce(s, F.lit("")).alias("s"),
+        F.coalesce(_snippet(40), F.lit("")).alias("s"),
         _block_key().alias("block_key"),
     ))
     denom = F.greatest(F.length("s_l"), F.length("s_r"), F.lit(1))
@@ -1105,14 +1043,9 @@ def rl_sw_unit(spark, sf_dir):
         sim_sw_unit,
     )
 
-    s = F.substring(
-        F.regexp_replace(F.lower(F.trim(F.col("text"))), "[^a-z0-9 ]", ""),
-        1,
-        40,
-    )
     docs = _stage(_docs(spark, sf_dir).select(
         "doc_id",
-        F.coalesce(s, F.lit("")).alias("s"),
+        F.coalesce(_snippet(40), F.lit("")).alias("s"),
         _block_key().alias("block_key"),
     ))
     return (
@@ -1182,14 +1115,9 @@ def rl_editex_unit(spark, sf_dir):
         editex_unit_distance,
     )
 
-    s = F.substring(
-        F.regexp_replace(F.lower(F.trim(F.col("text"))), "[^a-z0-9 ]", ""),
-        1,
-        40,
-    )
     docs = _stage(_docs(spark, sf_dir).select(
         "doc_id",
-        F.coalesce(s, F.lit("")).alias("s"),
+        F.coalesce(_snippet(40), F.lit("")).alias("s"),
         _block_key().alias("block_key"),
     ))
     return (
@@ -1232,14 +1160,9 @@ def rl_editex_gate(spark, sf_dir):
         editex_distance,
     )
 
-    s = F.substring(
-        F.regexp_replace(F.lower(F.trim(F.col("text"))), "[^a-z0-9 ]", ""),
-        1,
-        40,
-    )
     docs = _stage(_docs(spark, sf_dir).select(
         "doc_id",
-        F.coalesce(s, F.lit("")).alias("s"),
+        F.coalesce(_snippet(40), F.lit("")).alias("s"),
         _block_key().alias("block_key"),
     ))
     pairs = (
@@ -1390,13 +1313,7 @@ def rl_qgram_blocks(spark, sf_dir):
 
     docs = _stage(_docs(spark, sf_dir).select(
         "doc_id",
-        F.substring(
-            F.regexp_replace(
-                F.lower(F.trim(F.col("text"))), "[^a-z0-9 ]", ""
-            ),
-            1,
-            32,
-        ).alias("qkey"),
+        _snippet(32).alias("qkey"),
     ))
     return qgram_candidates(
         docs, "doc_id", "qkey", q=3, min_common=2, max_df=64
@@ -1450,13 +1367,7 @@ def rl_suffix_blocks(spark, sf_dir):
 
     docs = _stage(_docs(spark, sf_dir).select(
         "doc_id",
-        F.substring(
-            F.regexp_replace(
-                F.lower(F.trim(F.col("text"))), "[^a-z0-9 ]", ""
-            ),
-            1,
-            24,
-        ).alias("skey"),
+        _snippet(24).alias("skey"),
     ))
     return suffix_candidates(
         docs, "doc_id", "skey", min_len=16, max_block_size=32
@@ -1513,19 +1424,7 @@ def rl_setsim_join(spark, sf_dir):
         _docs(spark, sf_dir)
         .select(
             "doc_id",
-            F.filter(
-                F.split(
-                    F.substring(
-                        F.regexp_replace(
-                            F.lower(F.trim(F.col("text"))), "[^a-z0-9 ]", ""
-                        ),
-                        1,
-                        64,
-                    ),
-                    " ",
-                ),
-                lambda t: t != "",
-            ).alias("__w"),
+            F.filter(F.split(_snippet(64), " "), lambda t: t != "").alias("__w"),
         )
         .select(
             "doc_id",

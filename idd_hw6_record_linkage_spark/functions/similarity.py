@@ -389,30 +389,9 @@ def jaro_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
     return pd.Series(out, dtype="float64")
 
 
-try:  # optional fast path: C-implemented JW when rapidfuzz is present.
-    # Corner-case parity caveat (SURVEY §7 risk 5): rapidfuzz's prefix
-    # scaling differs from jellyfish in rare cases, so it is opt-in via
-    # SPARK_LINKAGE_FAST_JW=1; the pure-Python implementation is the
-    # parity default.
-    import os as _os
-
-    if _os.environ.get("SPARK_LINKAGE_FAST_JW") == "1":
-        from rapidfuzz.distance.JaroWinkler import similarity as _fast_jw
-    else:  # pragma: no cover - env-dependent
-        _fast_jw = None
-except ImportError:  # pragma: no cover - env-dependent
-    _fast_jw = None
-
-
 @pandas_udf(DoubleType())
 def jaro_winkler_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
     """C1 Jaro-Winkler similarity over an Arrow batch; missing → 0.0."""
-    if _fast_jw is not None:  # pragma: no cover - env-dependent opt-in
-        out = [
-            0.0 if (a is None or b is None) else _fast_jw(a, b)
-            for a, b in zip(s1.tolist(), s2.tolist())
-        ]
-        return pd.Series(out, dtype="float64")
     out = _jaro_batch(s1.tolist(), s2.tolist(), winkler=True)
     return pd.Series(out, dtype="float64")
 

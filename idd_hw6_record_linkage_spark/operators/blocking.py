@@ -7,6 +7,9 @@ DataFrame and candidate generation is an equi-join on ``block_key``
 (:func:`self_pair_join` / :func:`cross_pair_join`, the one pair join
 every blocked comparator uses) — the within-block Cartesian product is
 exactly the join output, shuffle-partitioned with AQE skew splitting.
+Pair attributes come back by id through :func:`attach_pair_attributes`,
+so this module alone knows the pair layout ``id_l, {c}_l…, id_r,
+{c}_r…``.
 
 Skew controls (SURVEY §4 — absent in the reference, mandatory at web
 scale where mega-domains create hot keys):
@@ -167,6 +170,20 @@ def self_pair_join(df: DataFrame, id_col: str, cols: Sequence[str] = (),
     """Within-block pairs (J3 in SURVEY §2.4): :func:`cross_pair_join`
     of ``df`` with itself in canonical order id_l < id_r."""
     return cross_pair_join(df, df, id_col, cols, on).where(F.col("id_l") < F.col("id_r"))
+
+
+def attach_pair_attributes(pairs: DataFrame, records: DataFrame,
+                           cols: Sequence[str], id_col: str = "url",
+                           records_r: DataFrame | None = None,
+                           how: str = "inner") -> DataFrame:
+    """pairs(id_l, id_r, …) ⋈ records twice (J5 lookup join in SURVEY
+    §2.4) → the pair rows plus ``{c}_l…`` then ``{c}_r…``: left ids
+    resolve against ``records``, right ids against ``records_r``
+    (default ``records``). ``how="inner"`` drops a pair whose id has no
+    record row; ``how="left"`` keeps it with NULL attributes."""
+    left = _pair_side(records, id_col, cols, (), "_l")
+    right = _pair_side(records if records_r is None else records_r, id_col, cols, (), "_r")
+    return pairs.join(left, "id_l", how).join(right, "id_r", how)
 
 
 def candidate_pairs_self(keys: DataFrame) -> DataFrame:

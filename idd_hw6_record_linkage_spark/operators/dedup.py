@@ -155,13 +155,8 @@ def ngram_jaccard_pairs(
     df = _nonblank(df, text_col)
     keys = blocking.key_table(df, id_col, block_key, "ngram")
     pairs = blocking.candidate_pairs_self(keys)
-    attrs = df.select(
-        F.col(id_col).alias("id"), hashed_shingles(text_col, n).alias("sh")
-    )
-    enriched = (
-        pairs.join(attrs.withColumnsRenamed({"id": "id_l", "sh": "sh_l"}), "id_l")
-        .join(attrs.withColumnsRenamed({"id": "id_r", "sh": "sh_r"}), "id_r")
-    )
+    attrs = df.select(id_col, hashed_shingles(text_col, n).alias("sh"))
+    enriched = blocking.attach_pair_attributes(pairs, attrs, ["sh"], id_col)
     return (
         enriched.withColumn("jaccard", _array_jaccard(F.col("sh_l"), F.col("sh_r")))
         .where(F.col("jaccard") >= threshold)
@@ -217,14 +212,8 @@ def minhash_dedup_pairs(
     if max_block_size is not None:
         keys = blocking.cap_blocks(keys, max_block_size, salt_col="salt_basis")
     pairs = blocking.candidate_pairs_self(keys)
-    attrs = df.select(
-        F.col(id_col).alias("id"),
-        hashed_shingles(text_col, shingle_n).alias("sh"),
-    )
-    enriched = (
-        pairs.join(attrs.withColumnsRenamed({"id": "id_l", "sh": "sh_l"}), "id_l")
-        .join(attrs.withColumnsRenamed({"id": "id_r", "sh": "sh_r"}), "id_r")
-    )
+    attrs = df.select(id_col, hashed_shingles(text_col, shingle_n).alias("sh"))
+    enriched = blocking.attach_pair_attributes(pairs, attrs, ["sh"], id_col)
     return (
         enriched.withColumn("jaccard", _array_jaccard(F.col("sh_l"), F.col("sh_r")))
         .where(F.col("jaccard") >= threshold)
@@ -345,12 +334,9 @@ def simhash_dedup_pairs(
     are GC-released (a persist() would leak a CacheManager entry)."""
     sim = simhash_table(df, id_col, text_col).localCheckpoint(eager=True)
     pairs = simhash_candidate_pairs(sim, max_block_size=max_block_size)
-    s_l = sim.withColumnsRenamed({"id": "id_l", "simhash": "sh_l"})
-    s_r = sim.withColumnsRenamed({"id": "id_r", "simhash": "sh_r"})
     return (
-        pairs.join(s_l, "id_l")
-        .join(s_r, "id_r")
-        .withColumn("hamming", hamming64_expr("sh_l", "sh_r"))
+        blocking.attach_pair_attributes(pairs, sim, ["simhash"], "id")
+        .withColumn("hamming", hamming64_expr("simhash_l", "simhash_r"))
         .where(F.col("hamming") <= max_hamming)
         .select("id_l", "id_r", "hamming")
     )
@@ -430,11 +416,9 @@ def embedding_dup_pairs_lsh(
         keys = keys.localCheckpoint(eager=True)
         keys = blocking.cap_blocks(keys, max_block_size, salt_col="salt_basis")
     pairs = blocking.candidate_pairs_self(keys)
-    a = df.select(F.col(id_col).alias("id_l"), F.col(vec_col).alias("v_l"))
-    b = df.select(F.col(id_col).alias("id_r"), F.col(vec_col).alias("v_r"))
+    vecs = df.select(id_col, F.col(vec_col).alias("v"))
     return (
-        pairs.join(a, "id_l")
-        .join(b, "id_r")
+        blocking.attach_pair_attributes(pairs, vecs, ["v"], id_col)
         .withColumn("cosine", sim_cosine_arrays("v_l", "v_r"))
         .where(F.col("cosine") >= threshold)
         .select("id_l", "id_r", "cosine")

@@ -13,6 +13,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from idd_hw6_record_linkage_spark.operators import blocking
+
 
 @dataclass(frozen=True)
 class PRF1:
@@ -53,12 +55,8 @@ def cluster_implied_pairs(clusters: DataFrame) -> DataFrame:
     """clusters(url, entity_id) → all within-cluster pairs (url_l <
     url_r). Self-join on entity_id; cluster sizes are bounded by the
     block cap upstream so the quadratic stays local."""
-    left = clusters.select(F.col("entity_id"), F.col("url").alias("id_l"))
-    right = clusters.select(F.col("entity_id"), F.col("url").alias("id_r"))
-    return (
-        left.join(right, "entity_id")
-        .where(F.col("id_l") < F.col("id_r"))
-        .select("id_l", "id_r")
+    return blocking.self_pair_join(clusters, "url", on="entity_id").select(
+        "id_l", "id_r"
     )
 
 
@@ -161,18 +159,14 @@ def impossible_match_rate(
     rule says cannot be the same entity (the reference audits
     |year_l - year_r| > 1). Join + one aggregation; returns a single
     row (n_matches, n_impossible, impossible_rate)."""
-    a_l = attrs.select(
-        F.col(id_col).alias("id_l"), F.col(attr_col).alias("_attr_l")
-    )
-    a_r = attrs.select(
-        F.col(id_col).alias("id_r"), F.col(attr_col).alias("_attr_r")
-    )
     gap_exceeded = (
         F.abs(F.col("_attr_l") - F.col("_attr_r")) > F.lit(float(max_gap))
     ).cast("long")
+    # attr_col is renamed so its _l/_r names cannot collide with the
+    # columns ``matches`` already carries.
+    attrs = attrs.select(id_col, F.col(attr_col).alias("_attr"))
     return (
-        matches.join(a_l, "id_l")
-        .join(a_r, "id_r")
+        blocking.attach_pair_attributes(matches, attrs, ["_attr"], id_col)
         .agg(
             F.count("*").cast("long").alias("n_matches"),
             F.sum(gap_exceeded).cast("long").alias("n_impossible"),

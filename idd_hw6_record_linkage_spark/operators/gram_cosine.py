@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from idd_hw6_record_linkage_spark.operators import blocking
+
 
 def qgram_counts(
     records: DataFrame, id_col: str, key_col: str, q: int = 3
@@ -84,12 +86,11 @@ def qgram_cosine_for_pairs(
         .groupBy("id_l", "id_r")
         .agg(F.sum(F.col("cnt_l") * F.col("cnt_r")).alias("dot"))
     )
-    n_l = norm2.withColumnsRenamed({"id": "id_l", "norm2": "norm2_l"})
-    n_r = norm2.withColumnsRenamed({"id": "id_r", "norm2": "norm2_r"})
     return (
-        pairs.join(dots, ["id_l", "id_r"], "left")
-        .join(n_l, "id_l", "left")
-        .join(n_r, "id_r", "left")
+        blocking.attach_pair_attributes(
+            pairs.join(dots, ["id_l", "id_r"], "left"), norm2, ["norm2"], "id",
+            how="left",
+        )
         .withColumn(
             out_col,
             F.when(

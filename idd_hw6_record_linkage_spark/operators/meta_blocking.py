@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from idd_hw6_record_linkage_spark.operators import blocking
+
 __all__ = [
     "token_blocking",
     "purge_blocks",
@@ -151,11 +153,8 @@ def blocking_graph(keys: DataFrame, scheme: str = "cbs") -> DataFrame:
     """
     if scheme not in ("cbs", "js"):
         raise ValueError(f"unknown weight scheme: {scheme!r}")
-    l = keys.select(F.col("id").alias("id_l"), "block_key")  # noqa: E741
-    r = keys.select(F.col("id").alias("id_r"), "block_key")
     common = (
-        l.join(r, "block_key")
-        .where(F.col("id_l") < F.col("id_r"))
+        blocking.self_pair_join(keys, "id")
         .groupBy("id_l", "id_r")
         .agg(F.count("*").cast("long").alias("__common"))
     )
@@ -165,10 +164,7 @@ def blocking_graph(keys: DataFrame, scheme: str = "cbs") -> DataFrame:
         )
     per = keys.groupBy("id").agg(F.count("*").cast("long").alias("__nb"))
     return (
-        common.join(per.withColumnsRenamed({"id": "id_l", "__nb": "__nb_l"}),
-                    "id_l")
-        .join(per.withColumnsRenamed({"id": "id_r", "__nb": "__nb_r"}),
-              "id_r")
+        blocking.attach_pair_attributes(common, per, ["__nb"], "id")
         .select(
             "id_l",
             "id_r",

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from idd_hw6_record_linkage_spark.operators import blocking
+
 
 def _grams(d: DataFrame, q: int) -> DataFrame:
     """id + one row per DISTINCT q-gram of column __s (pre-trimmed)."""
@@ -85,20 +87,14 @@ def qgram_candidates(
         )
     keys = keys.localCheckpoint(eager=True)
     ng = keys.groupBy("id").agg(F.count(F.lit(1)).alias("n_g"))
-    l = keys.select(F.col("id").alias("id_l"), "gram")  # noqa: E741
-    r = keys.select(F.col("id").alias("id_r"), "gram")
     pairs = (
-        l.join(r, "gram")
-        .where(F.col("id_l") < F.col("id_r"))
+        blocking.self_pair_join(keys, "id", on="gram")
         .groupBy("id_l", "id_r")
         .agg(F.count(F.lit(1)).alias("n_common"))
         .where(F.col("n_common") >= min_common)
     )
-    nl = ng.select(F.col("id").alias("id_l"), F.col("n_g").alias("n_g_l"))
-    nr = ng.select(F.col("id").alias("id_r"), F.col("n_g").alias("n_g_r"))
     return (
-        pairs.join(nl, "id_l")
-        .join(nr, "id_r")
+        blocking.attach_pair_attributes(pairs, ng, ["n_g"], "id")
         .select(
             "id_l",
             "id_r",

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from idd_hw6_record_linkage_spark.functions import similarity as S
+from idd_hw6_record_linkage_spark.operators.blocking import attach_pair_attributes
 
 
 @dataclass(frozen=True)
@@ -143,22 +144,6 @@ REF_CONFIGS = {"P1_textual_core": REF_P1, "P2_plus_location": REF_P2,
                "P3_minimal_fast": REF_P3}
 
 
-def attach_pair_attributes(
-    pairs: DataFrame, records: DataFrame, cols: list[str], id_col: str = "url"
-) -> DataFrame:
-    """pairs(id_l, id_r) ⋈ records twice → one row per pair with
-    `<col>_l` / `<col>_r` attribute columns (J5 lookup join, SURVEY
-    §2.4 — two shuffle joins on the record id; Catalyst prunes
-    `records` to `cols` only)."""
-    left = records.select(
-        F.col(id_col).alias("id_l"), *[F.col(c).alias(f"{c}_l") for c in cols]
-    )
-    right = records.select(
-        F.col(id_col).alias("id_r"), *[F.col(c).alias(f"{c}_r") for c in cols]
-    )
-    return pairs.join(left, "id_l").join(right, "id_r")
-
-
 def compute_features(
     pairs: DataFrame, records: DataFrame, config: ComparatorConfig, id_col: str = "url"
 ) -> DataFrame:
@@ -177,13 +162,7 @@ def compute_features_two(
     record tables, record_linkage.py:457-459): left ids resolve against
     records_l, right against records_r."""
     cols = sorted({c.col for c in config.comparators})
-    left = records_l.select(
-        F.col(id_col).alias("id_l"), *[F.col(c).alias(f"{c}_l") for c in cols]
-    )
-    right = records_r.select(
-        F.col(id_col).alias("id_r"), *[F.col(c).alias(f"{c}_r") for c in cols]
-    )
-    enriched = pairs.join(left, "id_l").join(right, "id_r")
+    enriched = attach_pair_attributes(pairs, records_l, cols, id_col, records_r)
     return compute_features_enriched(enriched, config)
 
 

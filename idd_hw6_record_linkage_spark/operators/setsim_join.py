@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from idd_hw6_record_linkage_spark.operators import blocking
+
 
 def jaccard_setsim_join(
     df: DataFrame,
@@ -129,22 +131,7 @@ def jaccard_setsim_join(
         / (threshold_num + threshold_den)
     )
     cand = (
-        pref.select(
-            F.col("id").alias("id_l"),
-            F.col("n").alias("n_l"),
-            F.col("rn").alias("rn_l"),
-            "token",
-        )
-        .join(
-            pref.select(
-                F.col("id").alias("id_r"),
-                F.col("n").alias("n_r"),
-                F.col("rn").alias("rn_r"),
-                "token",
-            ),
-            "token",
-        )
-        .where(F.col("id_l") < F.col("id_r"))
+        blocking.self_pair_join(pref, "id", ["n", "rn"], on="token")
         .groupBy("id_l", "id_r")
         .agg(
             F.first("n_l").alias("n_l"),
@@ -169,19 +156,10 @@ def jaccard_setsim_join(
         )
         .drop("p_l", "p_r")
     )
-    lhs = ordered.select(
-        F.col("id").alias("id_l"),
-        F.col("toks").alias("toks_l"),
-    )
-    rhs = ordered.select(
-        F.col("id").alias("id_r"),
-        F.col("toks").alias("toks_r"),
-    )
     inter = F.size(F.array_intersect("toks_l", "toks_r"))
     union = F.col("n_l") + F.col("n_r") - F.col("n_common")
     return (
-        cand.join(lhs, "id_l")
-        .join(rhs, "id_r")
+        blocking.attach_pair_attributes(cand, ordered, ["toks"], "id")
         .withColumn("n_common", inter.cast("long"))
         .withColumn("n_union", union.cast("long"))
         .where(

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from idd_hw6_record_linkage_spark.operators import blocking
+
 
 def suffix_keys(
     df: DataFrame, id_col: str, key_col: str, min_len: int = 5
@@ -87,11 +89,8 @@ def suffix_candidates(
             "suffix",
         )
     keys = keys.localCheckpoint(eager=True)
-    l = keys.select(F.col("id").alias("id_l"), "suffix")  # noqa: E741
-    r = keys.select(F.col("id").alias("id_r"), "suffix")
     return (
-        l.join(r, "suffix")
-        .where(F.col("id_l") < F.col("id_r"))
+        blocking.self_pair_join(keys, "id", on="suffix")
         .groupBy("id_l", "id_r")
         .agg(
             F.count(F.lit(1)).alias("n_common"),

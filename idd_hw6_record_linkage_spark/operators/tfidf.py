@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from idd_hw6_record_linkage_spark.operators import blocking
+
 
 def token_weights(
     records: DataFrame, id_col: str, text_col: str
@@ -68,12 +70,11 @@ def tfidf_cosine_for_pairs(
         .groupBy("id_l", "id_r")
         .agg(F.sum(F.col("w_l") * F.col("w_r")).alias("dot"))
     )
-    n_l = norms.withColumnsRenamed({"id": "id_l", "norm": "norm_l"})
-    n_r = norms.withColumnsRenamed({"id": "id_r", "norm": "norm_r"})
     return (
-        pairs.join(dots, ["id_l", "id_r"], "left")
-        .join(n_l, "id_l", "left")
-        .join(n_r, "id_r", "left")
+        blocking.attach_pair_attributes(
+            pairs.join(dots, ["id_l", "id_r"], "left"), norms, ["norm"], "id",
+            how="left",
+        )
         .withColumn(
             out_col,
             F.when(

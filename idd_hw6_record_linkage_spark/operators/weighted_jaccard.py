@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from idd_hw6_record_linkage_spark.operators import blocking
+
 _SCALE = 1_000_000
 
 
@@ -111,17 +113,16 @@ def weighted_jaccard_for_pairs(
         .agg(F.sum("w").alias("inter_w"))
     )
 
-    s_l = sums.withColumnsRenamed({"id": "id_l", "wsum": "wsum_l"})
-    s_r = sums.withColumnsRenamed({"id": "id_r", "wsum": "wsum_r"})
     union_w = (
         F.coalesce("wsum_l", F.lit(0))
         + F.coalesce("wsum_r", F.lit(0))
         - F.coalesce("inter_w", F.lit(0))
     )
     return (
-        pairs.join(inter, ["id_l", "id_r"], "left")
-        .join(s_l, "id_l", "left")
-        .join(s_r, "id_r", "left")
+        blocking.attach_pair_attributes(
+            pairs.join(inter, ["id_l", "id_r"], "left"), sums, ["wsum"], "id",
+            how="left",
+        )
         .withColumn(
             out_col,
             F.when(

@@ -84,26 +84,32 @@ def run_reference_pipeline(
     """
     cfg = scoring.REF_CONFIGS[comparison_config]
     train_pairs, train_feats = _candidates_and_features(
-        train_l.persist(), train_r.persist(), cfg, blocking_strategy, id_col
+        train_l, train_r, cfg, blocking_strategy, id_col
     )
     test_pairs, test_feats = _candidates_and_features(
-        test_l.persist(), test_r.persist(), cfg, blocking_strategy, id_col
+        test_l, test_r, cfg, blocking_strategy, id_col
     )
-    n_candidates = test_pairs.count()
-    pc = blocking.pairs_completeness(test_pairs, truth_test)
+    # Release this run's caches even when the LR fit raises (no labeled
+    # pair survives blocking); the caller's input tables are not cached.
+    try:
+        n_candidates = test_pairs.count()
+        pc = blocking.pairs_completeness(test_pairs, truth_test)
 
-    train_labels = (
-        train_pairs.join(
-            truth_train.withColumn("label", F.lit(1)), ["id_l", "id_r"], "left"
+        train_labels = (
+            train_pairs.join(
+                truth_train.withColumn("label", F.lit(1)), ["id_l", "id_r"], "left"
+            )
+            .select("id_l", "id_r", F.coalesce("label", F.lit(0)).alias("label"))
         )
-        .select("id_l", "id_r", F.coalesce("label", F.lit(0)).alias("label"))
-    )
-    assembler, model = scoring.fit_logistic_regression(
-        train_feats, train_labels, cfg
-    )
-    scored = scoring.predict_probability(test_feats, assembler, model)
-    matches, used = scoring.threshold_with_fallback(scored, threshold, fallback)
-    prf = precision_recall_f1(matches.select("id_l", "id_r"), truth_test)
+        assembler, model = scoring.fit_logistic_regression(
+            train_feats, train_labels, cfg
+        )
+        scored = scoring.predict_probability(test_feats, assembler, model)
+        matches, used = scoring.threshold_with_fallback(scored, threshold, fallback)
+        prf = precision_recall_f1(matches.select("id_l", "id_r"), truth_test)
+    finally:
+        for df in (train_pairs, train_feats, test_pairs, test_feats):
+            df.unpersist()
     return ReferenceResult(
         pipeline=comparison_config,
         blocking_strategy=blocking_strategy,

@@ -16,6 +16,8 @@ batch path.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -99,6 +101,35 @@ def build_key_index(records: DataFrame,
     return keys, big
 
 
+def _incremental_pairs(pages_stream: DataFrame, index_keys: DataFrame,
+                       oversized: DataFrame, cfg: PipelineConfig | None,
+                       watermark: str | None, cols: Sequence[str] = ()) -> DataFrame:
+    """The salted stream-static key join behind :func:`incremental_candidates`
+    and :func:`incremental_scored`: ``(id_l, {c}_l…, id_r)`` per new
+    (``id_l``) vs historical (``id_r``) pair sharing a key, deduped
+    across triggers on ``(id_l, id_r)`` — exactly, or within
+    ``watermark`` of the new record's ``warc_ts``."""
+    cfg = cfg or PipelineConfig(workdir="/tmp/_unused_stream")
+    wm = ["warc_ts"] if watermark is not None else []
+    skeys = block_keys_plan(normalize_plan(pages_stream), cfg,
+                            extra_cols=[*cols, *wm])
+    skeys = blocking._apply_salt(skeys, oversized, F.xxhash64("salt_basis"))
+    s = blocking._pair_side(skeys, "id", cols, ["block_key", *wm], "_l")
+    h = blocking._pair_side(index_keys, "id", (), ["block_key"], "_r")
+    pairs = (
+        s.join(h, "block_key")
+        .where(F.col("id_l") != F.col("id_r"))
+        .drop("block_key")
+    )
+    if watermark is not None:
+        return (
+            pairs.withWatermark("warc_ts", watermark)
+            .dropDuplicatesWithinWatermark(["id_l", "id_r"])
+            .drop("warc_ts")
+        )
+    return pairs.dropDuplicates(["id_l", "id_r"])
+
+
 def incremental_candidates(pages_stream: DataFrame,
                            index_keys: DataFrame,
                            oversized: DataFrame,
@@ -128,23 +159,8 @@ def incremental_candidates(pages_stream: DataFrame,
       horizon — downstream sinks treat (id_new, id_old) as the
       idempotency key). State is bounded by pairs-per-window instead
       of pairs-ever."""
-    cfg = cfg or PipelineConfig(workdir="/tmp/_unused_stream")
-    extra = ["warc_ts"] if watermark is not None else None
-    skeys = block_keys_plan(normalize_plan(pages_stream), cfg, extra_cols=extra)
-    skeys = blocking._apply_salt(skeys, oversized, F.xxhash64("salt_basis"))
-    s = skeys.select(
-        F.col("id").alias("id_new"), "block_key",
-        *(["warc_ts"] if watermark is not None else []),
-    )
-    h = index_keys.select(F.col("id").alias("id_old"), "block_key")
-    pairs = s.join(h, "block_key").where(F.col("id_new") != F.col("id_old"))
-    if watermark is not None:
-        return (
-            pairs.withWatermark("warc_ts", watermark)
-            .dropDuplicatesWithinWatermark(["id_new", "id_old"])
-            .select("id_new", "id_old")
-        )
-    return pairs.select("id_new", "id_old").dropDuplicates(["id_new", "id_old"])
+    pairs = _incremental_pairs(pages_stream, index_keys, oversized, cfg, watermark)
+    return pairs.select(F.col("id_l").alias("id_new"), F.col("id_r").alias("id_old"))
 
 
 def incremental_scored(pages_stream: DataFrame,
@@ -177,30 +193,11 @@ def incremental_scored(pages_stream: DataFrame,
     the horizon)."""
     cfg = cfg or PipelineConfig(workdir="/tmp/_unused_stream")
     cols = sorted({c.col for c in cfg.comparator_config.comparators})
-    extra = cols + (["warc_ts"] if watermark is not None else [])
-    new_rec = normalize_plan(pages_stream)
-    skeys = block_keys_plan(new_rec, cfg, extra_cols=extra)
-    skeys = blocking._apply_salt(skeys, oversized, F.xxhash64("salt_basis"))
-    s = skeys.select(
-        F.col("id").alias("id_l"), "block_key",
-        *[F.col(c).alias(f"{c}_l") for c in cols],
-        *(["warc_ts"] if watermark is not None else []),
-    )
-    h = index_keys.select(F.col("id").alias("id_r"), "block_key")
-    pairs = s.join(h, "block_key").where(F.col("id_l") != F.col("id_r"))
-    if watermark is not None:
-        pairs = (
-            pairs.withWatermark("warc_ts", watermark)
-            .dropDuplicatesWithinWatermark(["id_l", "id_r"])
-            .drop("warc_ts")
-        )
-    else:
-        pairs = pairs.dropDuplicates(["id_l", "id_r"])
-    hist = records.select(
-        F.col("url").alias("id_r"), *[F.col(c).alias(f"{c}_r") for c in cols]
-    )
-    enriched = pairs.join(hist, "id_r")
-    feats = scoring.compute_features_enriched(enriched, cfg.comparator_config)
+    pairs = _incremental_pairs(pages_stream, index_keys, oversized, cfg,
+                               watermark, cols)
+    hist = blocking._pair_side(records, "url", cols, (), "_r")
+    feats = scoring.compute_features_enriched(pairs.join(hist, "id_r"),
+                                              cfg.comparator_config)
     return scoring.score(feats, cfg.comparator_config)
 
 

@@ -132,6 +132,39 @@ def test_pair_join_builder(spark):
     assert got.columns == ["id_l", "id_r"]
     assert sorted(got.collect()) == sorted(ref.collect()) == [(1, 2), (1, 3), (2, 3)]
 
+    # lookup join: id 9 has no record row
+    recs = spark.createDataFrame(
+        [("u1", "a1", 10), ("u2", "a2", 20), ("u3", "a3", 30)],
+        "url string, title string, n int",
+    )
+    cand = spark.createDataFrame(
+        [("u1", "u2", 0.5), ("u1", "u9", 0.7), ("u9", "u3", 0.9)],
+        "id_l string, id_r string, s double",
+    )
+    inner = blocking.attach_pair_attributes(cand, recs, ["title", "n"])
+    assert inner.columns == ["id_r", "id_l", "s", "title_l", "n_l", "title_r", "n_r"]
+    assert [tuple(r) for r in inner.collect()] == [("u2", "u1", 0.5, "a1", 10, "a2", 20)]
+    left = blocking.attach_pair_attributes(cand, recs, ["title"], how="left")
+    assert sorted(
+        (r.id_l, r.id_r, r.title_l, r.title_r) for r in left.collect()
+    ) == [("u1", "u2", "a1", "a2"), ("u1", "u9", "a1", None), ("u9", "u3", None, "a3")]
+    # records_r: right ids resolve against the second table only
+    recs_r = spark.createDataFrame(
+        [("u2", "b2", 2), ("u9", "b9", 9)], "url string, title string, n int"
+    )
+    two = blocking.attach_pair_attributes(cand, recs, ["title"], records_r=recs_r)
+    assert sorted((r.id_l, r.id_r, r.title_l, r.title_r) for r in two.collect()) == [
+        ("u1", "u2", "a1", "b2"), ("u1", "u9", "a1", "b9"),
+    ]
+    # the hand-rolled join compute_features_two carried before the builder
+    cols = ["n", "title"]
+    lh = recs.select(F.col("url").alias("id_l"), *[F.col(c).alias(f"{c}_l") for c in cols])
+    rh = recs_r.select(F.col("url").alias("id_r"), *[F.col(c).alias(f"{c}_r") for c in cols])
+    ref = cand.join(lh, "id_l").join(rh, "id_r")
+    got = blocking.attach_pair_attributes(cand, recs, cols, "url", recs_r)
+    assert got.columns == ref.columns
+    assert sorted(got.collect()) == sorted(ref.collect())
+
 
 def test_minhash_dedup_hot_band_bounded_with_recall(spark):
     # 200 boilerplate docs (identical text => every band hot) + 10

@@ -97,3 +97,11 @@ def test_all_six_pipelines_rank(spark, car_data):
     combos = {(r.pipeline, r.blocking_strategy) for r in results}
     assert len(combos) == 6
     assert max(f1s) >= 0.95
+
+
+def test_run_releases_its_caches(spark, car_data):
+    spark.catalog.clearCache()
+    run_reference_pipeline(
+        *car_data, comparison_config="P3_minimal_fast", blocking_strategy="B1",
+    )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
