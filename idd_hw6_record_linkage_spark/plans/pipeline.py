@@ -439,6 +439,9 @@ class StagedPlan:
         self.spark = spark
         self.cfg = cfg
         self._fanout: list[DataFrame] = []
+        # Stages with a completion row for run_id: read from the metrics
+        # table on the first resumed stage, then kept current in memory.
+        self._done: set[str] | None = None
         os.makedirs(cfg.workdir, exist_ok=True)
 
     # --- stage plumbing ------------------------------------------------
@@ -476,9 +479,7 @@ class StagedPlan:
         returns extra metrics for the completion row, computed only
         when the stage is built."""
         path = self._stage_path(stage)
-        if self.cfg.resume and M.stage_completed(
-            self.spark, self.cfg.workdir, self.cfg.run_id, stage
-        ):
+        if self._completed(stage):
             return self._read_stage(path)
         try:
             self._write_stage(build(), path)
@@ -490,10 +491,23 @@ class StagedPlan:
         out = self._read_stage(path)
         if counts is not None:
             metrics.update(counts(out))
+        self._append(stage, out, **metrics)
+        return out
+
+    def _completed(self, stage: str) -> bool:
+        """Resume only: whether ``stage`` already completed for run_id."""
+        if not self.cfg.resume:
+            return False
+        if self._done is None:
+            self._done = M.completed_stages(self.cfg.workdir, self.cfg.run_id)
+        return stage in self._done
+
+    def _append(self, stage: str, out: DataFrame | None, **metrics) -> None:
         M.append_stage_metrics(
             self.spark, self.cfg.workdir, self.cfg.run_id, stage, out, **metrics
         )
-        return out
+        if self._done is not None:
+            self._done.add(stage)
 
     def _cache(self, df: DataFrame) -> DataFrame:
         """Persist a fan-out point of the stage being built; released
@@ -502,11 +516,10 @@ class StagedPlan:
         return df
 
     def _record(self, stage: str, counts) -> None:
-        """Completion-only metrics row (no stage table) from ``counts()``."""
-        M.append_stage_metrics(
-            self.spark, self.cfg.workdir, self.cfg.run_id, stage, None,
-            **counts(),
-        )
+        """Completion-only metrics row (no stage table) from ``counts()``,
+        unless a resumed run already holds one."""
+        if not self._completed(stage):
+            self._append(stage, None, **counts())
 
 
 class LinkagePipeline(StagedPlan):

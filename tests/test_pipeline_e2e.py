@@ -4,11 +4,19 @@ blocking PC/RR sanity, resumability, and generator determinism."""
 
 from __future__ import annotations
 
+import datetime as _dt
+import os
+
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from idd_hw6_record_linkage_spark.operators import blocking
-from idd_hw6_record_linkage_spark.plans.pipeline import LinkagePipeline, PipelineConfig
+from idd_hw6_record_linkage_spark.plans.pipeline import (
+    LinkagePipeline,
+    PipelineConfig,
+    StagedPlan,
+)
 from idd_hw6_record_linkage_spark.plans import metrics as M
 from idd_hw6_record_linkage_spark.sources import generator as G
 
@@ -95,6 +103,130 @@ def test_resume_skips_completed_stages(tmp_path, spark, raw):
     assert m2.count() == n_rows_1
     assert res2["clusters"].count() == 200
 
+
+def _cluster_fingerprint(df):
+    return df.agg(
+        F.count("*"), F.expr("bit_xor(xxhash64(url, entity_id))")
+    ).collect()[0]
+
+
+def _completion_counts(spark, workdir):
+    rows = (
+        M.read_metrics(spark, workdir)
+        .where(F.col("partition_id") == -1)
+        .groupBy("stage").count().collect()
+    )
+    return {r["stage"]: r["count"] for r in rows}
+
+
+def test_crashed_stage_leaves_durable_metrics_and_resumes(
+    tmp_path, spark, monkeypatch
+):
+    """A stage that raises leaves completion rows for the stages before
+    it and no half-written metrics part; the resumed run finishes with
+    a clean run's clusters and one completion row per stage."""
+    from idd_hw6_record_linkage_spark.operators import scoring
+
+    pages = G.generate_pages(spark, 80)
+    clean = LinkagePipeline(
+        spark, PipelineConfig(workdir=str(tmp_path / "clean"), run_id="c")
+    ).run(pages)
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("score failed")
+
+    wd = str(tmp_path / "crash")
+    monkeypatch.setattr(scoring, "score", boom)
+    with pytest.raises(RuntimeError, match="score failed"):
+        LinkagePipeline(spark, PipelineConfig(workdir=wd, run_id="c")).run(pages)
+    monkeypatch.undo()
+
+    assert _completion_counts(spark, wd) == {
+        "normalize": 1, "block_stats": 1, "pairs": 1,
+    }
+    assert not [
+        f for f in os.listdir(os.path.join(wd, "metrics"))
+        if f.startswith(("_", "."))
+    ]
+
+    resumed = LinkagePipeline(
+        spark, PipelineConfig(workdir=wd, run_id="c", resume=True)
+    ).run(pages)
+    assert _cluster_fingerprint(resumed["clusters"]) == _cluster_fingerprint(
+        clean["clusters"]
+    )
+    counts = _completion_counts(spark, wd)
+    assert set(counts) == {
+        "normalize", "block_stats", "pairs", "score", "edges", "cluster",
+    }
+    assert set(counts.values()) == {1}
+
+
+def test_metrics_table_reads_parts_from_spark_and_driver(tmp_path, spark):
+    """A workdir whose metrics table was appended by a Spark write
+    (INT96 timestamps, _SUCCESS) keeps reading and resuming after the
+    driver appends its own parts."""
+    from idd_hw6_record_linkage_spark.schema import METRICS_SCHEMA
+
+    wd = str(tmp_path / "mixed")
+    spark_rows = [
+        ("m", "normalize", 0, None, 7, None, None, None,
+         _dt.datetime(2026, 1, 2, 3, 4, 5)),
+        ("m", "normalize", -1, None, 7, None, None, None,
+         _dt.datetime(2026, 1, 2, 3, 4, 5)),
+    ]
+    spark.createDataFrame(spark_rows, METRICS_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(os.path.join(wd, "metrics"))
+    M.append_stage_metrics(spark, wd, "m", "block_stats", None,
+                           rows_in=7, pair_count=4, match_count=1)
+
+    m = M.read_metrics(spark, wd)
+    assert [(f.name, f.dataType) for f in m.schema] == [
+        (f.name, f.dataType) for f in METRICS_SCHEMA
+    ]
+    got = sorted((r["stage"], r["partition_id"], r["rows_in"], r["rows_out"])
+                 for r in m.collect())
+    assert got == [("block_stats", -1, 7, None), ("normalize", -1, None, 7),
+                   ("normalize", 0, None, 7)]
+    assert M.completed_stages(wd, "other") == set()
+    plan = StagedPlan(spark, PipelineConfig(workdir=wd, run_id="m", resume=True))
+    assert plan._completed("normalize") and plan._completed("block_stats")
+    # a resumed run does not file a second completion row
+    plan._record("block_stats", lambda: pytest.fail("recounted a done stage"))
+    assert M.read_metrics(spark, wd).count() == 3
+
+
+def test_metrics_append_runs_no_spark_job(tmp_path, spark):
+    """A completion-only append is written by the driver: no Spark job,
+    and its completed_at is the instant of the call."""
+    sc = spark.sparkContext
+    wd = str(tmp_path / "nojob")
+    group = "metrics-append-no-job"
+    before = _dt.datetime.now(_dt.timezone.utc).timestamp()
+    sc.setJobGroup(group, "completion-only metrics append")
+    try:
+        M.append_stage_metrics(spark, wd, "j", "block_stats", None,
+                               rows_in=3, pair_count=2, match_count=1)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    after = _dt.datetime.now(_dt.timezone.utc).timestamp()
+    assert jobs == []
+    (row,) = M.read_metrics(spark, wd).collect()
+    assert (row["stage"], row["partition_id"]) == ("block_stats", -1)
+    assert before <= row["completed_at"].timestamp() <= after
+
+
+def test_completed_stages_raises_on_broken_metrics_table(tmp_path):
+    """Only a missing metrics table means nothing completed; one that
+    cannot be read fails the resume instead of re-running every stage."""
+    wd = tmp_path / "broken"
+    assert M.completed_stages(str(wd), "b") == set()
+    (wd / "metrics").mkdir(parents=True)
+    (wd / "metrics" / "part-0.parquet").write_bytes(b"not parquet")
+    with pytest.raises(pa.ArrowInvalid):
+        M.completed_stages(str(wd), "b")
 
 def test_pipeline_lr_scorer_f1(tmp_path, spark, raw):
     """M1/M2 wired into the flagship lifecycle (the reference trains
