@@ -172,6 +172,20 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _scan(spark, sf_dir, "embeddings")
 
 
+def _text_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact-text truth groups for the cluster metrics: (url, truth_id)
+    with truth_id = md5(text); a NULL-text doc is its own singleton."""
+    return _docs(spark, sf_dir).select(
+        F.col("doc_id").cast("string").alias("url"),
+        F.when(
+            F.col("text").isNull(),
+            F.concat(F.lit("null:"), F.col("doc_id").cast("string")),
+        )
+        .otherwise(F.md5("text"))
+        .alias("truth_id"),
+    )
+
+
 def _block_key() -> F.Column:
     """source normalized per blocking_B2 normalize_string + '_' + lang;
     NULL when either part is NULL (explicit guard on BOTH the Spark and
@@ -3049,16 +3063,7 @@ def rl_cluster_blanc(spark, sf_dir):
     identical IEEE division shapes."""
     from idd_hw6_record_linkage_spark.operators.evaluation import blanc
 
-    pred = rl_clusters(spark, sf_dir)
-    truth = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.when(
-            F.col("text").isNull(),
-            F.concat(F.lit("null:"), F.col("doc_id").cast("string")),
-        )
-        .otherwise(F.md5("text"))
-        .alias("truth_id"),
-    )
+    pred, truth = rl_clusters(spark, sf_dir), _text_truth(spark, sf_dir)
     return blanc(pred, truth)
 
 
@@ -3245,16 +3250,7 @@ def rl_bcubed_eval(spark, sf_dir):
     biggest clusters dominate quadratically."""
     from idd_hw6_record_linkage_spark.operators.evaluation import bcubed
 
-    pred = rl_clusters(spark, sf_dir)
-    truth = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.when(
-            F.col("text").isNull(),
-            F.concat(F.lit("null:"), F.col("doc_id").cast("string")),
-        )
-        .otherwise(F.md5("text"))
-        .alias("truth_id"),
-    )
+    pred, truth = rl_clusters(spark, sf_dir), _text_truth(spark, sf_dir)
     return bcubed(pred, truth)
 
 
@@ -3297,16 +3293,7 @@ def rl_cluster_ari(spark, sf_dir):
         adjusted_rand_index,
     )
 
-    pred = rl_clusters(spark, sf_dir)
-    truth = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.when(
-            F.col("text").isNull(),
-            F.concat(F.lit("null:"), F.col("doc_id").cast("string")),
-        )
-        .otherwise(F.md5("text"))
-        .alias("truth_id"),
-    )
+    pred, truth = rl_clusters(spark, sf_dir), _text_truth(spark, sf_dir)
     return adjusted_rand_index(pred, truth)
 
 
@@ -3363,16 +3350,7 @@ def rl_cluster_vmeasure(spark, sf_dir):
         cluster_entropy_metrics,
     )
 
-    pred = rl_clusters(spark, sf_dir)
-    truth = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.when(
-            F.col("text").isNull(),
-            F.concat(F.lit("null:"), F.col("doc_id").cast("string")),
-        )
-        .otherwise(F.md5("text"))
-        .alias("truth_id"),
-    )
+    pred, truth = rl_clusters(spark, sf_dir), _text_truth(spark, sf_dir)
     return cluster_entropy_metrics(pred, truth)
 
 
@@ -3437,16 +3415,7 @@ def rl_cluster_gmd(spark, sf_dir):
         generalized_merge_distance,
     )
 
-    pred = rl_clusters(spark, sf_dir)
-    truth = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.when(
-            F.col("text").isNull(),
-            F.concat(F.lit("null:"), F.col("doc_id").cast("string")),
-        )
-        .otherwise(F.md5("text"))
-        .alias("truth_id"),
-    )
+    pred, truth = rl_clusters(spark, sf_dir), _text_truth(spark, sf_dir)
     return generalized_merge_distance(pred, truth)
 
 
@@ -3495,16 +3464,7 @@ def rl_cluster_muc(spark, sf_dir):
     aggregate pass over contingency-cell counts."""
     from idd_hw6_record_linkage_spark.operators.evaluation import muc_score
 
-    pred = rl_clusters(spark, sf_dir)
-    truth = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.when(
-            F.col("text").isNull(),
-            F.concat(F.lit("null:"), F.col("doc_id").cast("string")),
-        )
-        .otherwise(F.md5("text"))
-        .alias("truth_id"),
-    )
+    pred, truth = rl_clusters(spark, sf_dir), _text_truth(spark, sf_dir)
     return muc_score(pred, truth)
 
 
@@ -3560,16 +3520,7 @@ def rl_cluster_exact(spark, sf_dir):
         exact_cluster_match,
     )
 
-    pred = rl_clusters(spark, sf_dir)
-    truth = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.when(
-            F.col("text").isNull(),
-            F.concat(F.lit("null:"), F.col("doc_id").cast("string")),
-        )
-        .otherwise(F.md5("text"))
-        .alias("truth_id"),
-    )
+    pred, truth = rl_clusters(spark, sf_dir), _text_truth(spark, sf_dir)
     return exact_cluster_match(pred, truth)
 
 

@@ -33,11 +33,14 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
-_VEC_MAX_LEN = 512
+from idd_hw6_record_linkage_spark.functions.pair_batch import (
+    _VEC_MAX_LEN,
+    pair_batch,
+    sort_pack,
+)
 
 # default scoring: match +1, mismatch -0.5, gap -1 — exact binary
 # fractions, so kernel and scalar DP agree bit-for-bit.
@@ -88,21 +91,8 @@ def _sw_kernel(
     import numpy as np
 
     m = len(a_strs)
-    l1 = np.fromiter((len(s) for s in a_strs), np.int64, m)
-    order = np.argsort(-l1, kind="stable")
-    a_strs = [a_strs[i] for i in order]
-    b_strs = [b_strs[i] for i in order]
-    l1 = l1[order]
-    l2 = np.fromiter((len(s) for s in b_strs), np.int64, m)
+    order, a_mat, l1, b_mat, l2 = sort_pack(a_strs, b_strs)
     L1, L2 = int(l1[0]), int(l2.max())
-
-    width = max(L2, 1)
-    a_mat = np.zeros((m, max(L1, 1)), dtype=np.uint32)
-    flat_a = np.frombuffer("".join(a_strs).encode("utf-32-le"), dtype=np.uint32)
-    a_mat[np.arange(max(L1, 1))[None, :] < l1[:, None]] = flat_a
-    b_mat = np.zeros((m, width), dtype=np.uint32)
-    flat_b = np.frombuffer("".join(b_strs).encode("utf-32-le"), dtype=np.uint32)
-    b_mat[np.arange(width)[None, :] < l2[:, None]] = flat_b
 
     j_idx = np.arange(L2, dtype=np.int64)
     valid2 = j_idx[None, :] < l2[:, None]
@@ -143,66 +133,32 @@ def _sw_batch(
     mismatch: float = _MISMATCH,
     gap: float = _GAP,
 ) -> "np.ndarray":
-    """Normalized SW similarity over parallel string lists, with the
-    same batch dedup + short-circuits as the Jaro batch wrapper:
-    candidate-pair batches repeat strings heavily, so the DP only sees
-    distinct, genuinely different, non-trivial pairs."""
+    """Normalized SW similarity over parallel string lists through
+    `pair_batch`: candidate-pair batches repeat strings heavily, so the
+    DP only sees distinct, genuinely different, non-trivial pairs."""
     import numpy as np
 
-    n = len(s1_list)
-    out = np.zeros(n, dtype=np.float64)
-    if n == 0:
-        return out
-
-    seen: dict = {}
-    inv = np.empty(n, dtype=np.int64)
-    uniq_a: list = []
-    uniq_b: list = []
-    for k in range(n):
-        key = (s1_list[k], s2_list[k])
-        j = seen.get(key)
-        if j is None:
-            j = len(uniq_a)
-            seen[key] = j
-            uniq_a.append(key[0])
-            uniq_b.append(key[1])
-        inv[k] = j
-
-    u = len(uniq_a)
-    res = np.zeros(u, dtype=np.float64)
-    kern_idx: list[int] = []
-    for j in range(u):
-        a, b = uniq_a[j], uniq_b[j]
+    def shortcut(a, b):
         if a is None or b is None:
-            continue  # missing → 0.0
+            return 0.0
         if a == b:
-            res[j] = 1.0  # includes "" == ""
-            continue
+            return 1.0  # includes "" == ""
         la, lb = len(a), len(b)
         if la == 0 or lb == 0:
-            continue  # one-sided empty → 0.0
+            return 0.0
         if la > _VEC_MAX_LEN or lb > _VEC_MAX_LEN:
-            res[j] = _sw_scalar(a, b, match, mismatch, gap) / (
-                match * min(la, lb)
-            )
-            continue
-        kern_idx.append(j)
+            return _sw_scalar(a, b, match, mismatch, gap) / (match * min(la, lb))
+        return None
 
-    if kern_idx:
-        ki = np.asarray(kern_idx, dtype=np.int64)
-        raw = _sw_kernel(
-            [uniq_a[j] for j in kern_idx],
-            [uniq_b[j] for j in kern_idx],
-            match,
-            mismatch,
-            gap,
-        )
+    def kernel(a_strs, b_strs):
+        raw = _sw_kernel(a_strs, b_strs, match, mismatch, gap)
         denom = np.asarray(
-            [match * min(len(uniq_a[j]), len(uniq_b[j])) for j in kern_idx],
+            [match * min(len(a), len(b)) for a, b in zip(a_strs, b_strs)],
             dtype=np.float64,
         )
-        res[ki] = raw / denom
-    return res[inv]
+        return raw / denom
+
+    return pair_batch(s1_list, s2_list, shortcut, kernel, np.float64)
 
 
 @pandas_udf(DoubleType())
@@ -214,9 +170,7 @@ def smith_waterman_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
 
 
 def sim_smith_waterman(l: Column | str, r: Column | str) -> Column:  # noqa: E741
-    lc = F.col(l) if isinstance(l, str) else l
-    rc = F.col(r) if isinstance(r, str) else r
-    return smith_waterman_udf(lc, rc)
+    return smith_waterman_udf(l, r)
 
 
 @pandas_udf(DoubleType())
@@ -241,6 +195,4 @@ def sw_unit_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
 
 
 def sim_sw_unit(l: Column | str, r: Column | str) -> Column:  # noqa: E741
-    lc = F.col(l) if isinstance(l, str) else l
-    rc = F.col(r) if isinstance(r, str) else r
-    return sw_unit_udf(lc, rc)
+    return sw_unit_udf(l, r)

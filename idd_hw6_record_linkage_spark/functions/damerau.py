@@ -37,6 +37,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
+from idd_hw6_record_linkage_spark.functions.pair_batch import pair_batch, sort_pack
+
 # DP cube is (chunk × (L1+2) × (L2+2)) int32 — 64-byte cap and
 # 2048-row chunks bound it at ~36 MB.
 _VEC_MAX_LEN = 64
@@ -93,20 +95,8 @@ def _dl_kernel_chunk(a_bytes: list, b_bytes: list) -> "np.ndarray":
     import numpy as np
 
     m = len(a_bytes)
-    l1 = np.fromiter((len(s) for s in a_bytes), np.int64, m)
-    order = np.argsort(-l1, kind="stable")
-    a_bytes = [a_bytes[i] for i in order]
-    b_bytes = [b_bytes[i] for i in order]
-    l1 = l1[order]
-    l2 = np.fromiter((len(s) for s in b_bytes), np.int64, m)
+    order, a_mat, l1, b_mat, l2 = sort_pack(a_bytes, b_bytes)
     L1, L2 = int(l1[0]), int(l2.max())
-
-    a_mat = np.zeros((m, max(L1, 1)), dtype=np.uint8)
-    flat_a = np.frombuffer(b"".join(a_bytes), dtype=np.uint8)
-    a_mat[np.arange(max(L1, 1))[None, :] < l1[:, None]] = flat_a
-    b_mat = np.zeros((m, max(L2, 1)), dtype=np.uint8)
-    flat_b = np.frombuffer(b"".join(b_bytes), dtype=np.uint8)
-    b_mat[np.arange(max(L2, 1))[None, :] < l2[:, None]] = flat_b
 
     D = np.zeros((m, L1 + 2, L2 + 2), dtype=np.int32)
     D[:, 0, :] = _INF
@@ -150,55 +140,45 @@ def _dl_kernel_chunk(a_bytes: list, b_bytes: list) -> "np.ndarray":
     return out
 
 
-def _dl_batch(s1_list: list, s2_list: list) -> "np.ndarray":
-    """Unrestricted DL distances over parallel string lists with the
-    same batch dedup + short-circuits as the SW/Jaro wrappers
-    (candidate-pair batches repeat strings heavily). None is treated
-    as '' (callers coalesce upstream; this keeps the kernel total)."""
+def _dl_shortcut(a: str, b: str) -> int | None:
+    """Distance of a trivial or over-long pair; None → kernel."""
+    if a == b:
+        return 0  # includes '' == ''
+    ab, bb = a.encode("utf-8"), b.encode("utf-8")
+    if len(ab) == 0 or len(bb) == 0:
+        return len(ab) + len(bb)
+    if len(ab) > _VEC_MAX_LEN or len(bb) > _VEC_MAX_LEN:
+        return _dl_scalar(ab, bb)
+    return None
+
+
+def _dl_kernel(a_strs: list, b_strs: list) -> "np.ndarray":
+    """UTF-8 encode, then the vectorized DP in _CHUNK-row chunks."""
     import numpy as np
 
-    n = len(s1_list)
-    out = np.zeros(n, dtype=np.int64)
-    if n == 0:
-        return out
-
-    seen: dict = {}
-    inv = np.empty(n, dtype=np.int64)
-    uniq: list = []
-    for k in range(n):
-        key = (s1_list[k] or "", s2_list[k] or "")
-        j = seen.get(key)
-        if j is None:
-            j = len(uniq)
-            seen[key] = j
-            uniq.append(key)
-        inv[k] = j
-
-    u = len(uniq)
-    res = np.zeros(u, dtype=np.int64)
-    kern_idx: list[int] = []
-    kern_a: list[bytes] = []
-    kern_b: list[bytes] = []
-    for j, (a, b) in enumerate(uniq):
-        if a == b:
-            continue  # distance 0, includes '' == ''
-        ab, bb = a.encode("utf-8"), b.encode("utf-8")
-        if len(ab) == 0 or len(bb) == 0:
-            res[j] = len(ab) + len(bb)
-            continue
-        if len(ab) > _VEC_MAX_LEN or len(bb) > _VEC_MAX_LEN:
-            res[j] = _dl_scalar(ab, bb)
-            continue
-        kern_idx.append(j)
-        kern_a.append(ab)
-        kern_b.append(bb)
-
-    for lo in range(0, len(kern_idx), _CHUNK):
+    a_bytes = [s.encode("utf-8") for s in a_strs]
+    b_bytes = [s.encode("utf-8") for s in b_strs]
+    out = np.empty(len(a_bytes), dtype=np.int64)
+    for lo in range(0, len(a_bytes), _CHUNK):
         hi = lo + _CHUNK
-        res[np.asarray(kern_idx[lo:hi], dtype=np.int64)] = _dl_kernel_chunk(
-            kern_a[lo:hi], kern_b[lo:hi]
-        )
-    return res[inv]
+        out[lo:hi] = _dl_kernel_chunk(a_bytes[lo:hi], b_bytes[lo:hi])
+    return out
+
+
+def _dl_batch(s1_list: list, s2_list: list) -> "np.ndarray":
+    """Unrestricted DL distances over parallel string lists through
+    `pair_batch` (candidate-pair batches repeat strings heavily). None
+    is treated as '' (callers coalesce upstream; this keeps the kernel
+    total)."""
+    import numpy as np
+
+    return pair_batch(
+        s1_list,
+        s2_list,
+        lambda a, b: _dl_shortcut(a or "", b or ""),
+        _dl_kernel,
+        np.int64,
+    )
 
 
 @pandas_udf(LongType())
@@ -210,16 +190,12 @@ def damerau_levenshtein_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
 
 
 def damerau_distance(l: Column | str, r: Column | str) -> Column:  # noqa: E741
-    lc = F.col(l) if isinstance(l, str) else l
-    rc = F.col(r) if isinstance(r, str) else r
-    return damerau_levenshtein_udf(lc, rc)
+    return damerau_levenshtein_udf(l, r)
 
 
 def sim_damerau(l: Column | str, r: Column | str) -> Column:  # noqa: E741
     """Normalized similarity 1 − DL/max(byte_len); both-empty → 1.0.
     The normalization runs native (octet_length) so only the distance
     crosses the Arrow boundary."""
-    lc = F.col(l) if isinstance(l, str) else l
-    rc = F.col(r) if isinstance(r, str) else r
-    denom = F.greatest(F.octet_length(lc), F.octet_length(rc), F.lit(1))
-    return F.lit(1.0) - damerau_levenshtein_udf(lc, rc) / denom
+    denom = F.greatest(F.octet_length(l), F.octet_length(r), F.lit(1))
+    return F.lit(1.0) - damerau_levenshtein_udf(l, r) / denom

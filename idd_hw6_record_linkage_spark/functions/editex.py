@@ -59,11 +59,14 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, LongType
 
-_VEC_MAX_LEN = 512
+from idd_hw6_record_linkage_spark.functions.pair_batch import (
+    _VEC_MAX_LEN,
+    pair_batch,
+    sort_pack,
+)
 
 _GROUPS = (
     "aeiouy", "bp", "ckq", "dt", "lr", "mn", "gj", "fpv", "sxz", "csz"
@@ -180,20 +183,8 @@ def _editex_kernel(
     import numpy as np
 
     m = len(a_strs)
-    l1 = np.fromiter((len(s) for s in a_strs), np.int64, m)
-    order = np.argsort(-l1, kind="stable")
-    a_strs = [a_strs[i] for i in order]
-    b_strs = [b_strs[i] for i in order]
-    l1 = l1[order]
-    l2 = np.fromiter((len(s) for s in b_strs), np.int64, m)
+    order, a_mat, l1, b_mat, l2 = sort_pack(a_strs, b_strs)
     L1, L2 = int(l1[0]), int(l2.max())
-
-    a_mat = np.zeros((m, max(L1, 1)), dtype=np.uint32)
-    flat_a = np.frombuffer("".join(a_strs).encode("utf-32-le"), dtype=np.uint32)
-    a_mat[np.arange(max(L1, 1))[None, :] < l1[:, None]] = flat_a
-    b_mat = np.zeros((m, max(L2, 1)), dtype=np.uint32)
-    flat_b = np.frombuffer("".join(b_strs).encode("utf-32-le"), dtype=np.uint32)
-    b_mat[np.arange(max(L2, 1))[None, :] < l2[:, None]] = flat_b
 
     da = _del_costs(a_mat, l1, unit)  # (m, L1)
     db = _del_costs(b_mat, l2, unit)  # (m, L2)
@@ -236,56 +227,30 @@ def _editex_kernel(
     return out
 
 
+def _editex_shortcut(a: str, b: str, unit: bool) -> int | None:
+    """Distance of a trivial or over-long pair; None → kernel."""
+    if a == b:
+        return 0
+    la, lb = len(a), len(b)
+    if la == 0 or lb == 0 or la > _VEC_MAX_LEN or lb > _VEC_MAX_LEN:
+        return _editex_scalar(a, b, unit)  # border-only DP when one is ''
+    return None
+
+
 def _editex_batch(s1_list: list, s2_list: list, unit: bool) -> "np.ndarray":
-    """Editex distances over parallel string lists with the same batch
-    dedup + short-circuits as the NW wrapper. None is treated as ''
-    (total behavior: editex(a, '') = the cumulative deletion cost of
-    a — NOT 2·len(a) in production mode, because doubled letters drop
-    free)."""
+    """Editex distances over parallel string lists through
+    `pair_batch`. None is treated as '' (total behavior: editex(a, '')
+    = the cumulative deletion cost of a — NOT 2·len(a) in production
+    mode, because doubled letters drop free)."""
     import numpy as np
 
-    n = len(s1_list)
-    out = np.zeros(n, dtype=np.int64)
-    if n == 0:
-        return out
-
-    seen: dict = {}
-    inv = np.empty(n, dtype=np.int64)
-    uniq_a: list = []
-    uniq_b: list = []
-    for k in range(n):
-        key = (s1_list[k] or "", s2_list[k] or "")
-        j = seen.get(key)
-        if j is None:
-            j = len(uniq_a)
-            seen[key] = j
-            uniq_a.append(key[0])
-            uniq_b.append(key[1])
-        inv[k] = j
-
-    u = len(uniq_a)
-    res = np.zeros(u, dtype=np.int64)
-    kern_idx: list[int] = []
-    for j in range(u):
-        a, b = uniq_a[j], uniq_b[j]
-        if a == b:
-            continue  # distance 0
-        la, lb = len(a), len(b)
-        if la == 0 or lb == 0:
-            res[j] = _editex_scalar(a, b, unit)  # border-only DP
-            continue
-        if la > _VEC_MAX_LEN or lb > _VEC_MAX_LEN:
-            res[j] = _editex_scalar(a, b, unit)
-            continue
-        kern_idx.append(j)
-
-    if kern_idx:
-        res[np.asarray(kern_idx, dtype=np.int64)] = _editex_kernel(
-            [uniq_a[j] for j in kern_idx],
-            [uniq_b[j] for j in kern_idx],
-            unit,
-        )
-    return res[inv]
+    return pair_batch(
+        s1_list,
+        s2_list,
+        lambda a, b: _editex_shortcut(a or "", b or "", unit),
+        lambda a, b: _editex_kernel(a, b, unit),
+        np.int64,
+    )
 
 
 @pandas_udf(LongType())
@@ -306,41 +271,47 @@ def editex_unit_distance_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
     )
 
 
+def _editex_sim_shortcut(a, b) -> float | None:
+    if a is None or b is None:
+        return 0.0
+    if a == b:
+        return 1.0
+    d = _editex_shortcut(a, b, unit=False)
+    return None if d is None else 1.0 - d / (2.0 * max(len(a), len(b)))
+
+
+def _editex_sim_kernel(a_strs: list, b_strs: list) -> "np.ndarray":
+    import numpy as np
+
+    dist = _editex_kernel(a_strs, b_strs, unit=False).astype(np.float64)
+    la = np.fromiter(map(len, a_strs), np.int64, len(a_strs))
+    lb = np.fromiter(map(len, b_strs), np.int64, len(b_strs))
+    return 1.0 - dist / (2.0 * np.maximum(la, lb))
+
+
 @pandas_udf(DoubleType())
 def sim_editex_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
     """Normalized editex similarity 1 − dist/(2·max(len)); equal
     strings → 1.0, NULL → 0.0."""
     import numpy as np
 
-    a, b = s1.tolist(), s2.tolist()
-    dist = _editex_batch(a, b, unit=False).astype(np.float64)
-    denom = np.fromiter(
-        (2.0 * max(len(x or ""), len(y or ""), 1) for x, y in zip(a, b)),
+    sim = pair_batch(
+        s1.tolist(),
+        s2.tolist(),
+        _editex_sim_shortcut,
+        _editex_sim_kernel,
         np.float64,
-        len(a),
     )
-    sim = 1.0 - dist / denom
-    for idx, (x, y) in enumerate(zip(a, b)):
-        if x is None or y is None:
-            sim[idx] = 0.0
-        elif x == y:
-            sim[idx] = 1.0
     return pd.Series(sim, dtype="float64")
 
 
 def editex_distance(l: Column | str, r: Column | str) -> Column:  # noqa: E741
-    lc = F.col(l) if isinstance(l, str) else l
-    rc = F.col(r) if isinstance(r, str) else r
-    return editex_distance_udf(lc, rc)
+    return editex_distance_udf(l, r)
 
 
 def editex_unit_distance(l: Column | str, r: Column | str) -> Column:  # noqa: E741
-    lc = F.col(l) if isinstance(l, str) else l
-    rc = F.col(r) if isinstance(r, str) else r
-    return editex_unit_distance_udf(lc, rc)
+    return editex_unit_distance_udf(l, r)
 
 
 def sim_editex(l: Column | str, r: Column | str) -> Column:  # noqa: E741
-    lc = F.col(l) if isinstance(l, str) else l
-    rc = F.col(r) if isinstance(r, str) else r
-    return sim_editex_udf(lc, rc)
+    return sim_editex_udf(l, r)

@@ -40,11 +40,14 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, LongType
 
-_VEC_MAX_LEN = 512
+from idd_hw6_record_linkage_spark.functions.pair_batch import (
+    _VEC_MAX_LEN,
+    pair_batch,
+    sort_pack,
+)
 
 _MATCH = 1.0
 _MISMATCH = -0.5
@@ -89,20 +92,8 @@ def _nw_kernel(
     import numpy as np
 
     m = len(a_strs)
-    l1 = np.fromiter((len(s) for s in a_strs), np.int64, m)
-    order = np.argsort(-l1, kind="stable")
-    a_strs = [a_strs[i] for i in order]
-    b_strs = [b_strs[i] for i in order]
-    l1 = l1[order]
-    l2 = np.fromiter((len(s) for s in b_strs), np.int64, m)
+    order, a_mat, l1, b_mat, l2 = sort_pack(a_strs, b_strs)
     L1, L2 = int(l1[0]), int(l2.max())
-
-    a_mat = np.zeros((m, max(L1, 1)), dtype=np.uint32)
-    flat_a = np.frombuffer("".join(a_strs).encode("utf-32-le"), dtype=np.uint32)
-    a_mat[np.arange(max(L1, 1))[None, :] < l1[:, None]] = flat_a
-    b_mat = np.zeros((m, max(L2, 1)), dtype=np.uint32)
-    flat_b = np.frombuffer("".join(b_strs).encode("utf-32-le"), dtype=np.uint32)
-    b_mat[np.arange(max(L2, 1))[None, :] < l2[:, None]] = flat_b
 
     # h_prev holds the full row j = 0..L2 (column 0 is the gap border).
     j_idx = np.arange(L2 + 1, dtype=np.float64)
@@ -138,6 +129,20 @@ def _nw_kernel(
     return out
 
 
+def _nw_shortcut(
+    a: str, b: str, match: float, mismatch: float, gap: float
+) -> float | None:
+    """Raw NW score of a trivial or over-long pair; None → kernel."""
+    if a == b:
+        return match * len(a)  # includes '' == '' -> 0.0
+    la, lb = len(a), len(b)
+    if la == 0 or lb == 0:
+        return -gap * (la + lb)
+    if la > _VEC_MAX_LEN or lb > _VEC_MAX_LEN:
+        return _nw_scalar(a, b, match, mismatch, gap)
+    return None
+
+
 def _nw_batch(
     s1_list: list,
     s2_list: list,
@@ -145,59 +150,20 @@ def _nw_batch(
     mismatch: float = _MISMATCH,
     gap: float = _GAP,
 ) -> "np.ndarray":
-    """Raw NW corner scores over parallel string lists, with the same
-    batch dedup + short-circuits as the SW/Jaro wrappers. None is
-    treated as '' here (similarity callers map missing → 0.0 BEFORE
-    normalization; the unit-distance caller wants total behavior:
+    """Raw NW corner scores over parallel string lists through
+    `pair_batch` (batch dedup + per-pair shortcuts). None is treated
+    as '' here (the similarity UDF maps missing → 0.0 in its own
+    shortcut; the unit-distance caller wants total behavior:
     NW(a, '') = −g·len(a), matching levenshtein against '')."""
     import numpy as np
 
-    n = len(s1_list)
-    out = np.zeros(n, dtype=np.float64)
-    if n == 0:
-        return out
-
-    seen: dict = {}
-    inv = np.empty(n, dtype=np.int64)
-    uniq_a: list = []
-    uniq_b: list = []
-    for k in range(n):
-        key = (s1_list[k] or "", s2_list[k] or "")
-        j = seen.get(key)
-        if j is None:
-            j = len(uniq_a)
-            seen[key] = j
-            uniq_a.append(key[0])
-            uniq_b.append(key[1])
-        inv[k] = j
-
-    u = len(uniq_a)
-    res = np.zeros(u, dtype=np.float64)
-    kern_idx: list[int] = []
-    for j in range(u):
-        a, b = uniq_a[j], uniq_b[j]
-        if a == b:
-            res[j] = match * len(a)  # includes '' == '' -> 0.0
-            continue
-        la, lb = len(a), len(b)
-        if la == 0 or lb == 0:
-            res[j] = -gap * (la + lb)
-            continue
-        if la > _VEC_MAX_LEN or lb > _VEC_MAX_LEN:
-            res[j] = _nw_scalar(a, b, match, mismatch, gap)
-            continue
-        kern_idx.append(j)
-
-    if kern_idx:
-        ki = np.asarray(kern_idx, dtype=np.int64)
-        res[ki] = _nw_kernel(
-            [uniq_a[j] for j in kern_idx],
-            [uniq_b[j] for j in kern_idx],
-            match,
-            mismatch,
-            gap,
-        )
-    return res[inv]
+    return pair_batch(
+        s1_list,
+        s2_list,
+        lambda a, b: _nw_shortcut(a or "", b or "", match, mismatch, gap),
+        lambda a, b: _nw_kernel(a, b, match, mismatch, gap),
+        np.float64,
+    )
 
 
 @pandas_udf(LongType())
@@ -211,40 +177,39 @@ def nw_unit_distance_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
     return pd.Series(np.rint(-raw).astype("int64"), dtype="int64")
 
 
+def _nw_sim_shortcut(a, b) -> float | None:
+    if a is None or b is None:
+        return 0.0
+    if a == b:
+        return 1.0  # includes '' == ''
+    raw = _nw_shortcut(a, b, _MATCH, _MISMATCH, _GAP)
+    return None if raw is None else max(raw, 0.0) / (_MATCH * max(len(a), len(b)))
+
+
+def _nw_sim_kernel(a_strs: list, b_strs: list) -> "np.ndarray":
+    import numpy as np
+
+    raw = _nw_kernel(a_strs, b_strs, _MATCH, _MISMATCH, _GAP)
+    la = np.fromiter(map(len, a_strs), np.int64, len(a_strs))
+    lb = np.fromiter(map(len, b_strs), np.int64, len(b_strs))
+    return np.maximum(raw, 0.0) / (_MATCH * np.maximum(la, lb))
+
+
 @pandas_udf(DoubleType())
 def needleman_wunsch_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
     """Normalized NW global-alignment similarity over an Arrow batch;
     missing / one-sided-empty → 0.0, equal strings → 1.0."""
     import numpy as np
 
-    a, b = s1.tolist(), s2.tolist()
-    raw = _nw_batch(a, b)
-    denom = np.fromiter(
-        (
-            _MATCH * max(len(x or ""), len(y or ""), 1)
-            for x, y in zip(a, b)
-        ),
-        np.float64,
-        len(a),
+    sim = pair_batch(
+        s1.tolist(), s2.tolist(), _nw_sim_shortcut, _nw_sim_kernel, np.float64
     )
-    sim = np.maximum(raw, 0.0) / denom
-    # equal non-null strings -> 1.0 (covers '' == '', whose denom-1
-    # guard would otherwise yield 0.0); missing -> 0.0.
-    for idx, (x, y) in enumerate(zip(a, b)):
-        if x is None or y is None:
-            sim[idx] = 0.0
-        elif x == y:
-            sim[idx] = 1.0
     return pd.Series(sim, dtype="float64")
 
 
 def nw_unit_distance(l: Column | str, r: Column | str) -> Column:  # noqa: E741
-    lc = F.col(l) if isinstance(l, str) else l
-    rc = F.col(r) if isinstance(r, str) else r
-    return nw_unit_distance_udf(lc, rc)
+    return nw_unit_distance_udf(l, r)
 
 
 def sim_needleman_wunsch(l: Column | str, r: Column | str) -> Column:  # noqa: E741
-    lc = F.col(l) if isinstance(l, str) else l
-    rc = F.col(r) if isinstance(r, str) else r
-    return needleman_wunsch_udf(lc, rc)
+    return needleman_wunsch_udf(l, r)

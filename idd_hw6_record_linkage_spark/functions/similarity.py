@@ -4,9 +4,9 @@ Native Catalyst expressions wherever Spark has the primitive
 (levenshtein, exact, gaussian numeric, token jaccard, cosine); Arrow-
 batched pandas UDFs only for Jaro / Jaro-Winkler, which Spark lacks.
 The UDFs receive whole Arrow batches (no per-row Python at the Spark
-level) and run a numpy-vectorized Jaro kernel across the batch (plus
-pair-dedup and equality short-circuits) — the same strategy the
-reference gets from the `recordlinkage` library's numpy comparators
+level) and run a numpy-vectorized Jaro kernel across the batch (pair
+dedup and shortcuts from functions/pair_batch.py) — the same strategy
+the reference gets from the `recordlinkage` library's numpy comparators
 (record_linkage.py:457), but without its per-pair Python dispatch.
 
 Reference comparator configs (thresholds) live in
@@ -20,6 +20,12 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
+
+from idd_hw6_record_linkage_spark.functions.pair_batch import (
+    _VEC_MAX_LEN,
+    pair_batch,
+    sort_pack,
+)
 
 
 def _c(col: Column | str) -> Column:
@@ -187,27 +193,6 @@ def _jaro_winkler(
     return j
 
 
-# Strings longer than this take the scalar path: the vectorized kernel
-# allocates O(batch * max_len) masks, which is the right trade for the
-# short keys JW is meant for (domains/titles/models) but not for
-# arbitrary documents.
-_VEC_MAX_LEN = 512
-
-
-def _encode_batch(strs: list[str], lens: "np.ndarray", width: int) -> "np.ndarray":
-    """Pack a list of strings into a (n, width) uint32 codepoint matrix
-    (0-padded). One join+encode for the whole batch (utf-32-le bytes
-    reinterpret directly as codepoints); boolean-mask assignment fills
-    the matrix row-major, which matches concatenation order."""
-    import numpy as np
-
-    width = max(width, 1)
-    mat = np.zeros((len(strs), width), dtype=np.uint32)
-    flat = np.frombuffer("".join(strs).encode("utf-32-le"), dtype=np.uint32)
-    mat[np.arange(width)[None, :] < lens[:, None]] = flat
-    return mat
-
-
 def _jaro_kernel(
     a_strs: list,
     b_strs: list,
@@ -228,16 +213,8 @@ def _jaro_kernel(
     import numpy as np
 
     m = len(a_strs)
-    l1 = np.fromiter((len(s) for s in a_strs), np.int64, m)
-    order = np.argsort(-l1, kind="stable")
-    a_strs = [a_strs[i] for i in order]
-    b_strs = [b_strs[i] for i in order]
-    l1 = l1[order]
-    l2 = np.fromiter((len(s) for s in b_strs), np.int64, m)
+    order, a, l1, b, l2 = sort_pack(a_strs, b_strs)
     L1, L2 = int(l1[0]), int(l2.max())
-
-    a = _encode_batch(a_strs, l1, L1)
-    b = _encode_batch(b_strs, l2, L2)
     if a.max(initial=0) < 256 and b.max(initial=0) < 256:
         a = a.astype(np.uint8)
         b = b.astype(np.uint8)
@@ -317,69 +294,35 @@ def _jaro_batch(
 
     Bit-identical to `_jaro`/`_jaro_winkler` (same greedy first-unmatched
     match order, same float expression order); property-tested against
-    the scalars in tests/test_similarity.py. None → 0.0.
-
-    Candidate-pair batches repeat strings heavily (every pair in a block
-    shares the blocking field; domains/titles recur across pairs), so
-    the batch is deduplicated on the (s1, s2) pair first and equal
-    strings short-circuit to 1.0 — the kernel only sees distinct,
-    genuinely different pairs.
-    """
+    the scalars in tests/test_similarity.py. None → 0.0. `pair_batch`
+    dedups the batch and calls the shortcut below once per distinct
+    pair (missing/empty → 0.0, equal → 1.0, over-long → scalar), so the
+    kernel only sees distinct, genuinely different pairs."""
     import numpy as np
 
-    n = len(s1_list)
-    out = np.zeros(n, dtype=np.float64)
-    if n == 0:
-        return out
+    scalar = _jaro_winkler if winkler else _jaro
 
-    # dedup identical (s1, s2) pairs within the batch
-    seen: dict = {}
-    inv = np.empty(n, dtype=np.int64)
-    uniq_a: list = []
-    uniq_b: list = []
-    for k in range(n):
-        key = (s1_list[k], s2_list[k])
-        j = seen.get(key)
-        if j is None:
-            j = len(uniq_a)
-            seen[key] = j
-            uniq_a.append(key[0])
-            uniq_b.append(key[1])
-        inv[k] = j
-
-    u = len(uniq_a)
-    res = np.zeros(u, dtype=np.float64)
-    kern_idx: list[int] = []
-    for j in range(u):
-        a, b = uniq_a[j], uniq_b[j]
+    def shortcut(a, b):
         if a is None or b is None:
-            continue  # missing → 0.0
+            return 0.0
         la, lb = len(a), len(b)
         if int_trans and (la == 0 or lb == 0):
-            continue  # DuckDB convention: ANY empty side → 0.0, '' == ''
+            return 0.0  # DuckDB convention: ANY empty side → 0.0, '' == ''
         if a == b:
-            res[j] = 1.0  # scalar equality shortcut (incl. "" == "")
-            continue
+            return 1.0  # includes "" == ""
         if la == 0 or lb == 0:
-            continue  # one-sided empty → 0.0
+            return 0.0
         if la > _VEC_MAX_LEN or lb > _VEC_MAX_LEN:
-            res[j] = (
-                _jaro_winkler(a, b, int_trans=int_trans)
-                if winkler
-                else _jaro(a, b, int_trans=int_trans)
-            )
-            continue
-        kern_idx.append(j)
+            return scalar(a, b, int_trans=int_trans)
+        return None
 
-    if kern_idx:
-        ki = np.asarray(kern_idx, dtype=np.int64)
-        res[ki] = _jaro_kernel(
-            [uniq_a[j] for j in kern_idx],
-            [uniq_b[j] for j in kern_idx],
-            winkler,
-            int_trans=int_trans,
-        )
-    return res[inv]
+    return pair_batch(
+        s1_list,
+        s2_list,
+        shortcut,
+        lambda a, b: _jaro_kernel(a, b, winkler, int_trans=int_trans),
+        np.float64,
+    )
 
 
 @pandas_udf(DoubleType())

@@ -196,6 +196,58 @@ def subgroup_recall(
     )
 
 
+def _id_join(
+    pred: DataFrame, truth: DataFrame, id_col: str, pred_col: str, truth_col: str
+) -> DataFrame:
+    """(__id, __c, __t): each record's predicted and truth cluster ids,
+    inner-joined on the record id — the basis of every cluster-agreement
+    metric below."""
+    return pred.select(F.col(id_col).alias("__id"), F.col(pred_col).alias("__c")).join(
+        truth.select(F.col(id_col).alias("__id"), F.col(truth_col).alias("__t")),
+        "__id",
+    )
+
+
+def _contingency(j: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The contingency aggregates: n_ct per (__c, __t) cell, n_c per
+    predicted cluster, n_t per truth cluster."""
+    return (
+        j.groupBy("__c", "__t").agg(F.count("*").alias("n_ct")),
+        j.groupBy("__c").agg(F.count("*").alias("n_c")),
+        j.groupBy("__t").agg(F.count("*").alias("n_t")),
+    )
+
+
+def _doubled_pair_sums(j: DataFrame) -> DataFrame:
+    """One row (n_records, s_ct2, s_c2, s_t2): doubled pair counts
+    Σ n(n−1) over cells, predicted clusters and truth clusters, exact
+    BIGINTs."""
+    nct, nc, nt = _contingency(j)
+    s_ct2 = nct.agg(
+        F.sum(F.col("n_ct") * (F.col("n_ct") - 1)).cast("long").alias("s_ct2")
+    )
+    s_c2 = nc.agg(F.sum(F.col("n_c") * (F.col("n_c") - 1)).cast("long").alias("s_c2"))
+    s_t2 = nt.agg(F.sum(F.col("n_t") * (F.col("n_t") - 1)).cast("long").alias("s_t2"))
+    n = j.agg(F.count("*").cast("long").alias("n_records"))
+    return (
+        n.crossJoin(F.broadcast(s_ct2))
+        .crossJoin(F.broadcast(s_c2))
+        .crossJoin(F.broadcast(s_t2))
+    )
+
+
+def _distinct_counts(j: DataFrame) -> DataFrame:
+    """One aggregate pass (the multi-countDistinct Expand): n_records,
+    n_pred_clusters, n_truth_clusters, n_overlap_cells (non-empty
+    contingency cells)."""
+    return j.agg(
+        F.count(F.lit(1)).cast("long").alias("n_records"),
+        F.countDistinct("__c").cast("long").alias("n_pred_clusters"),
+        F.countDistinct("__t").cast("long").alias("n_truth_clusters"),
+        F.countDistinct("__c", "__t").cast("long").alias("n_overlap_cells"),
+    )
+
+
 def bcubed(
     pred: DataFrame,
     truth: DataFrame,
@@ -216,13 +268,8 @@ def bcubed(
     pairwise blowup. Records present in only one of the two assignments
     are excluded (inner join) — both sides must cover the corpus.
     """
-    j = pred.select(F.col(id_col).alias("__id"), F.col(pred_col).alias("__c")).join(
-        truth.select(F.col(id_col).alias("__id"), F.col(truth_col).alias("__t")),
-        "__id",
-    )
-    nct = j.groupBy("__c", "__t").agg(F.count("*").alias("n_ct"))
-    nc = j.groupBy("__c").agg(F.count("*").alias("n_c"))
-    nt = j.groupBy("__t").agg(F.count("*").alias("n_t"))
+    j = _id_join(pred, truth, id_col, pred_col, truth_col)
+    nct, nc, nt = _contingency(j)
     n = j.agg(F.count("*").cast("long").alias("n_records"))
     psum = nct.join(nc, "__c").agg(
         F.sum(F.col("n_ct") * F.col("n_ct") / F.col("n_c")).alias("__ps")
@@ -337,24 +384,8 @@ def adjusted_rand_index(
     numerator is 0 too, i.e. the degenerate perfect-agreement case.
     Records present in only one assignment are excluded (inner join).
     """
-    j = pred.select(F.col(id_col).alias("__id"), F.col(pred_col).alias("__c")).join(
-        truth.select(F.col(id_col).alias("__id"), F.col(truth_col).alias("__t")),
-        "__id",
-    )
-    nct = j.groupBy("__c", "__t").agg(F.count("*").alias("n_ct"))
-    nc = j.groupBy("__c").agg(F.count("*").alias("n_c"))
-    nt = j.groupBy("__t").agg(F.count("*").alias("n_t"))
-    s_ct2 = nct.agg(
-        F.sum(F.col("n_ct") * (F.col("n_ct") - 1)).cast("long").alias("s_ct2")
-    )
-    s_c2 = nc.agg(F.sum(F.col("n_c") * (F.col("n_c") - 1)).cast("long").alias("s_c2"))
-    s_t2 = nt.agg(F.sum(F.col("n_t") * (F.col("n_t") - 1)).cast("long").alias("s_t2"))
-    n = j.agg(F.count("*").cast("long").alias("n_records"))
-    row = (
-        n.crossJoin(F.broadcast(s_ct2))
-        .crossJoin(F.broadcast(s_c2))
-        .crossJoin(F.broadcast(s_t2))
-    )
+    j = _id_join(pred, truth, id_col, pred_col, truth_col)
+    row = _doubled_pair_sums(j)
     tot2 = (F.col("n_records") * (F.col("n_records") - 1)).cast("double")
     ct2 = F.col("s_ct2").cast("double")
     c2 = F.col("s_c2").cast("double")
@@ -404,24 +435,8 @@ def blanc(
     identical expression shape the SQL oracle uses, so both engines
     round the same IEEE value. One row: (n_records, links_gold,
     links_sys, links_right, blanc_c, blanc_n, blanc)."""
-    j = pred.select(F.col(id_col).alias("__id"), F.col(pred_col).alias("__c")).join(
-        truth.select(F.col(id_col).alias("__id"), F.col(truth_col).alias("__t")),
-        "__id",
-    )
-    nct = j.groupBy("__c", "__t").agg(F.count("*").alias("n_ct"))
-    nc = j.groupBy("__c").agg(F.count("*").alias("n_c"))
-    nt = j.groupBy("__t").agg(F.count("*").alias("n_t"))
-    s_ct2 = nct.agg(
-        F.sum(F.col("n_ct") * (F.col("n_ct") - 1)).cast("long").alias("s_ct2")
-    )
-    s_c2 = nc.agg(F.sum(F.col("n_c") * (F.col("n_c") - 1)).cast("long").alias("s_c2"))
-    s_t2 = nt.agg(F.sum(F.col("n_t") * (F.col("n_t") - 1)).cast("long").alias("s_t2"))
-    n = j.agg(F.count("*").cast("long").alias("n_records"))
-    row = (
-        n.crossJoin(F.broadcast(s_ct2))
-        .crossJoin(F.broadcast(s_c2))
-        .crossJoin(F.broadcast(s_t2))
-    )
+    j = _id_join(pred, truth, id_col, pred_col, truth_col)
+    row = _doubled_pair_sums(j)
     tot2 = F.col("n_records") * (F.col("n_records") - 1)
     rcx2, rc2, sc2 = F.col("s_ct2"), F.col("s_t2"), F.col("s_c2")
     rnx2 = tot2 - F.col("s_c2") - F.col("s_t2") + F.col("s_ct2")
@@ -546,13 +561,8 @@ def cluster_entropy_metrics(
     round the same IEEE doubles. Inner join on the id — both
     assignments must cover a record for it to count.
     """
-    j = pred.select(F.col(id_col).alias("__id"), F.col(pred_col).alias("__c")).join(
-        truth.select(F.col(id_col).alias("__id"), F.col(truth_col).alias("__t")),
-        "__id",
-    )
-    nct = j.groupBy("__c", "__t").agg(F.count("*").alias("n_ct"))
-    nc = j.groupBy("__c").agg(F.count("*").alias("n_c"))
-    nt = j.groupBy("__t").agg(F.count("*").alias("n_t"))
+    j = _id_join(pred, truth, id_col, pred_col, truth_col)
+    nct, nc, nt = _contingency(j)
     n = j.agg(F.count("*").cast("long").alias("n_records"))
     s_tc = nct.join(nc, "__c").agg(
         F.sum(
@@ -631,16 +641,8 @@ def muc_score(
     also 0 (nothing to link, nothing wrong) — the scikit-style
     convention, mirrored in the SQL oracle. One aggregate pass (the
     multi-countDistinct Expand), no joins, no pairwise blowup."""
-    j = pred.select(F.col(id_col).alias("__id"), F.col(pred_col).alias("__c")).join(
-        truth.select(F.col(id_col).alias("__id"), F.col(truth_col).alias("__t")),
-        "__id",
-    )
-    agg = j.agg(
-        F.count(F.lit(1)).cast("long").alias("n_records"),
-        F.countDistinct("__c").cast("long").alias("n_pred_clusters"),
-        F.countDistinct("__t").cast("long").alias("n_truth_clusters"),
-        F.countDistinct("__c", "__t").cast("long").alias("n_overlap_cells"),
-    )
+    j = _id_join(pred, truth, id_col, pred_col, truth_col)
+    agg = _distinct_counts(j)
     num = (F.col("n_records") - F.col("n_overlap_cells")).cast("double")
     den_r = (F.col("n_records") - F.col("n_truth_clusters")).cast("double")
     den_p = (F.col("n_records") - F.col("n_pred_clusters")).cast("double")
@@ -689,20 +691,8 @@ def generalized_merge_distance(
     singletons → gmd is 0 too). Same one-pass multi-countDistinct
     aggregate as :func:`muc_score` — no joins beyond the id join, no
     pairwise blowup, scale-safe at any cluster-size skew."""
-    j = pred.select(
-        F.col(id_col).alias("__id"), F.col(pred_col).alias("__c")
-    ).join(
-        truth.select(
-            F.col(id_col).alias("__id"), F.col(truth_col).alias("__t")
-        ),
-        "__id",
-    )
-    agg = j.agg(
-        F.count(F.lit(1)).cast("long").alias("n_records"),
-        F.countDistinct("__c").cast("long").alias("n_pred_clusters"),
-        F.countDistinct("__t").cast("long").alias("n_truth_clusters"),
-        F.countDistinct("__c", "__t").cast("long").alias("n_overlap_cells"),
-    )
+    j = _id_join(pred, truth, id_col, pred_col, truth_col)
+    agg = _distinct_counts(j)
     splits = F.col("n_overlap_cells") - F.col("n_pred_clusters")
     merges = F.col("n_overlap_cells") - F.col("n_truth_clusters")
     worst = (F.col("n_records") - F.col("n_pred_clusters")) + (
@@ -756,17 +746,8 @@ def exact_cluster_match(
     precision/recall 1.0 when the other is empty too (nothing to get
     wrong), else 0.0 — mirrored in the SQL oracle.
     """
-    j = pred.select(
-        F.col(id_col).alias("__id"), F.col(pred_col).alias("__c")
-    ).join(
-        truth.select(
-            F.col(id_col).alias("__id"), F.col(truth_col).alias("__t")
-        ),
-        "__id",
-    )
-    cells = j.groupBy("__c", "__t").agg(F.count(F.lit(1)).alias("n_ct"))
-    nc = j.groupBy("__c").agg(F.count(F.lit(1)).alias("n_c"))
-    nt = j.groupBy("__t").agg(F.count(F.lit(1)).alias("n_t"))
+    j = _id_join(pred, truth, id_col, pred_col, truth_col)
+    cells, nc, nt = _contingency(j)
     agg = (
         cells.join(nc, "__c")
         .join(nt, "__t")
