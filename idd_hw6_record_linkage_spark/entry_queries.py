@@ -231,6 +231,17 @@ def _stage(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
+def _snippet_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The staged ``(doc_id, s, block_key)`` table of the blocked
+    string-comparator queries: ``s`` is the 40-char ASCII snippet
+    (``''`` for NULL text)."""
+    return _stage(_docs(spark, sf_dir).select(
+        "doc_id",
+        F.coalesce(_snippet(40), F.lit("")).alias("s"),
+        _block_key().alias("block_key"),
+    ))
+
+
 _SRC_NORM_SQL = "nullif(regexp_replace(lower(trim(source)), '[^a-z0-9]', '', 'g'), '')"
 _BLOCK_KEY_SQL = (
     f"(CASE WHEN {_SRC_NORM_SQL} IS NULL OR lang IS NULL THEN NULL "
@@ -660,11 +671,7 @@ def rl_weighted_jaccard(spark, sf_dir):
         weighted_jaccard_for_pairs,
     )
 
-    docs = _stage(_docs(spark, sf_dir).select(
-        "doc_id",
-        F.coalesce(_snippet(40), F.lit("")).alias("s"),
-        _block_key().alias("block_key"),
-    ))
+    docs = _snippet_docs(spark, sf_dir)
     n_docs = docs.count()
     pairs = blocking.self_pair_join(docs, "doc_id").select("id_l", "id_r")
     return weighted_jaccard_for_pairs(
@@ -783,11 +790,7 @@ def rl_jaro_duck(spark, sf_dir):
         sim_jaro_winkler_rf,
     )
 
-    docs = _stage(_docs(spark, sf_dir).select(
-        "doc_id",
-        F.coalesce(_snippet(40), F.lit("")).alias("s"),
-        _block_key().alias("block_key"),
-    ))
+    docs = _snippet_docs(spark, sf_dir)
     return (
         blocking.self_pair_join(docs, "doc_id", ["s"])
         .select(
@@ -839,11 +842,7 @@ def rl_nw_unit(spark, sf_dir):
         nw_unit_distance,
     )
 
-    docs = _stage(_docs(spark, sf_dir).select(
-        "doc_id",
-        F.coalesce(_snippet(40), F.lit("")).alias("s"),
-        _block_key().alias("block_key"),
-    ))
+    docs = _snippet_docs(spark, sf_dir)
     denom = F.greatest(F.length("s_l"), F.length("s_r"), F.lit(1))
     return (
         blocking.self_pair_join(docs, "doc_id", ["s"])
@@ -895,11 +894,7 @@ def rl_bag_distance(spark, sf_dir):
         bag_distance_fixed_alphabet,
     )
 
-    docs = _stage(_docs(spark, sf_dir).select(
-        "doc_id",
-        F.coalesce(_snippet(40), F.lit("")).alias("s"),
-        _block_key().alias("block_key"),
-    ))
+    docs = _snippet_docs(spark, sf_dir)
     denom = F.greatest(F.length("s_l"), F.length("s_r"), F.lit(1))
     # The fixed-alphabet codegen form is exact here because the basis
     # is regex-sanitized to [a-z0-9 ] (see bag.py — pytest-pinned
@@ -983,11 +978,7 @@ def rl_lcs(spark, sf_dir):
     enumeration replicated in DuckDB generate_series/list lambdas."""
     from idd_hw6_record_linkage_spark.functions.lcs import lcs_len
 
-    docs = _stage(_docs(spark, sf_dir).select(
-        "doc_id",
-        F.coalesce(_snippet(40), F.lit("")).alias("s"),
-        _block_key().alias("block_key"),
-    ))
+    docs = _snippet_docs(spark, sf_dir)
     denom = F.greatest(F.length("s_l"), F.length("s_r"), F.lit(1))
     return (
         blocking.self_pair_join(docs, "doc_id", ["s"])
@@ -1057,11 +1048,7 @@ def rl_sw_unit(spark, sf_dir):
         sim_sw_unit,
     )
 
-    docs = _stage(_docs(spark, sf_dir).select(
-        "doc_id",
-        F.coalesce(_snippet(40), F.lit("")).alias("s"),
-        _block_key().alias("block_key"),
-    ))
+    docs = _snippet_docs(spark, sf_dir)
     return (
         blocking.self_pair_join(docs, "doc_id", ["s"])
         .select(
@@ -1129,11 +1116,7 @@ def rl_editex_unit(spark, sf_dir):
         editex_unit_distance,
     )
 
-    docs = _stage(_docs(spark, sf_dir).select(
-        "doc_id",
-        F.coalesce(_snippet(40), F.lit("")).alias("s"),
-        _block_key().alias("block_key"),
-    ))
+    docs = _snippet_docs(spark, sf_dir)
     return (
         blocking.self_pair_join(docs, "doc_id", ["s"])
         .select(
@@ -1174,11 +1157,7 @@ def rl_editex_gate(spark, sf_dir):
         editex_distance,
     )
 
-    docs = _stage(_docs(spark, sf_dir).select(
-        "doc_id",
-        F.coalesce(_snippet(40), F.lit("")).alias("s"),
-        _block_key().alias("block_key"),
-    ))
+    docs = _snippet_docs(spark, sf_dir)
     pairs = (
         blocking.self_pair_join(docs, "doc_id", ["s"])
         .select(

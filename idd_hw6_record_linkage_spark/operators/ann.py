@@ -27,6 +27,8 @@ from pyspark.sql.types import ArrayType, StringType
 from pyspark.sql.window import Window
 
 from idd_hw6_record_linkage_spark.functions.similarity import sim_cosine_arrays
+from idd_hw6_record_linkage_spark.operators import blocking
+from idd_hw6_record_linkage_spark.operators.dedup import quantized_vec_basis
 
 _PLANE_CACHE: dict[tuple[int, int, int, int], np.ndarray] = {}
 
@@ -119,46 +121,46 @@ def brute_force_topk(
     )
 
 
-def _cap_corpus_buckets(
+def _bucket_topk(
     ck: DataFrame,
     qk: DataFrame,
+    k: int,
     id_col: str,
     query_id_col: str,
-    max_bucket_size: int,
-) -> tuple[DataFrame, DataFrame]:
-    """Split oversized CORPUS buckets, applying the same split to the
-    query side so the bucket equi-join stays consistent (the ANN
-    analogue of blocking.cap_blocks_pair).
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """Corpus ``(id_col, c_vec, bucket)`` ⋈ queries ``(query_id_col,
+    q_vec, bucket)`` on bucket → exact cosine → top-k per query
+    (deterministic ties: sim desc, id asc).
 
-    Tier 1 splits on the quantized-vector basis — a query and its true
-    near neighbors share the basis, so they land in the same sub-bucket
-    and the cap costs almost no recall. Tier 2 catches basis collapse
-    (a hot bucket of near-identical vectors): corpus rows re-split by
-    record id, queries by query id, so each query probes a 1/n_sub
-    uniform sample of the hot bucket — bounded candidates, documented
-    recall trade, same 4x-slack rationale as cap_blocks."""
-    from idd_hw6_record_linkage_spark.operators import blocking as B
-    from idd_hw6_record_linkage_spark.operators.dedup import quantized_vec_basis
-
-    ckb = ck.withColumnRenamed("bucket", "block_key")
-    qkb = qk.withColumnRenamed("bucket", "block_key")
-    sizes = ckb.groupBy("block_key").agg(F.count("*").alias("n"))
-    big = B._oversized(sizes, max_bucket_size)
-    ckb = B._apply_salt(
-        ckb, big, F.xxhash64(quantized_vec_basis("c_vec")), flag="_salted"
-    )
-    qkb = B._apply_salt(qkb, big, F.xxhash64(quantized_vec_basis("q_vec")))
-    sizes2 = (
-        ckb.where(F.col("_salted"))
-        .groupBy("block_key")
-        .agg(F.count("*").alias("n"))
-    )
-    big2 = B._oversized(sizes2, 4 * max_bucket_size, target=max_bucket_size)
-    ckb = B._apply_salt(ckb, big2, F.xxhash64(id_col)).drop("_salted")
-    qkb = B._apply_salt(qkb, big2, F.xxhash64(query_id_col))
+    ``max_bucket_size`` splits oversized CORPUS buckets with one
+    :func:`blocking.cap_plan` applied to both sides, so the bucket
+    equi-join stays consistent. Tier 1 splits on the quantized-vector
+    basis — a query and its true near neighbors share the basis, so
+    they land in the same sub-bucket and the cap costs almost no
+    recall. Tier 2 catches basis collapse (a hot bucket of
+    near-identical vectors): corpus rows re-split by record id, queries
+    by query id, so each query probes a 1/n_sub uniform sample of the
+    hot bucket — bounded candidates, documented recall trade."""
+    if max_bucket_size is not None:
+        # localCheckpoint: the size count + salt join + candidate join
+        # rescan the corpus key table (bucketing UDF) several times.
+        ck = ck.localCheckpoint(eager=True).withColumnRenamed("bucket", "block_key")
+        qk = qk.withColumnRenamed("bucket", "block_key")
+        c_basis = quantized_vec_basis("c_vec")
+        plan = blocking.cap_plan([ck], max_bucket_size, c_basis)
+        ck = blocking.apply_cap(ck, plan, c_basis, id_col).withColumnRenamed(
+            "block_key", "bucket")
+        qk = blocking.apply_cap(
+            qk, plan, quantized_vec_basis("q_vec"), query_id_col
+        ).withColumnRenamed("block_key", "bucket")
+    cands = ck.join(qk, "bucket").dropDuplicates([query_id_col, id_col])
+    scored = cands.withColumn("cosine", sim_cosine_arrays("q_vec", "c_vec"))
+    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
     return (
-        ckb.withColumnRenamed("block_key", "bucket"),
-        qkb.withColumnRenamed("block_key", "bucket"),
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(query_id_col, id_col, "cosine", "rank")
     )
 
 
@@ -288,7 +290,7 @@ def ivf_topk(
     Pass precomputed ``centroids`` to reuse a codebook across calls
     (the build-once / query-many production shape). ``max_bucket_size``
     caps hot lists exactly as in lsh_topk (opt-in, same
-    _cap_corpus_buckets recall trade).
+    _bucket_topk recall trade).
     """
     if centroids is None:
         centroids = train_ivf_centroids(
@@ -318,19 +320,7 @@ def ivf_topk(
         F.col(vec_col).alias("q_vec"),
         F.explode(_probes(F.col(vec_col), F.lit(nprobe))).alias("bucket"),
     )
-    if max_bucket_size is not None:
-        ck = ck.localCheckpoint(eager=True)
-        ck, qk = _cap_corpus_buckets(
-            ck, qk, id_col, query_id_col, max_bucket_size
-        )
-    cands = ck.join(qk, "bucket").dropDuplicates([query_id_col, id_col])
-    scored = cands.withColumn("cosine", sim_cosine_arrays("q_vec", "c_vec"))
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
+    return _bucket_topk(ck, qk, k, id_col, query_id_col, max_bucket_size)
 
 
 def lsh_topk(
@@ -360,7 +350,7 @@ def lsh_topk(
     ``max_bucket_size`` caps corpus bucket sizes: with only
     2^num_planes buckets per table, a clustered corpus concentrates in
     a few hot buckets and per-query candidate cost degenerates to
-    brute force. Oversized buckets split via _cap_corpus_buckets
+    brute force. Oversized buckets split via _bucket_topk
     (quantized-vector basis, id-salt fallback — the tier-2 id-salt
     means a query probes a 1/n_sub sample of a collapsed hot bucket, a
     documented recall trade). The cap is OPT-IN (default ``None`` =
@@ -412,18 +402,4 @@ def lsh_topk(
 
     ck = keyed(corpus, id_col, 1).withColumnRenamed("__v", "c_vec")
     qk = keyed(queries, query_id_col, num_probes).withColumnRenamed("__v", "q_vec")
-    if max_bucket_size is not None:
-        # localCheckpoint: the size count + salt join + candidate join
-        # rescan the corpus key table (hyperplane UDF) several times.
-        ck = ck.localCheckpoint(eager=True)
-        ck, qk = _cap_corpus_buckets(
-            ck, qk, id_col, query_id_col, max_bucket_size
-        )
-    cands = ck.join(qk, "bucket").dropDuplicates([query_id_col, id_col])
-    scored = cands.withColumn("cosine", sim_cosine_arrays("q_vec", "c_vec"))
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
+    return _bucket_topk(ck, qk, k, id_col, query_id_col, max_bucket_size)

@@ -15,9 +15,17 @@ Skew controls (SURVEY §4 — absent in the reference, mandatory at web
 scale where mega-domains create hot keys):
 
 - **block-size cap**: blocks larger than ``max_block_size`` are split
-  deterministically into sub-blocks by ``pmod(xxhash64(id), n_sub)``.
-  This bounds the quadratic pair blowup per key. The cap changes the
-  candidate set (documented, deterministic, recorded in stats).
+  deterministically into sub-blocks by ``pmod(xxhash64(basis), n_sub)``
+  — a content basis first, then the record id for sub-blocks still over
+  4x the cap. This bounds the quadratic pair blowup per key. The cap
+  changes the candidate set (documented, deterministic, recorded in
+  stats). This module alone owns it: :func:`cap_plan` sizes the blocks
+  into one ``(block_key, n_sub, tier)`` plan and :func:`apply_cap`
+  salts any key table with it, given that table's content and id
+  basis. Its three users are the linkage/dedup key tables
+  (:func:`cap_blocks`, ``plans.pipeline``), the ANN corpus and query
+  buckets (``operators.ann``) and the streaming key index and its
+  arrivals (``streaming.ingest``).
 - **AQE skew-join** handles residual imbalance at runtime.
 """
 
@@ -48,66 +56,73 @@ def key_table(df: DataFrame, id_col: str, key_expr: Column, pass_name: str,
     return keys.withColumn("pass", F.lit(pass_name))
 
 
-def _oversized(sizes: DataFrame, threshold: int, target: int | None = None) -> DataFrame:
-    """Blocks with n > threshold, each with n_sub = ceil(n / target)
-    sub-blocks (target defaults to threshold)."""
+def _oversized(sizes: DataFrame, threshold: int, target: int) -> DataFrame:
+    """Blocks with n > threshold, each with n_sub = ceil(n / target)."""
     return sizes.where(F.col("n") > threshold).select(
-        "block_key",
-        F.ceil(F.col("n") / (target or threshold)).cast("int").alias("n_sub"),
+        "block_key", F.ceil(F.col("n") / target).cast("int").alias("n_sub"),
     )
 
 
-def _apply_salt(keys: DataFrame, big: DataFrame, basis: Column,
-                flag: str | None = None) -> DataFrame:
-    """key -> key#pmod(xxhash64(basis), n_sub) for keys in ``big``;
-    broadcast of the (small) oversized-key list so normal keys take the
-    fast path untouched. ``flag`` optionally marks rows that were salted."""
-    out = keys.join(F.broadcast(big), "block_key", "left")
-    out = out.withColumn(
-        "block_key",
-        F.when(
-            F.col("n_sub").isNotNull(),
-            F.concat_ws("#", "block_key", F.pmod(basis, F.col("n_sub")).cast("string")),
-        ).otherwise(F.col("block_key")),
-    )
-    if flag is not None:
-        out = out.withColumn(flag, F.col("n_sub").isNotNull())
-    return out.drop("n_sub")
+def _salted_key(basis: Column | str) -> Column:
+    """key#pmod(xxhash64(basis), n_sub) where a plan row matched, else key."""
+    return F.when(
+        F.col("n_sub").isNotNull(),
+        F.concat_ws("#", "block_key", F.pmod(F.xxhash64(basis), F.col("n_sub")).cast("string")),
+    ).otherwise(F.col("block_key"))
 
 
-def _block_sizes(tables: list[DataFrame]) -> DataFrame:
+def _block_sizes(tables: Sequence[DataFrame]) -> DataFrame:
     """(block_key, n) over the union of the key tables."""
     keys = reduce(DataFrame.unionAll, [t.select("block_key") for t in tables])
     return keys.groupBy("block_key").agg(F.count("*").alias("n"))
 
 
-def _cap_blocks(tables: list[DataFrame], max_block_size: int,
-                salt_col: str | None) -> list[DataFrame]:
-    """The block-size cap over one or more key tables: ONE oversized-
-    block list and ONE n_sub modulus over their union, applied
-    identically to every table (see :func:`cap_blocks` for the salting
-    tiers and :func:`cap_blocks_pair` for why the list is shared)."""
-    big = _oversized(_block_sizes(tables), max_block_size)
-    basis = F.xxhash64(salt_col) if salt_col else F.xxhash64("id")
-    salted = [_apply_salt(t, big, basis, flag="_salted") for t in tables]
-    if salt_col is None:
-        # id basis is already max-entropy; one tier suffices.
-        return [s.drop("_salted") for s in salted]
-    big2 = _oversized(
-        _block_sizes([s.where(F.col("_salted")) for s in salted]),
-        4 * max_block_size,
-        target=max_block_size,
-    )
-    # The second tier salts by record id: across sources, ids land in
-    # arbitrary sub-blocks, so residual oversized blocks trade cross-
-    # source recall for the hard quadratic bound.
-    return [_apply_salt(s, big2, F.xxhash64("id")).drop("_salted") for s in salted]
+def cap_plan(tables: Sequence[DataFrame], max_block_size: int,
+             basis: Column | str | None) -> DataFrame:
+    """The block-size cap plan ``(block_key, n_sub, tier)``, sized over
+    ``tables`` only: tier 1 lists the blocks over ``max_block_size``;
+    tier 2 lists the tier-1 sub-blocks (salted by ``basis``, a content
+    column of the sizing tables) still over 4x the cap. ``basis=None``
+    salts by record id in one tier (id is already max-entropy).
+
+    One plan serves every key table whose keys must meet in a join —
+    both linkage sources, ANN corpus and queries, the streaming index
+    and its arrivals: capping them from different lists would salt a
+    hot key on one side only and silently drop its candidates. See
+    :func:`cap_blocks` for why two tiers."""
+    tier1 = _oversized(_block_sizes(tables), max_block_size, max_block_size)
+    plan = tier1.withColumn("tier", F.lit(1))
+    if basis is None:
+        return plan
+    salted = [t.join(F.broadcast(tier1), "block_key")
+              .withColumn("block_key", _salted_key(basis)) for t in tables]
+    tier2 = _oversized(_block_sizes(salted), 4 * max_block_size, max_block_size)
+    return plan.unionByName(tier2.withColumn("tier", F.lit(2)))
+
+
+def apply_cap(keys: DataFrame, plan: DataFrame, basis: Column | str,
+              id_basis: Column | str) -> DataFrame:
+    """Salt ``keys`` with a :func:`cap_plan`: tier-1 blocks become
+    ``key#pmod(xxhash64(basis), n_sub)``, then tier-2 sub-blocks
+    ``…#pmod(xxhash64(id_basis), n_sub)``. ``basis``/``id_basis`` are
+    this table's content and id columns (the sizing tables' own, or the
+    matching columns of a table probed against them). Across tables,
+    ids land in arbitrary tier-2 sub-blocks: a collapsed block trades
+    cross-table recall for the hard quadratic bound. Each tier is a
+    left join against the broadcast plan rows, so keys outside the plan
+    take the fast path untouched."""
+    for tier, b in ((1, basis), (2, id_basis)):
+        subs = plan.where(F.col("tier") == tier).drop("tier")
+        keys = (keys.join(F.broadcast(subs), "block_key", "left")
+                .withColumn("block_key", _salted_key(b)).drop("n_sub"))
+    return keys
 
 
 def cap_blocks(keys: DataFrame, max_block_size: int,
                salt_col: str | None = None) -> DataFrame:
     """Deterministically split oversized blocks into ~max_block_size
-    sub-blocks: key -> key#salt with salt = pmod(xxhash64(basis), n_sub).
+    sub-blocks: key -> key#salt with salt = pmod(xxhash64(basis), n_sub)
+    (:func:`cap_plan` over ``keys``, then :func:`apply_cap`).
 
     ``salt_col`` is the *salt basis*: when it is a content-derived
     column (e.g. a title-prefix), records with similar content land in
@@ -129,28 +144,14 @@ def cap_blocks(keys: DataFrame, max_block_size: int,
     collapse (the whole block in one slot overshoots by ~n_sub x):
     residual sub-blocks are bounded by 4x cap, never by the data.
     """
-    return _cap_blocks([keys], max_block_size, salt_col)[0]
+    plan = cap_plan([keys], max_block_size, salt_col)
+    return apply_cap(keys, plan, salt_col or "id", "id")
 
 
-def cap_blocks_pair(
-    keys_l: DataFrame, keys_r: DataFrame, max_block_size: int,
-    salt_col: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Cross-source variant of :func:`cap_blocks`: ONE oversized-block
-    list and ONE n_sub modulus computed over the union of both sources'
-    key tables, applied identically to both sides.
-
-    Capping each side independently is wrong for linkage: a block over
-    the cap on only one side (or with different moduli) gets salted
-    keys ('key#0..n') on that side and plain 'key' on the other, so the
-    cross-source equi-join silently drops candidates for exactly the
-    hot blocks the cap targets.
-    """
-    return tuple(_cap_blocks([keys_l, keys_r], max_block_size, salt_col))
-
-
-def _pair_side(df: DataFrame, id_col: str, cols, on, sfx: str) -> DataFrame:
-    """``id{sfx}``, ``{c}{sfx}`` per carried column, then the key(s)."""
+def pair_side(df: DataFrame, id_col: str, cols, on, sfx: str) -> DataFrame:
+    """One side of a pair table: ``id{sfx}``, ``{c}{sfx}`` per carried
+    column, then the key(s) — for joins the builders below do not cover
+    (the streaming stream-static key join)."""
     return df.select(F.col(id_col).alias("id" + sfx),
                      *(F.col(c).alias(c + sfx) for c in cols), *on)
 
@@ -161,8 +162,8 @@ def cross_pair_join(left: DataFrame, right: DataFrame, id_col: str,
     """Equi-join on ``on`` (a column or a list) → ``on``, ``id_l, {c}_l…, id_r,
     {c}_r…``: NULL keys never match, one row per shared key, no id order."""
     on = [on] if isinstance(on, str) else list(on)
-    return _pair_side(left, id_col, cols, on, "_l").join(
-        _pair_side(right, id_col, cols, on, "_r"), on)
+    return pair_side(left, id_col, cols, on, "_l").join(
+        pair_side(right, id_col, cols, on, "_r"), on)
 
 
 def self_pair_join(df: DataFrame, id_col: str, cols: Sequence[str] = (),
@@ -181,8 +182,8 @@ def attach_pair_attributes(pairs: DataFrame, records: DataFrame,
     resolve against ``records``, right ids against ``records_r``
     (default ``records``). ``how="inner"`` drops a pair whose id has no
     record row; ``how="left"`` keeps it with NULL attributes."""
-    left = _pair_side(records, id_col, cols, (), "_l")
-    right = _pair_side(records if records_r is None else records_r, id_col, cols, (), "_r")
+    left = pair_side(records, id_col, cols, (), "_l")
+    right = pair_side(records if records_r is None else records_r, id_col, cols, (), "_r")
     return pairs.join(left, "id_l", how).join(right, "id_r", how)
 
 

@@ -144,8 +144,8 @@ class CorpusPipeline(StagedPlan):
                 .drop("__reject")
             )
 
-        n_in = docs.count()
-        return self._run_stage("quality", build, rows_in=n_in)
+        return self._run_stage("quality", build,
+                               counts=lambda out: {"rows_in": docs.count()})
 
     def pii(self, docs: DataFrame) -> DataFrame:
         if not self.cfg.redact_pii:
@@ -205,8 +205,8 @@ class CorpusPipeline(StagedPlan):
                 )
                 return docs.join(keep, cfg.id_col, "leftsemi")
 
-        n_in = docs.count()
-        return self._run_stage("dedup", build, rows_in=n_in)
+        return self._run_stage("dedup", build,
+                               counts=lambda out: {"rows_in": docs.count()})
 
     def sample(self, docs: DataFrame) -> DataFrame:
         if self.cfg.sample_rates is None:

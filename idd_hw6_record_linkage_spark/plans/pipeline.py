@@ -311,14 +311,13 @@ def _link(sources: list[DataFrame], cfg: "PipelineConfig",
     def build_pairs() -> DataFrame:
         # Fan-out points: raw keys feed the oversize count + the cap
         # join; capped keys feed both sides of the pair join. One cap
-        # over every source's keys: capping sources independently would
+        # plan over every source's keys: capping sources independently would
         # salt a hot key on one side only and drop its cross-source
         # candidates.
         raw = [store._cache(block_keys_plan(r, cfg)) for r in recs]
-        keys = [
-            store._cache(k)
-            for k in blocking._cap_blocks(raw, cfg.max_block_size, "salt_basis")
-        ]
+        plan = blocking.cap_plan(raw, cfg.max_block_size, "salt_basis")
+        keys = [store._cache(blocking.apply_cap(k, plan, "salt_basis", "id"))
+                for k in raw]
 
         def block_stats() -> dict:
             # Blocking quality per run, like the reference's blocking

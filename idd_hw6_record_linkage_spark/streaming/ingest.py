@@ -84,25 +84,23 @@ def build_key_index(records: DataFrame,
                     cfg: PipelineConfig | None = None,
                     ) -> tuple[DataFrame, DataFrame]:
     """Historical key index for incremental linkage: the batch corpus's
-    blocking keys with oversized blocks salted (content basis).
+    blocking keys capped exactly as the batch path caps them (both
+    tiers of :func:`blocking.cap_plan`).
 
-    Returns ``(keys, oversized)``. BOTH must be reused by the stream
-    side: salting the sides from different oversized-block lists (or
-    not salting the stream side at all) silently drops candidates for
-    exactly the hot keys the cap targets — the same invariant
-    blocking.cap_blocks_pair enforces for two-source batch linkage.
-    Materialize both once (parquet/persist); they are static per index
-    build."""
+    Returns ``(keys, plan)``. BOTH must be reused by the stream side:
+    salting the sides from different cap plans (or not salting the
+    stream side at all) silently drops candidates for exactly the hot
+    keys the cap targets — the same invariant the one plan enforces
+    for two-source batch linkage. Materialize both once
+    (parquet/persist); they are static per index build."""
     cfg = cfg or PipelineConfig(workdir="/tmp/_unused_stream")
     raw = block_keys_plan(records, cfg)
-    sizes = raw.groupBy("block_key").agg(F.count("*").alias("n"))
-    big = blocking._oversized(sizes, cfg.max_block_size)
-    keys = blocking._apply_salt(raw, big, F.xxhash64("salt_basis"))
-    return keys, big
+    plan = blocking.cap_plan([raw], cfg.max_block_size, "salt_basis")
+    return blocking.apply_cap(raw, plan, "salt_basis", "id"), plan
 
 
 def _incremental_pairs(pages_stream: DataFrame, index_keys: DataFrame,
-                       oversized: DataFrame, cfg: PipelineConfig | None,
+                       plan: DataFrame, cfg: PipelineConfig | None,
                        watermark: str | None, cols: Sequence[str] = ()) -> DataFrame:
     """The salted stream-static key join behind :func:`incremental_candidates`
     and :func:`incremental_scored`: ``(id_l, {c}_l…, id_r)`` per new
@@ -113,9 +111,9 @@ def _incremental_pairs(pages_stream: DataFrame, index_keys: DataFrame,
     wm = ["warc_ts"] if watermark is not None else []
     skeys = block_keys_plan(normalize_plan(pages_stream), cfg,
                             extra_cols=[*cols, *wm])
-    skeys = blocking._apply_salt(skeys, oversized, F.xxhash64("salt_basis"))
-    s = blocking._pair_side(skeys, "id", cols, ["block_key", *wm], "_l")
-    h = blocking._pair_side(index_keys, "id", (), ["block_key"], "_r")
+    skeys = blocking.apply_cap(skeys, plan, "salt_basis", "id")
+    s = blocking.pair_side(skeys, "id", cols, ["block_key", *wm], "_l")
+    h = blocking.pair_side(index_keys, "id", (), ["block_key"], "_r")
     pairs = (
         s.join(h, "block_key")
         .where(F.col("id_l") != F.col("id_r"))
@@ -132,12 +130,12 @@ def _incremental_pairs(pages_stream: DataFrame, index_keys: DataFrame,
 
 def incremental_candidates(pages_stream: DataFrame,
                            index_keys: DataFrame,
-                           oversized: DataFrame,
+                           plan: DataFrame,
                            cfg: PipelineConfig | None = None,
                            watermark: str | None = None) -> DataFrame:
     """Stream-batch join (the seam the batch-only reference lacks):
     each micro-batch's pages are normalized, keyed, salted with the
-    SAME oversized-block list as the historical index, and equi-joined
+    SAME cap plan as the historical index, and equi-joined
     against the static index — emitting exactly the new-vs-historical
     candidate pairs ``(id_new, id_old)`` for downstream scoring.
 
@@ -159,13 +157,13 @@ def incremental_candidates(pages_stream: DataFrame,
       horizon — downstream sinks treat (id_new, id_old) as the
       idempotency key). State is bounded by pairs-per-window instead
       of pairs-ever."""
-    pairs = _incremental_pairs(pages_stream, index_keys, oversized, cfg, watermark)
+    pairs = _incremental_pairs(pages_stream, index_keys, plan, cfg, watermark)
     return pairs.select(F.col("id_l").alias("id_new"), F.col("id_r").alias("id_old"))
 
 
 def incremental_scored(pages_stream: DataFrame,
                        index_keys: DataFrame,
-                       oversized: DataFrame,
+                       plan: DataFrame,
                        records: DataFrame,
                        cfg: PipelineConfig | None = None,
                        watermark: str | None = None) -> DataFrame:
@@ -193,9 +191,9 @@ def incremental_scored(pages_stream: DataFrame,
     the horizon)."""
     cfg = cfg or PipelineConfig(workdir="/tmp/_unused_stream")
     cols = sorted({c.col for c in cfg.comparator_config.comparators})
-    pairs = _incremental_pairs(pages_stream, index_keys, oversized, cfg,
+    pairs = _incremental_pairs(pages_stream, index_keys, plan, cfg,
                                watermark, cols)
-    hist = blocking._pair_side(records, "url", cols, (), "_r")
+    hist = blocking.pair_side(records, "url", cols, (), "_r")
     feats = scoring.compute_features_enriched(pairs.join(hist, "id_r"),
                                               cfg.comparator_config)
     return scoring.score(feats, cfg.comparator_config)

@@ -4,7 +4,10 @@ flagship's pairs and score stages, one file each, for plan-parity diffs.
 Each ``<out_dir>/<name>.txt`` holds ``explain("formatted")`` of
 ``queries()[name](spark, sf_dir)``; ``run_in_memory.pairs.txt`` and
 ``run_in_memory.score.txt`` hold the cached pairs and score stages of
-``run_in_memory`` over a fixed 200-entity generated corpus. Expression
+``run_in_memory`` over a fixed 200-entity generated corpus, and
+``link_sources.pairs.txt`` the pairs stage of ``link_sources`` over the
+same corpus split in two by url hash (the one block cap taken over two
+key tables). Expression
 ids (``#123``), RDD ids (``[123]``) and plan ids are masked, so two
 dumps of the same plans are byte-identical and parity between two
 commits is
@@ -50,8 +53,10 @@ def main() -> None:
         sys.exit(__doc__.rsplit("Usage: ", 1)[1].strip())
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
 
+    from pyspark.sql import functions as F
+
     import __spark_entry__ as entry
-    from idd_hw6_record_linkage_spark.plans.pipeline import run_in_memory
+    from idd_hw6_record_linkage_spark.plans.pipeline import link_sources, run_in_memory
     from idd_hw6_record_linkage_spark.session import get_spark
     from idd_hw6_record_linkage_spark.sources.generator import generate_raw
 
@@ -73,6 +78,10 @@ def main() -> None:
     res = run_in_memory(spark, pages)
     write("run_in_memory.pairs", formatted_plan(res["pairs"]))
     write("run_in_memory.score", formatted_plan(res["scored"]))
+    res["release"]()
+    half = F.xxhash64("url") % 2 == 0
+    res = link_sources(spark, pages.where(half), pages.where(~half))
+    write("link_sources.pairs", formatted_plan(res["pairs"]))
     res["release"]()
     spark.stop()
 

@@ -69,7 +69,8 @@ def test_cap_blocks_pair_keeps_cross_source_pairs(spark):
         [(f"r{i:04d}", "K", f"t{i}") for i in range(30)],
         "id string, block_key string, salt_basis string",
     )
-    out_l, out_r = blocking.cap_blocks_pair(left, right, 50, salt_col="salt_basis")
+    plan = blocking.cap_plan([left, right], 50, "salt_basis")
+    out_l, out_r = (blocking.apply_cap(k, plan, "salt_basis", "id") for k in (left, right))
     pairs = blocking.candidate_pairs_cross(out_l, out_r)
     # every right record must still meet its 10 same-basis left
     # partners (the candidate set may be a superset: unrelated bases

@@ -6,6 +6,7 @@ completed stage while reproducing the same corpus."""
 from __future__ import annotations
 
 import datetime
+import sys
 
 import pytest
 
@@ -129,7 +130,7 @@ def test_metrics_rows_per_stage(result):
     assert m.where("stage = 'pack' AND partition_id >= 0").count() >= 1
 
 
-def test_resume_skips_and_reproduces(spark, tmp_path):
+def test_resume_skips_and_reproduces(spark, tmp_path, monkeypatch):
     wd = str(tmp_path / "wd2")
     kw = dict(
         boilerplate_min_docs=3,
@@ -141,18 +142,38 @@ def test_resume_skips_and_reproduces(spark, tmp_path):
         (r.url, r.text, r.shard_id)
         for r in first["corpus"].select("url", "text", "shard_id").collect()
     )
-    n_metrics_1 = first["metrics"].count()
+    metrics1 = first["metrics"].collect()
+    # quality/dedup record their input size on the completion row
+    rows_in = {r.stage: r.rows_in for r in metrics1 if r.partition_id == -1}
+    assert rows_in["quality"] == first["stripped"].count()
+    assert rows_in["dedup"] == first["redacted"].count()
 
+    # a resumed stage is only read back: the pipeline starts no count
+    # job of its own (rows_in is computed when a stage is built)
+    pipeline_counts = []
+    df_cls = type(first["corpus"])
+    real_count = df_cls.count
+
+    def spy_count(self):
+        caller = sys._getframe(1).f_code.co_filename
+        if caller.endswith("corpus_pipeline.py"):
+            pipeline_counts.append(caller)
+        return real_count(self)
+
+    monkeypatch.setattr(df_cls, "count", spy_count)
     second = clean_corpus(
         spark, _docs(spark), workdir=wd, resume=True, **kw
     )
+    monkeypatch.undo()
+    assert pipeline_counts == []
     rows2 = sorted(
         (r.url, r.text, r.shard_id)
         for r in second["corpus"].select("url", "text", "shard_id").collect()
     )
     assert rows1 == rows2
-    # every stage was skipped: no new completion/lineage rows appended
-    assert second["metrics"].count() == n_metrics_1
+    # every stage was skipped: no new completion/lineage rows appended,
+    # and the rows already there are unchanged
+    assert sorted(second["metrics"].collect()) == sorted(metrics1)
 
 
 def test_minhash_mode_collapses_near_dups(spark, tmp_path):

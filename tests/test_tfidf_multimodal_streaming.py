@@ -110,9 +110,8 @@ def test_incremental_candidates_stream_batch_join(spark, tmp_path):
     big = big.cache()
 
     def expected(new_pages):
-        skeys = blocking._apply_salt(
-            block_keys_plan(normalize_plan(new_pages), cfg), big,
-            F.xxhash64("salt_basis"),
+        skeys = blocking.apply_cap(
+            block_keys_plan(normalize_plan(new_pages), cfg), big, "salt_basis", "id",
         )
         out = (
             skeys.select(F.col("id").alias("id_new"), "block_key")
@@ -178,9 +177,8 @@ def test_incremental_scored_matches_batch(spark, tmp_path):
 
     # batch-side expectation: same salted keys -> cross pairs ->
     # compute_features_two (new side left, historical right) -> score
-    skeys = blocking._apply_salt(
-        block_keys_plan(normalize_plan(new), cfg), big,
-        F.xxhash64("salt_basis"),
+    skeys = blocking.apply_cap(
+        block_keys_plan(normalize_plan(new), cfg), big, "salt_basis", "id",
     )
     pairs = (
         skeys.select(F.col("id").alias("id_l"), "block_key")
@@ -241,9 +239,8 @@ def test_incremental_candidates_watermark_bounds_state(spark, tmp_path):
     index_keys = index_keys.cache()
     big = big.cache()
 
-    skeys = blocking._apply_salt(
-        block_keys_plan(normalize_plan(new), cfg), big,
-        F.xxhash64("salt_basis"),
+    skeys = blocking.apply_cap(
+        block_keys_plan(normalize_plan(new), cfg), big, "salt_basis", "id",
     )
     exp_df = (
         skeys.select(F.col("id").alias("id_new"), "block_key")
@@ -304,3 +301,77 @@ def test_streaming_canonical_dedup(spark, tmp_path):
         assert got.count() == want, mode
         if mode == "canonical":
             assert "url_canonical" in got.columns
+
+
+def test_incremental_index_bounds_collapsed_hot_block(spark, tmp_path):
+    """One mega-block whose 1,200 historical records share one salt
+    basis (same domain, same title): content salting alone leaves it in
+    one sub-block, so the index must take the cap's id tier too —
+    largest block <= 4x cap — and the stream side must salt arrivals
+    exactly as the batch applier does, so candidates stay exact."""
+    import datetime as dt
+
+    from idd_hw6_record_linkage_spark.operators import blocking
+    from idd_hw6_record_linkage_spark.plans.pipeline import (
+        PipelineConfig,
+        block_keys_plan,
+        normalize_plan,
+    )
+    from idd_hw6_record_linkage_spark.schema import PAGES_SCHEMA
+    from idd_hw6_record_linkage_spark.streaming import ingest
+
+    cap = 50
+    ts = dt.datetime(2024, 1, 1)
+
+    def pages(lo, hi):
+        return spark.createDataFrame(
+            [(f"https://hot.example/p{i}", ts, b"<title>Same Title</title>",
+              f"body {i}", "en") for i in range(lo, hi)],
+            PAGES_SCHEMA,
+        )
+
+    cfg = PipelineConfig(workdir=str(tmp_path / "wd"), use_lsh=False,
+                         max_block_size=cap)
+    index_keys, plan = ingest.build_key_index(normalize_plan(pages(0, 1200)), cfg)
+    index_keys = index_keys.cache()
+    plan = plan.cache()
+    sizes = index_keys.groupBy("block_key").count()
+    assert sizes.agg(F.sum("count")).first()[0] == 2 * 1200  # b1 + b2, no row lost
+    assert sizes.agg(F.max("count")).first()[0] <= 4 * cap
+
+    new = pages(1200, 1230)
+    batch = blocking.apply_cap(block_keys_plan(normalize_plan(new), cfg), plan,
+                               "salt_basis", "id")
+    src = str(tmp_path / "new_src")
+    new.coalesce(1).write.parquet(src)
+
+    # stream-side salted keys == the batch applier's, row for row
+    keys_out = str(tmp_path / "keys_out")
+    stream_keys = blocking.apply_cap(
+        ingest.block_keys_stream(ingest.read_pages_stream(spark, src), cfg),
+        plan, "salt_basis", "id",
+    )
+    q = ingest.run_to_parquet(stream_keys.select("id", "block_key", "pass"),
+                              keys_out, str(tmp_path / "ckpt_keys"))
+    assert q.awaitTermination(120)
+    got_keys = sorted(tuple(r) for r in spark.read.parquet(keys_out).collect())
+    assert got_keys == sorted(tuple(r) for r in batch.select("id", "block_key", "pass").collect())
+    assert all("#" in k for _, k, _ in got_keys)
+
+    # candidates: exactly the batch-salted keys joined to the index
+    exp = {
+        (r.id_l, r.id_r)
+        for r in blocking.cross_pair_join(batch, index_keys, "id")
+        .select("id_l", "id_r").distinct().collect()
+    }
+    assert exp
+    out = str(tmp_path / "cand_out")
+    cand = ingest.incremental_candidates(ingest.read_pages_stream(spark, src),
+                                         index_keys, plan, cfg)
+    q = ingest.run_to_parquet(cand, out, str(tmp_path / "ckpt_cand"))
+    assert q.awaitTermination(120)
+    got = {(r.id_new, r.id_old) for r in spark.read.parquet(out).collect()}
+    assert got == exp
+    # each arrival meets at most one capped block per pass
+    per_new = spark.read.parquet(out).groupBy("id_new").count()
+    assert per_new.agg(F.max("count")).first()[0] <= 2 * 4 * cap
