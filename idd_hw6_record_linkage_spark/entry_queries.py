@@ -210,23 +210,28 @@ def _snippet(width: int) -> F.Column:
 
 
 def _stage(df: DataFrame) -> DataFrame:
-    """Materialize a projected table through one round-robin exchange
-    before a self-join consumes it (guide §2.4/§3 plan-shape fix).
+    """Materialize a projected table through one round-robin exchange.
 
-    Whole-stage codegen defers projection evaluation to the point of
-    use: on the probe side of a BroadcastHashJoin, an expensive
-    projection (regex sanitize / tokenize over the full text) is
-    re-evaluated once per JOINED OUTPUT ROW instead of once per
-    record. Measured at sf0.1 (159k pairs from 5k docs): a trivial
-    Arrow UDF over the blocked pair join cost 5.2 s vs 0.35 s for the
-    join alone — all of it full-text regexp re-evaluation inside the
-    Arrow writer loop (jstack: java.util.regex.Matcher under
-    GeneratedIterator → writeSizedBatch). The exchange forces the
-    projected rows to materialize once per record, so the join and
-    any downstream Arrow stage read 40-char computed values, and the
-    exchange ships compact projections, not raw text. At production
-    scale this is one narrow-row shuffle — strictly fewer bytes than
-    shipping the raw text through the same exchange."""
+    The rule: stage a table only when (1) a projected column reads the
+    whole ``text`` value (a regex replace or split, or a ``trim``
+    before a prefix cut) and (2) that column is first read ABOVE a
+    blocked pair join. Whole-stage codegen defers a projection to its
+    point of use, so on the probe side of a BroadcastHashJoin the
+    full-text regex runs once per JOINED ROW (jstack at sf0.1:
+    java.util.regex.Matcher under the Arrow writer loop); after the
+    exchange it has run once per record. A consumer that explodes or
+    aggregates first already runs it once per record, and a bounded
+    prefix or short column is cheap, so there the exchange only adds
+    a shuffle. ``_scan`` already widens testbed reads to
+    ``defaultParallelism``: the win is materialization, not task
+    count. local[4], sf0.1, staged vs not: rl_jaro_duck 2.32 vs 7.05 s,
+    rl_nw_unit 2.87 vs 6.93, rl_sw_unit 3.83 vs 7.66, rl_editex_unit
+    2.88 vs 6.68, rl_bag_distance 4.20 vs 7.61, rl_editex_gate 7.55 vs
+    11.00 (min of 3), rl_monge_elkan 4.03 vs 4.49 (median of 7 pairs);
+    not staged (median of 7 pairs, staged → not): rl_soft_tfidf 7.65 →
+    6.77, rl_suffix_blocks 1.08 → 1.02, rl_qgram_cosine 3.03 → 3.01,
+    rl_mra 2.78 → 2.77, rl_sw_gate 3.13 → 3.20, rl_edit_join 1.17 →
+    1.20, rl_qgram_blocks 1.08 → 1.05."""
     target = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(target)
 
@@ -371,11 +376,11 @@ Feature semantics shared with the oracle:
 
 
 def _pair_feature_docs(spark, sf_dir):
-    """The staged comparator basis of rl_pair_features, the match rules
-    and the cross-source scorer: 40-char prefix, distinct token set,
-    n_chars, block key. Token arrays are hashed to int64: the pair join
-    ships ~3x fewer bytes and set Jaccard is hash-invariant, so the
-    oracle (which compares OUTPUT values, computed over string tokens
+    """The staged comparator basis of rl_pair_features, rl_pair_token_sims,
+    the match rules and the cross-source scorer: 40-char prefix, distinct
+    token set, n_chars, block key. Token arrays are hashed to int64: the
+    pair join ships ~3x fewer bytes and set Jaccard is hash-invariant, so
+    the oracle (which compares OUTPUT values, computed over string tokens
     in DuckDB) still matches value-exactly."""
     return _stage(_docs(spark, sf_dir).select(
         "doc_id",
@@ -543,20 +548,12 @@ def rl_pair_token_sims(spark, sf_dir):
     """Token-SET similarity family over the candidate pairs: Dice,
     overlap coefficient, and set cosine (Ochiai) — the three standard
     set comparators beside Jaccard (C6). All native array expressions
-    over the same int64-hashed token arrays rl_pair_features ships
-    through the pair join (set sizes and intersections are
+    over :func:`_pair_feature_docs`' int64-hashed token arrays, the
+    only column this pair join ships (set sizes and intersections are
     hash-invariant, so the string-token DuckDB oracle is value-exact).
     Map-only on top of the one block-join shuffle; token arrays are
     distinct-deduped so sizes are set cardinalities."""
-    docs = _stage(_docs(spark, sf_dir).select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                F.split(F.trim("text"), r"\s+"), lambda t: F.xxhash64(t)
-            )
-        ).alias("toks"),
-        _block_key().alias("block_key"),
-    ))
+    docs = _pair_feature_docs(spark, sf_dir)
     inter = F.size(F.array_intersect("toks_l", "toks_r")).cast("double")
     nl, nr = F.size("toks_l"), F.size("toks_r")
     return (
@@ -611,11 +608,11 @@ def rl_qgram_cosine(spark, sf_dir):
         qgram_cosine_for_pairs,
     )
 
-    docs = _stage(_docs(spark, sf_dir).select(
+    docs = _docs(spark, sf_dir).select(
         "doc_id",
         _snippet(32).alias("qkey"),
         _block_key().alias("block_key"),
-    ))
+    )
     pairs = blocking.self_pair_join(docs, "doc_id").select("id_l", "id_r")
     return qgram_cosine_for_pairs(docs, pairs, "doc_id", "qkey", q=3)
 
@@ -741,9 +738,9 @@ def rl_edit_join(spark, sf_dir):
         edit_distance_self_join,
     )
 
-    docs = _stage(_docs(spark, sf_dir).select(
+    docs = _docs(spark, sf_dir).select(
         "doc_id", F.coalesce(_snippet(40), F.lit("")).alias("s")
-    ))
+    )
     return edit_distance_self_join(docs, "doc_id", "s", d=2).select(
         F.col("id_l").alias("id_l"),
         F.col("id_r").alias("id_r"),
@@ -1304,10 +1301,7 @@ def rl_qgram_blocks(spark, sf_dir):
         qgram_candidates,
     )
 
-    docs = _stage(_docs(spark, sf_dir).select(
-        "doc_id",
-        _snippet(32).alias("qkey"),
-    ))
+    docs = _docs(spark, sf_dir).select("doc_id", _snippet(32).alias("qkey"))
     return qgram_candidates(
         docs, "doc_id", "qkey", q=3, min_common=2, max_df=64
     )
@@ -1358,10 +1352,7 @@ def rl_suffix_blocks(spark, sf_dir):
         suffix_candidates,
     )
 
-    docs = _stage(_docs(spark, sf_dir).select(
-        "doc_id",
-        _snippet(24).alias("skey"),
-    ))
+    docs = _docs(spark, sf_dir).select("doc_id", _snippet(24).alias("skey"))
     return suffix_candidates(
         docs, "doc_id", "skey", min_len=16, max_block_size=32
     )
@@ -2642,13 +2633,13 @@ def rl_mra(spark, sf_dir):
     )
 
     tok = F.upper(F.split(F.col("p_name"), " ").getItem(0))
-    parts = _stage(_scan(spark, sf_dir, "part").select(
+    parts = _scan(spark, sf_dir, "part").select(
         "p_partkey",
         F.col("p_brand").alias("brand"),
         F.col("p_size").alias("psize"),
         tok.alias("tok"),
         mra_codex(tok).alias("mra"),
-    ))
+    )
     rating = mra_rating("mra_l", "mra_r")
     minr = mra_min_rating("mra_l", "mra_r")
     cmp_ok = mra_comparable("mra_l", "mra_r")
@@ -3650,11 +3641,11 @@ def rl_soft_tfidf(spark, sf_dir):
         soft_tfidf,
     )
 
-    docs = _stage(_docs(spark, sf_dir).select(
+    docs = _docs(spark, sf_dir).select(
         "doc_id",
         F.slice(F.split(F.trim("text"), r"\s+"), 1, 6).alias("toks"),
         _block_key().alias("block_key"),
-    ))
+    )
     n_docs = docs.count()
     w = doc_token_weights(docs, "doc_id", "toks", n_docs=n_docs)
     base = docs.join(w, "doc_id")
@@ -3777,11 +3768,11 @@ def rl_sw_gate(spark, sf_dir):
         sim_smith_waterman,
     )
 
-    docs = _stage(_docs(spark, sf_dir).select(
+    docs = _docs(spark, sf_dir).select(
         "doc_id",
         F.lower(F.substring(F.coalesce("text", F.lit("")), 1, 40)).alias("snip"),
         _block_key().alias("block_key"),
-    ))
+    )
     pairs = (
         blocking.self_pair_join(docs, "doc_id", ["snip"])
         .select(
@@ -5443,38 +5434,41 @@ def rl_active_learning_gate(spark, sf_dir):
         .drop("__s")
         .cache()
     )
-    n_pool = pool.count()
-    feats = pool.select("id_l", "id_r", "f1", "f2", "f3")
-    seed = (
-        pool.withColumn("__h", F.xxhash64("id_l"))
-        .withColumn(
-            "__rk",
-            F.row_number().over(Window.partitionBy("label").orderBy("__h")),
-        )
-        .where(F.col("__rk") <= 3)
-        .select("id_l", "id_r", "label")
-    )
-
-    def oracle(pairs):
-        return pairs.join(
-            pool.select("id_l", "id_r", "label"), ["id_l", "id_r"]
+    try:
+        n_pool = pool.count()
+        feats = pool.select("id_l", "id_r", "f1", "f2", "f3")
+        seed = (
+            pool.withColumn("__h", F.xxhash64("id_l"))
+            .withColumn(
+                "__rk",
+                F.row_number().over(Window.partitionBy("label").orderBy("__h")),
+            )
+            .where(F.col("__rk") <= 3)
+            .select("id_l", "id_r", "label")
         )
 
-    assembler, model, labeled, _hist = AL.active_learn_lr(
-        feats, oracle, cfg, seed, rounds=3, batch_size=15
-    )
-    n_labels = labeled.count()
-    acc = (
-        predict_probability(feats, assembler, model)
-        .join(pool.select("id_l", "id_r", "label"), ["id_l", "id_r"])
-        .select(
-            F.avg(
-                ((F.col("score") > 0.5).cast("int") == F.col("label"))
-                .cast("double")
-            ).alias("acc")
+        def oracle(pairs):
+            return pairs.join(
+                pool.select("id_l", "id_r", "label"), ["id_l", "id_r"]
+            )
+
+        assembler, model, labeled, _hist = AL.active_learn_lr(
+            feats, oracle, cfg, seed, rounds=3, batch_size=15
         )
-        .collect()[0]["acc"]
-    )
+        n_labels = labeled.count()
+        acc = (
+            predict_probability(feats, assembler, model)
+            .join(pool.select("id_l", "id_r", "label"), ["id_l", "id_r"])
+            .select(
+                F.avg(
+                    ((F.col("score") > 0.5).cast("int") == F.col("label"))
+                    .cast("double")
+                ).alias("acc")
+            )
+            .collect()[0]["acc"]
+        )
+    finally:
+        pool.unpersist()
     return spark.createDataFrame(
         [
             (

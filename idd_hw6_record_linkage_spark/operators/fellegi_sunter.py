@@ -86,7 +86,6 @@ def em_fit(
     max_iter: int = 25,
     tol: float = 1e-6,
     clip: float = 1e-6,
-    persist: bool = True,
 ) -> FSParams:
     """Fit (λ, m, u) by EM over binary agreement columns (0/1/NULL).
     Stops when no parameter moves more than ``tol`` or after
@@ -98,9 +97,7 @@ def em_fit(
             raise ValueError(f"{name} must be in (0, 1)")
     gam = pairs.select(
         *[F.col(f).cast("double").alias(f) for f in feature_cols]
-    )
-    if persist:
-        gam = gam.persist()
+    ).persist()
     lam = lam0
     m = {f: m0 for f in feature_cols}
     u = {f: u0 for f in feature_cols}
@@ -146,8 +143,7 @@ def em_fit(
             if delta < tol:
                 break
     finally:
-        if persist:
-            gam.unpersist()
+        gam.unpersist()
     return FSParams(lam=lam, m=m, u=u, n_iter=n_iter, avg_log_likelihood=avg_ll)
 
 

@@ -1,8 +1,7 @@
-"""Plan lint over the headline queries: assert the scale-critical
+"""Plan lint over the contract queries: assert the scale-critical
 properties `.explain` shows, without running a single job.
 
-For each bench headline query (plus the flagship plan surfaces) this
-prints one row of plan evidence:
+For every `queries()` entry this prints one row of plan evidence:
 
 - `exchanges`  — shuffle count (the thing to minimize at 100 TB);
 - `codegen`    — whole-stage-codegen span count (distinct `*(n)`
@@ -12,10 +11,10 @@ prints one row of plan evidence:
   only acceptable Python on a hot path), `-` (none), or
   `BATCH` (row-at-a-time BatchEvalPython — a defect);
 - `cartesian`  — CartesianProduct/BroadcastNestedLoopJoin count (must
-  be 0: every candidate join must be an equi-join). Exception:
-  `ann_topk_brute` is the documented brute-force baseline — a
-  broadcast nested-loop of a tiny query set against the corpus IS its
-  plan, so its cartesian count is reported but allowed.
+  be 0: every candidate join must be an equi-join). Exceptions are
+  listed in `CARTESIAN_OK` with their reasons: the brute-force
+  baselines, whose nested-loop join IS the plan, and crosses of
+  one-row aggregates.
 
 Exits 1 if any query uses BatchEvalPython or an unexpected cartesian
 join, so CI can gate on it. Mostly analysis-only (plans are compiled, not
@@ -29,102 +28,12 @@ Usage: python scripts/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
-import io
 import os
+import re
 import sys
-from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-AUDITED = [
-    "rl_mra",
-    "rl_match_explanations",
-    "dedup_source_overlap",
-    "rl_cologne_keys",
-    "corpus_chunk_docs",
-    "corpus_mix_temperature",
-    "rl_cluster_blanc",
-    "rl_canopy_blocks",
-    "rl_star_clusters",
-    "rl_pivot_clusters",
-    "rl_block_keys",
-    "rl_candidate_pairs",
-    "rl_pair_features",
-    "rl_match_edges",
-    "rl_clusters",
-    "dedup_exact",
-    "dedup_minhash_lsh_prod",
-    "dedup_simhash",
-    "dedup_cluster_stats",
-    "text_quality",
-    "text_lang_id",
-    "text_span_dup",
-    "corpus_decontaminate",
-    "lm_cross_entropy",
-    "rl_fs_match_weights",
-    "rl_soundex_keys",
-    "rl_monge_elkan",
-    "rl_damerau",
-    "rl_qgram_blocks",
-    "rl_suffix_blocks",
-    "rl_setsim_join",
-    "rl_qgram_cosine",
-    "rl_nw_unit",
-    "rl_bag_distance",
-    "rl_jaro_duck",
-    "rl_edit_join",
-    "rl_weighted_jaccard",
-    "rl_cluster_gmd",
-    "rl_cluster_exact",
-    "rl_refined_soundex",
-    "rl_lcs",
-    "rl_editex_unit",
-    "rl_label_sample",
-    "rl_match_rules",
-    "rl_match_rule_stats",
-    "rl_pair_token_sims",
-    "rl_gamma_patterns",
-    "rl_rare_token_blocks",
-    "rl_constraint_check",
-    "rl_score_auc",
-    "rl_sorted_neighborhood",
-    "rl_meta_blocking",
-    "rl_one_to_one_matches",
-    "rl_golden_records",
-    "rl_blocking_scheme_eval",
-    "rl_fs_tf_bands",
-    "rl_cluster_audit",
-    "rl_bcubed_eval",
-    "rl_cluster_ari",
-    "rl_cluster_vmeasure",
-    "rl_cluster_muc",
-    "rl_score_ap",
-    "rl_edge_triangles",
-    "rl_clusters_bridge_safe",
-    "rl_soft_tfidf",
-    "rl_sw_gate",
-    "rl_attach_increment",
-    "rl_retract_records",
-    "rl_threshold_sweep",
-    "dedup_lines",
-    "pii_redact",
-    "corpus_sample",
-    "corpus_pack_shards",
-    "corpus_vocab_topk",
-    "events_asof_signup",
-    "events_asof_skew",
-    "events_range_join",
-    "events_pivot",
-    "events_moving_avg",
-    "ann_topk_brute",
-    "ann_topk_lsh",
-    "pair_tfidf_cosine",
-    "events_windowed_agg",
-    "events_sessionize",
-    "tpch_agg_pricing",
-    "join_topk_customers",
-]
 
 
 def plan_text(df) -> str:
@@ -134,8 +43,6 @@ def plan_text(df) -> str:
     # session compiles plans with AQE off (runtime sessions keep it).
     return df._jdf.queryExecution().executedPlan().toString()
 
-
-import re
 
 # Brute-force ANN is deliberately a broadcast nested-loop of a tiny
 # query set against the corpus — its cartesian joins are its plan.
@@ -155,6 +62,9 @@ CARTESIAN_OK = {
     "rl_cluster_blanc",  # one-row contingency-sum crosses (same shape as ARI)
     "corpus_mix_temperature",  # one-row total/qsum/max crosses into the
     # sources-sized rate table
+    "rl_audit_metrics",  # one-row feature means × one-row impossible rate
+    "dedup_embedding_cosine",  # dedup.embedding_dup_pairs_brute: the
+    # documented brute-force theta join, same shape as ann_topk_brute
 }
 
 
@@ -185,12 +95,10 @@ def main() -> None:
     spark = get_spark(master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    queries = entry.queries()
-
     rows, bad = [], 0
-    for name in AUDITED:
+    for name, fn in entry.queries().items():
         try:
-            rows.append(audit(name, queries[name](spark, sf_dir)))
+            rows.append(audit(name, fn(spark, sf_dir)))
         except Exception as exc:  # noqa: BLE001 — report, keep auditing
             rows.append({"query": name, "error": str(exc)[:80]})
             bad += 1

@@ -4,6 +4,7 @@ column set, order-insensitive values) — emulating the driver gate."""
 
 from __future__ import annotations
 
+import json
 import sys
 from pathlib import Path
 
@@ -14,12 +15,14 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from scripts.plan_dump import formatted_plan, plan_counts  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
 ]
+PINNED_COUNTS = json.loads(Path(__file__).with_name("plan_counts.json").read_text())
 
 
 @pytest.fixture(scope="module")
@@ -53,8 +56,16 @@ QUERY_NAMES = sorted(entry_mod.queries())
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_vs_oracle(spark, duck, name):
-    q = entry_mod.queries()[name]
-    got = q(spark, SF_DIR).toPandas()
+    """Built on an empty cache, the query's plan operator counts equal its
+    entry in tests/plan_counts.json (regenerate with scripts/plan_dump.py),
+    its result matches the oracle, and it leaves nothing cached."""
+    spark.catalog.clearCache()
+    df = entry_mod.queries()[name](spark, SF_DIR)
+    assert plan_counts(formatted_plan(df)) == PINNED_COUNTS[name]
+    got = df.toPandas()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        "query left a cached table behind"
+    )
     oracles = entry_mod.oracle_sql()
     if name not in oracles:
         assert got.shape[0] >= 0  # rows-only contract

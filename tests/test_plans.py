@@ -4,6 +4,9 @@ columns for a 2-column projection is wrong regardless of test scale)."""
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -119,3 +122,16 @@ def test_scaling_scoring_stage_is_map_only(spark):
     scored = scoring.score(feats, scoring.WEB_P1)
     plan = _plan(scored.where(F.col("score") >= 0.5))
     assert "Exchange" not in plan, plan
+
+
+def test_flagship_stage_plan_counts(spark):
+    """The flagship's cached pairs/score stages and link_sources' pairs
+    stage keep the operator counts pinned in tests/plan_counts.json
+    (built by the same function scripts/plan_dump.py dumps them with)."""
+    from scripts.plan_dump import flagship_plans, plan_counts
+
+    pinned = json.loads(Path(__file__).with_name("plan_counts.json").read_text())
+    spark.catalog.clearCache()
+    got = {name: plan_counts(text) for name, text in flagship_plans(spark).items()}
+    names = ("run_in_memory.pairs", "run_in_memory.score", "link_sources.pairs")
+    assert got == {name: pinned[name] for name in names}
