@@ -49,7 +49,6 @@ def per_partition_counts(df: DataFrame) -> list[tuple[int, int]]:
 
 
 def append_stage_metrics(
-    spark: SparkSession,
     workdir: str,
     run_id: str,
     stage: str,

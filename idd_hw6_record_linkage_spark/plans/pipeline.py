@@ -55,8 +55,6 @@ class PipelineConfig:
     comparator_config: scoring.ComparatorConfig = field(
         default_factory=lambda: scoring.WEB_P1
     )
-    use_b1: bool = True  # domain key (brand analogue)
-    use_b2: bool = True  # domain + title-prefix key (brand+model analogue)
     use_lsh: bool = True
     # "rule": fixed weighted-mean scorer (default). "lr": train a
     # pyspark.ml LogisticRegression on labeled pairs per run — the
@@ -64,8 +62,6 @@ class PipelineConfig:
     # on the comparator features each run); requires a labeled_pairs
     # DataFrame (url_l, url_r, label) passed to run()/run_in_memory.
     scorer: str = "rule"
-    lsh_bands: int = 8
-    lsh_rows: int = 4
     max_block_size: int = 200
     score_threshold: float = 0.5
     fallback_threshold: float = 0.3
@@ -222,39 +218,28 @@ def block_keys_plan(records: DataFrame, cfg: "PipelineConfig",
         F.substring("text_clean", 1, 24),
         F.col("url"),
     )
-    passes: list[DataFrame] = []
-    if cfg.use_b1:
-        # B1 analogue: coarse key = normalized domain (brand role).
-        passes.append(
-            blocking.key_table(records, "url", F.col("domain"), "b1",
-                               salt_basis, extra_cols=extra_cols)
-        )
-    if cfg.use_b2:
-        # B2 analogue: domain + 2-char prefix of the token-sorted title
-        # (brand + model-prefix role, blocking_B2.py:70-87).
-        key = F.when(
-            F.col("domain").isNotNull() & (F.length("title_norm") >= 2),
-            F.concat_ws(
-                "_",
-                F.col("domain"),
-                F.substring(
-                    F.regexp_replace("title_norm", r"[^a-z0-9]", ""), 1, 2
-                ),
+    # B1 analogue: coarse key = normalized domain (brand role).
+    keys = blocking.key_table(records, "url", F.col("domain"), "b1",
+                              salt_basis, extra_cols=extra_cols)
+    # B2 analogue: domain + 2-char prefix of the token-sorted title
+    # (brand + model-prefix role, blocking_B2.py:70-87).
+    b2 = F.when(
+        F.col("domain").isNotNull() & (F.length("title_norm") >= 2),
+        F.concat_ws(
+            "_",
+            F.col("domain"),
+            F.substring(
+                F.regexp_replace("title_norm", r"[^a-z0-9]", ""), 1, 2
             ),
-        )
-        passes.append(blocking.key_table(records, "url", key, "b2",
-                                         salt_basis, extra_cols=extra_cols))
+        ),
+    )
+    keys = keys.unionByName(blocking.key_table(
+        records, "url", b2, "b2", salt_basis, extra_cols=extra_cols))
     if cfg.use_lsh:
-        passes.append(
-            lsh_key_table(
-                records, "url", "text_clean",
-                num_bands=cfg.lsh_bands, rows_per_band=cfg.lsh_rows,
-                salt_basis=salt_basis, extra_cols=extra_cols,
-            )
-        )
-    keys = passes[0]
-    for p in passes[1:]:
-        keys = keys.unionByName(p)
+        keys = keys.unionByName(lsh_key_table(
+            records, "url", "text_clean",
+            salt_basis=salt_basis, extra_cols=extra_cols,
+        ))
     return keys
 
 
@@ -472,7 +457,7 @@ class StagedPlan:
             return self.spark.read.format("iceberg").load(target)
         return self.spark.read.parquet(target)
 
-    def _run_stage(self, stage: str, build, counts=None, **metrics) -> DataFrame:
+    def _run_stage(self, stage: str, build, counts=None) -> DataFrame:
         """Materialize a stage to the configured table format unless
         already completed for this run_id (resume). ``counts(out)``
         returns extra metrics for the completion row, computed only
@@ -488,9 +473,7 @@ class StagedPlan:
                 h.unpersist()
             self._fanout.clear()
         out = self._read_stage(path)
-        if counts is not None:
-            metrics.update(counts(out))
-        self._append(stage, out, **metrics)
+        self._append(stage, out, **(counts(out) if counts else {}))
         return out
 
     def _completed(self, stage: str) -> bool:
@@ -503,7 +486,7 @@ class StagedPlan:
 
     def _append(self, stage: str, out: DataFrame | None, **metrics) -> None:
         M.append_stage_metrics(
-            self.spark, self.cfg.workdir, self.cfg.run_id, stage, out, **metrics
+            self.cfg.workdir, self.cfg.run_id, stage, out, **metrics
         )
         if self._done is not None:
             self._done.add(stage)

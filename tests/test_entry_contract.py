@@ -15,13 +15,10 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from scripts.check_oracles import TABLES  # noqa: E402
 from scripts.plan_dump import formatted_plan, plan_counts  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
 PINNED_COUNTS = json.loads(Path(__file__).with_name("plan_counts.json").read_text())
 
 

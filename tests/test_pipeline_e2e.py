@@ -178,7 +178,7 @@ def test_metrics_table_reads_parts_from_spark_and_driver(tmp_path, spark):
     spark.createDataFrame(spark_rows, METRICS_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(os.path.join(wd, "metrics"))
-    M.append_stage_metrics(spark, wd, "m", "block_stats", None,
+    M.append_stage_metrics(wd, "m", "block_stats", None,
                            rows_in=7, pair_count=4, match_count=1)
 
     m = M.read_metrics(spark, wd)
@@ -206,7 +206,7 @@ def test_metrics_append_runs_no_spark_job(tmp_path, spark):
     before = _dt.datetime.now(_dt.timezone.utc).timestamp()
     sc.setJobGroup(group, "completion-only metrics append")
     try:
-        M.append_stage_metrics(spark, wd, "j", "block_stats", None,
+        M.append_stage_metrics(wd, "j", "block_stats", None,
                                rows_in=3, pair_count=2, match_count=1)
         jobs = list(sc.statusTracker().getJobIdsForGroup(group))
     finally:

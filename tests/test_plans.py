@@ -10,6 +10,23 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.01"
+PINNED = Path(__file__).with_name("plan_counts.json")
+
+# The plans allowed a CartesianProduct/BroadcastNestedLoopJoin, each
+# because its nested loop is the plan, not a pair blowup.
+CARTESIAN_OK = {
+    "ann_topk_brute",  # brute-force ANN: a tiny query set x the corpus
+    "dedup_embedding_cosine",  # the documented brute-force theta join
+    "rl_blocking_scheme_eval",  # one-row n_pairs x n_covered x n_truth crosses
+    "rl_fs_tf_bands",  # one-row tf denominator x the per-value counts
+    "rl_bcubed_eval",  # one-row precision x recall x count crosses
+    "rl_cluster_ari",  # one-row contingency-sum crosses (s_ct2 x s_c2 x s_t2 x n)
+    "rl_cluster_vmeasure",  # one-row log-sum crosses (s_tc x s_ct x s_t x s_c x n)
+    "rl_threshold_sweep",  # one-row |truth| count crossed into the curve
+    "rl_cluster_blanc",  # one-row contingency-sum crosses (same shape as ARI)
+    "corpus_mix_temperature",  # one-row total/qsum/max x the rate table
+    "rl_audit_metrics",  # one-row feature means x one-row impossible rate
+}
 
 
 def _plan(df) -> str:
@@ -90,20 +107,6 @@ def test_scoring_udf_is_arrow_batched(spark):
     assert "BatchEvalPython" not in plan, plan
 
 
-def test_tfidf_and_cross_source_no_cartesian(spark):
-    """The sparse TF-IDF pair join and the cross-source match join must
-    both stay hash equi-joins — a cartesian here is a 100-TB disaster."""
-    from idd_hw6_record_linkage_spark.entry_queries import (
-        pair_tfidf_cosine,
-        rl_cross_source_matches,
-    )
-
-    for q in (pair_tfidf_cosine, rl_cross_source_matches):
-        plan = _plan(q(spark, SF_DIR))
-        assert "CartesianProduct" not in plan, plan
-        assert "BroadcastNestedLoop" not in plan, plan
-
-
 def test_scaling_scoring_stage_is_map_only(spark):
     """The bench's timed scaling section (comparator evaluation over a
     pre-enriched pair table) must contain NO exchange: map-side
@@ -130,8 +133,23 @@ def test_flagship_stage_plan_counts(spark):
     (built by the same function scripts/plan_dump.py dumps them with)."""
     from scripts.plan_dump import flagship_plans, plan_counts
 
-    pinned = json.loads(Path(__file__).with_name("plan_counts.json").read_text())
+    pinned = json.loads(PINNED.read_text())
     spark.catalog.clearCache()
     got = {name: plan_counts(text) for name, text in flagship_plans(spark).items()}
     names = ("run_in_memory.pairs", "run_in_memory.score", "link_sources.pairs")
     assert got == {name: pinned[name] for name in names}
+
+
+def test_pinned_plans_lint():
+    """The plan lint over tests/plan_counts.json: no row-at-a-time
+    Python, and cartesian joins exactly in CARTESIAN_OK (so the list
+    holds no stale names). test_query_vs_oracle and
+    test_flagship_stage_plan_counts hold every live plan to its pinned
+    entry, so this verdict is the live plans' verdict."""
+    pinned = json.loads(PINNED.read_text())
+    assert [n for n, c in pinned.items() if c.get("BatchEvalPython")] == []
+    cartesian = {
+        n for n, c in pinned.items()
+        if c.get("CartesianProduct") or c.get("BroadcastNestedLoopJoin")
+    }
+    assert cartesian == CARTESIAN_OK
