@@ -1530,10 +1530,11 @@ def rl_meta_blocking(spark, sf_dir):
     from idd_hw6_record_linkage_spark.operators import meta_blocking as MB
 
     docs = _docs(spark, sf_dir).where(F.col("doc_id") % 5 == 0)
-    keys = MB.purge_blocks(
+    keys = blocking.purge_blocks(
         MB.token_blocking(docs, "doc_id", "text", min_token_len=4),
-        min_block_size=2,
-        max_block_size=80,
+        "block_key",
+        min_size=2,
+        max_size=80,
     )
     return MB.prune_wnp(MB.blocking_graph(keys, "cbs")).select(
         "id_l", "id_r", F.col("weight").cast("long").alias("weight")
@@ -1734,17 +1735,12 @@ def _source_truth(spark, sf_dir):
 def rl_eval_metrics(spark, sf_dir):
     """A5: P/R/F1 of the match edges against a deterministic 'truth'
     (same source, |n_chars diff| <= 10, :func:`_source_truth`) via
-    semi/anti joins."""
-    truth = _source_truth(spark, sf_dir)
-    preds = rl_match_edges(spark, sf_dir).select("id_l", "id_r")
-    tp = preds.join(truth, ["id_l", "id_r"], "leftsemi").count()
-    fp = preds.join(truth, ["id_l", "id_r"], "leftanti").count()
-    fn = truth.join(preds, ["id_l", "id_r"], "leftanti").count()
-    precision = tp / (tp + fp) if tp + fp else 0.0
-    recall = tp / (tp + fn) if tp + fn else 0.0
-    f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0
+    ``evaluation.precision_recall_f1``'s semi/anti joins."""
+    from idd_hw6_record_linkage_spark.operators.evaluation import precision_recall_f1
+
+    m = precision_recall_f1(rl_match_edges(spark, sf_dir), _source_truth(spark, sf_dir))
     return spark.createDataFrame(
-        [(tp, fp, fn, round(precision, 6), round(recall, 6), round(f1, 6))],
+        [(m.tp, m.fp, m.fn, round(m.precision, 6), round(m.recall, 6), round(m.f1, 6))],
         "tp bigint, fp bigint, fn bigint, precision double, recall double, f1 double",
     )
 
@@ -1992,10 +1988,11 @@ def rl_blocking_scheme_eval(spark, sf_dir):
         F.greatest("id_l", "id_r").alias("id_r"),
     )
     tok = MB.blocking_graph(
-        MB.purge_blocks(
+        blocking.purge_blocks(
             MB.token_blocking(docs, "doc_id", "text", min_token_len=4),
-            min_block_size=2,
-            max_block_size=400,
+            "block_key",
+            min_size=2,
+            max_size=400,
         ),
         "cbs",
     ).select("id_l", "id_r")
@@ -4208,8 +4205,6 @@ def dedup_minhash_capped_recall(spark, sf_dir):
     - ``max_bucket_ok``: the capped key table's largest block must
       respect cap_blocks' hard bound (4x cap — the tier-2 id-salt
       guarantee)."""
-    from idd_hw6_record_linkage_spark.operators.minhash import lsh_key_table
-
     docs = _docs(spark, sf_dir)
     cap = 500
     uncapped = dedup.minhash_dedup_pairs(
@@ -4224,15 +4219,11 @@ def dedup_minhash_capped_recall(spark, sf_dir):
     kept = uncapped.join(capped, ["id_l", "id_r"], "leftsemi").count()
     recall = kept / total if total else 1.0
     nonblank = dedup._nonblank(docs, "text")
-    keys = lsh_key_table(
-        nonblank, "doc_id", "text", 3, 8, 4,
-        salt_basis=F.substring(F.trim(F.col("text")), 1, 24),
-        base="xxhash64",
+    keys = dedup.minhash_lsh_keys(
+        nonblank, "doc_id", "text", max_block_size=cap, base="xxhash64"
     )
-    keys = blocking.cap_blocks(keys, cap, salt_col="salt_basis")
     max_block = (
-        keys.groupBy("block_key").agg(F.count("*").alias("n"))
-        .agg(F.max("n")).collect()[0][0]
+        blocking.block_sizes(keys, "block_key").agg(F.max("n")).collect()[0][0]
         or 0
     )
     n_docs = nonblank.count()

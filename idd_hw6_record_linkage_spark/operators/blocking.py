@@ -26,7 +26,17 @@ scale where mega-domains create hot keys):
   (:func:`cap_blocks`, ``plans.pipeline``), the ANN corpus and query
   buckets (``operators.ann``) and the streaming key index and its
   arrivals (``streaming.ingest``).
+- **block purge**: :func:`purge_blocks` drops every block whose size
+  lies outside ``[min_size, max_size]`` — the cap's other policy, for
+  redundant key families where a hot key (a stopword token, a common
+  q-gram or suffix) carries no blocking information and other keys
+  keep the recall. Its users are q-gram and suffix blocking, canopy
+  tokens and meta-blocking's token blocks.
 - **AQE skew-join** handles residual imbalance at runtime.
+
+Both policies size blocks through :func:`block_sizes`, the one
+``(key, n)`` aggregate (also behind :func:`block_size_stats`) — the
+reference's block-size logging (blocking_B1.py:92-127) as a table.
 """
 
 from __future__ import annotations
@@ -56,9 +66,27 @@ def key_table(df: DataFrame, id_col: str, key_expr: Column, pass_name: str,
     return keys.withColumn("pass", F.lit(pass_name))
 
 
-def _oversized(sizes: DataFrame, threshold: int, target: int) -> DataFrame:
-    """Blocks with n > threshold, each with n_sub = ceil(n / target)."""
-    return sizes.where(F.col("n") > threshold).select(
+def block_sizes(keys: DataFrame, on: str) -> DataFrame:
+    """``(on, n)``: one row per block key of ``keys`` with its size."""
+    return keys.groupBy(on).agg(F.count("*").alias("n"))
+
+
+def purge_blocks(keys: DataFrame, on: str, *, max_size: int,
+                 min_size: int | None = None) -> DataFrame:
+    """``keys`` without the blocks (keyed by ``on``) over ``max_size``
+    rows or, given ``min_size``, under it; ``on`` leads the output. A
+    kept block self-joins to at most C(max_size, 2) pairs; pairs of a
+    dropped key survive only through another shared key."""
+    n = F.col("n")
+    keep = n <= max_size if min_size is None else n.between(min_size, max_size)
+    return keys.join(block_sizes(keys, on).where(keep).select(on), on)
+
+
+def _oversized(tables: Sequence[DataFrame], threshold: int, target: int) -> DataFrame:
+    """Blocks of the union of the key tables with n > threshold, each
+    with n_sub = ceil(n / target)."""
+    keys = reduce(DataFrame.unionAll, [t.select("block_key") for t in tables])
+    return block_sizes(keys, "block_key").where(F.col("n") > threshold).select(
         "block_key", F.ceil(F.col("n") / target).cast("int").alias("n_sub"),
     )
 
@@ -69,12 +97,6 @@ def _salted_key(basis: Column | str) -> Column:
         F.col("n_sub").isNotNull(),
         F.concat_ws("#", "block_key", F.pmod(F.xxhash64(basis), F.col("n_sub")).cast("string")),
     ).otherwise(F.col("block_key"))
-
-
-def _block_sizes(tables: Sequence[DataFrame]) -> DataFrame:
-    """(block_key, n) over the union of the key tables."""
-    keys = reduce(DataFrame.unionAll, [t.select("block_key") for t in tables])
-    return keys.groupBy("block_key").agg(F.count("*").alias("n"))
 
 
 def cap_plan(tables: Sequence[DataFrame], max_block_size: int,
@@ -90,13 +112,13 @@ def cap_plan(tables: Sequence[DataFrame], max_block_size: int,
     and its arrivals: capping them from different lists would salt a
     hot key on one side only and silently drop its candidates. See
     :func:`cap_blocks` for why two tiers."""
-    tier1 = _oversized(_block_sizes(tables), max_block_size, max_block_size)
+    tier1 = _oversized(tables, max_block_size, max_block_size)
     plan = tier1.withColumn("tier", F.lit(1))
     if basis is None:
         return plan
     salted = [t.join(F.broadcast(tier1), "block_key")
               .withColumn("block_key", _salted_key(basis)) for t in tables]
-    tier2 = _oversized(_block_sizes(salted), 4 * max_block_size, max_block_size)
+    tier2 = _oversized(salted, 4 * max_block_size, max_block_size)
     return plan.unionByName(tier2.withColumn("tier", F.lit(2)))
 
 
@@ -208,26 +230,24 @@ def block_size_stats(keys: DataFrame) -> DataFrame:
     well-typed zero row instead of NULLs that crash int() at the
     metrics sink; mean/median/min/max stay NULL — honestly undefined
     over zero blocks."""
-    sizes = keys.groupBy("block_key").agg(F.count("*").alias("size"))
+    n = F.col("n")
 
     def z(col: F.Column) -> F.Column:
         return F.coalesce(col, F.lit(0)).cast("long")
 
-    return sizes.agg(
+    return block_sizes(keys, "block_key").agg(
         F.count("*").alias("n_blocks"),
-        z(F.sum("size")).alias("records_in_blocks"),
-        F.avg("size").alias("mean_size"),
-        F.expr("percentile_approx(size, 0.5)").alias("median_size"),
-        F.min("size").alias("min_size"),
-        F.max("size").alias("max_size"),
-        z(F.sum((F.col("size") == 1).cast("long"))).alias("blocks_1"),
-        z(F.sum(F.col("size").between(2, 5).cast("long"))).alias("blocks_2_5"),
-        z(F.sum(F.col("size").between(6, 10).cast("long"))).alias("blocks_6_10"),
-        z(F.sum(F.col("size").between(11, 50).cast("long"))).alias(
-            "blocks_11_50"
-        ),
-        z(F.sum((F.col("size") > 50).cast("long"))).alias("blocks_50_plus"),
-        z(F.sum(F.expr("size * (size - 1) / 2"))).alias("candidate_pairs"),
+        z(F.sum(n)).alias("records_in_blocks"),
+        F.avg(n).alias("mean_size"),
+        F.expr("percentile_approx(n, 0.5)").alias("median_size"),
+        F.min(n).alias("min_size"),
+        F.max(n).alias("max_size"),
+        z(F.sum((n == 1).cast("long"))).alias("blocks_1"),
+        z(F.sum(n.between(2, 5).cast("long"))).alias("blocks_2_5"),
+        z(F.sum(n.between(6, 10).cast("long"))).alias("blocks_6_10"),
+        z(F.sum(n.between(11, 50).cast("long"))).alias("blocks_11_50"),
+        z(F.sum((n > 50).cast("long"))).alias("blocks_50_plus"),
+        z(F.sum(n * (n - 1) / 2)).alias("candidate_pairs"),
     )
 
 

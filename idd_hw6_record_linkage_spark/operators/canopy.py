@@ -17,9 +17,10 @@ scored by set Jaccard over the capped token sets.
 Semantics (pinned, engine-reproducible):
 - token basis: the caller's array column, deduplicated, empty/NULL
   tokens dropped; tokens whose document frequency exceeds ``max_df``
-  are dropped BEFORE sizes and the join (hot stopword tokens carry no
-  canopy information and would quadratically dominate the join — the
-  same self-bounding trade as q-gram blocking's ``max_df``);
+  are purged (``blocking.purge_blocks``) BEFORE sizes and the join
+  (hot stopword tokens carry no canopy information and would
+  quadratically dominate the join — the same self-bounding trade as
+  q-gram blocking's ``max_df``);
 - membership: record d is in center c's canopy iff
   jaccard(toks(d), toks(c)) >= t1 over the capped sets; ``is_tight``
   flags jaccard >= t2 (the classic T2 inner threshold — in sequential
@@ -42,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from idd_hw6_record_linkage_spark.operators import blocking
 from idd_hw6_record_linkage_spark.operators.sampling import hash_fate
 
 __all__ = ["canopy_blocks"]
@@ -74,10 +76,7 @@ def canopy_blocks(
         F.explode(F.array_distinct(F.col(token_col))).alias("token"),
     ).where(F.col("token").isNotNull() & (F.col("token") != ""))
     if max_df is not None:
-        freq = toks.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-        toks = toks.join(
-            freq.where(F.col("df") <= max_df).select("token"), "token"
-        )
+        toks = blocking.purge_blocks(toks, "token", max_size=max_df)
     sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
 
     centers = toks.join(

@@ -167,6 +167,33 @@ def ngram_jaccard_pairs(
 # --- MinHash-LSH -------------------------------------------------------------
 
 
+def minhash_lsh_keys(df: DataFrame, id_col: str, text_col: str,
+                     num_bands: int = 8, rows_per_band: int = 4,
+                     shingle_n: int = 3, max_block_size: int | None = 500,
+                     base: str = "md5") -> DataFrame:
+    """The key table :func:`minhash_dedup_pairs` self-joins, over a
+    non-blank ``df``: banded-LSH keys salted by the text prefix, capped
+    by ``blocking.cap_blocks`` unless ``max_block_size`` is None. The
+    capped-recall gate checks this very table."""
+    # localCheckpoint (not persist): the minhash signature (32 hashes
+    # over shingle arrays) is the expensive part, and cap_blocks +
+    # the candidate self-join scan the key table several times — but a
+    # persist() here would leak a CacheManager entry the caller cannot
+    # release. Checkpointed RDD blocks are reference-tracked and freed
+    # by the ContextCleaner when the result goes out of scope.
+    keys = lsh_key_table(
+        df, id_col, text_col, shingle_n, num_bands, rows_per_band,
+        salt_basis=(
+            None if max_block_size is None
+            else F.substring(F.trim(F.col(text_col)), 1, 24)
+        ),
+        base=base,
+    ).localCheckpoint(eager=True)
+    if max_block_size is None:
+        return keys
+    return blocking.cap_blocks(keys, max_block_size, salt_col="salt_basis")
+
+
 def minhash_dedup_pairs(
     df: DataFrame,
     id_col: str,
@@ -195,22 +222,8 @@ def minhash_dedup_pairs(
     reproducible in DuckDB (md5_number_upper); ``'xxhash64'`` is ~3x
     cheaper per shingle where no SQL oracle is needed."""
     df = _nonblank(df, text_col)
-    # localCheckpoint (not persist): the minhash signature (32 hashes
-    # over shingle arrays) is the expensive part, and cap_blocks +
-    # the candidate self-join scan the key table several times — but a
-    # persist() here would leak a CacheManager entry the caller cannot
-    # release. Checkpointed RDD blocks are reference-tracked and freed
-    # by the ContextCleaner when the result goes out of scope.
-    keys = lsh_key_table(
-        df, id_col, text_col, shingle_n, num_bands, rows_per_band,
-        salt_basis=(
-            None if max_block_size is None
-            else F.substring(F.trim(F.col(text_col)), 1, 24)
-        ),
-        base=base,
-    ).localCheckpoint(eager=True)
-    if max_block_size is not None:
-        keys = blocking.cap_blocks(keys, max_block_size, salt_col="salt_basis")
+    keys = minhash_lsh_keys(df, id_col, text_col, num_bands, rows_per_band,
+                            shingle_n, max_block_size, base)
     pairs = blocking.candidate_pairs_self(keys)
     attrs = df.select(id_col, hashed_shingles(text_col, shingle_n).alias("sh"))
     enriched = blocking.attach_pair_attributes(pairs, attrs, ["sh"], id_col)

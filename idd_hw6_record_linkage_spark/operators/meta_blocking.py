@@ -12,11 +12,12 @@ Pipeline shape and scale reasoning (everything is hash shuffles on
 record ids / 8-byte-able keys; no step is quadratic in the corpus):
 
 1. :func:`token_blocking` — explode distinct tokens; map-side only.
-2. :func:`purge_blocks` — drop singleton blocks (no pairs) and blocks
-   above ``max_block_size`` (block purging). This is the step that
-   bounds the within-block self-join: after purging, the pair count is
-   at most ``sum_b n_b^2 <= max_block_size * sum_b n_b``, i.e. linear
-   in the key table with a constant-factor cap — the same role
+2. ``blocking.purge_blocks(keys, "block_key", min_size=2,
+   max_size=...)`` — drop singleton blocks (no pairs) and blocks above
+   ``max_size`` (block purging). This is the step that bounds the
+   within-block self-join: after purging, the pair count is at most
+   ``sum_b n_b^2 <= max_size * sum_b n_b``, i.e. linear in the key
+   table with a constant-factor cap — the same role
    ``blocking.cap_blocks`` plays for equality blocking, except purging
    *drops* oversized blocks (meta-blocking's recall lives in the
    redundancy of the many remaining blocks) instead of splitting them.
@@ -50,7 +51,6 @@ from idd_hw6_record_linkage_spark.operators import blocking
 
 __all__ = [
     "token_blocking",
-    "purge_blocks",
     "rare_token_keys",
     "blocking_graph",
     "prune_wep",
@@ -84,37 +84,13 @@ def token_blocking(
     )
 
 
-def purge_blocks(
-    keys: DataFrame,
-    min_block_size: int = 2,
-    max_block_size: int = 1000,
-) -> DataFrame:
-    """Block purging: keep only blocks whose size lies in
-    [min_block_size, max_block_size]. Singletons generate no pairs;
-    oversized blocks (stopword-like tokens at web scale) would
-    dominate the quadratic self-join while contributing almost no
-    matching evidence — meta-blocking drops them and relies on the
-    remaining redundancy for recall."""
-    sizes = keys.groupBy("block_key").agg(F.count("*").alias("__n"))
-    return (
-        keys.join(
-            sizes.where(
-                (F.col("__n") >= min_block_size)
-                & (F.col("__n") <= max_block_size)
-            ),
-            "block_key",
-        )
-        .drop("__n")
-    )
-
-
 def rare_token_keys(keys: DataFrame, k: int = 2) -> DataFrame:
     """Rare-token blocking: keep each record's ``k`` rarest tokens (by
     corpus doc-frequency; token value breaks ties, so the selection is
     deterministic — tokens are distinct within a record). Returns
     (id, block_key, df).
 
-    The alternative to :func:`purge_blocks` when recall must not
+    The alternative to ``blocking.purge_blocks`` when recall must not
     depend on a hand-picked size cap: a stopword-like token has a huge
     df and is never among any record's k rarest, so it simply never
     becomes a key — and a surviving block on token t can hold at most

@@ -115,15 +115,6 @@ def minhash_signature_from_hashes(hbase: Column, num_hashes: int = 32) -> Column
     return F.array(*sig)
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """Array of num_hashes minhash values over a shingle array.
-    Prefer staging :func:`base_hashes` + :func:`
-    minhash_signature_from_hashes` when the expression is reused —
-    inlined here the base hash would be folded into every slot by
-    CollapseProject only if cheap; keep for small/ad-hoc use."""
-    return minhash_signature_from_hashes(base_hashes(shingles), num_hashes)
-
-
 def band_keys(signature: Column, num_bands: int = 8, rows_per_band: int = 4) -> Column:
     """Array of num_bands band keys 'lsh{band}:{hash of band slice}'."""
     bands = []

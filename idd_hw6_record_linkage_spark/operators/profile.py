@@ -1,5 +1,5 @@
-"""Dataset profiling (A1/A7/A11 in SURVEY §2.5): per-column null and
-distinct statistics, top-k value counts — the analyze_ds.py analogue
+"""Dataset profiling (A1/A11 in SURVEY §2.5): per-column null and
+distinct statistics — the analyze_ds.py analogue
 (/root/reference/scripts/analisi_dataset/analyze_ds.py:12-21) as one
 aggregation pass instead of a per-column pandas loop."""
 
@@ -37,13 +37,3 @@ def column_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     for s in stacked[1:]:
         out = out.unionByName(s)
     return out
-
-
-def top_k_values(df: DataFrame, col: str, k: int = 10) -> DataFrame:
-    """A7: top-k value counts, deterministic ties (count desc, value asc)."""
-    return (
-        df.groupBy(F.col(col).alias("value"))
-        .agg(F.count("*").alias("cnt"))
-        .orderBy(F.desc("cnt"), F.asc("value"))
-        .limit(k)
-    )

@@ -14,10 +14,11 @@ slice the key BEFORE calling, same discipline as rl_monge_elkan);
 to at most C(max_df, 2) pairs — the same self-bounding trade as
 rare-token blocking and the MinHash band caps: frequent grams carry
 no blocking information, and dropping them is a documented recall
-trade, not silent truncation (use ``qgram_df_profile`` to see what a
-cap drops). The pair aggregate shuffles on the 16-byte id pair once.
-Everything is native Catalyst (sequence/transform/substring — no
-Python), so the whole plan stays in whole-stage codegen.
+trade, not silent truncation (``blocking.block_sizes(keys, "gram")``
+over :func:`qgram_keys` shows what a cap drops). The pair aggregate
+shuffles on the 16-byte id pair once. Everything is native Catalyst
+(sequence/transform/substring — no Python), so the whole plan stays
+in whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -53,13 +54,6 @@ def qgram_keys(
     return _grams(d, q)
 
 
-def qgram_df_profile(keys: DataFrame) -> DataFrame:
-    """(gram, df) doc-frequency profile of a qgram_keys output — what
-    a blocking designer reads to pick ``max_df`` (the analogue of
-    rl_block_stats for the equality keys)."""
-    return keys.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-
-
 def qgram_candidates(
     df: DataFrame,
     id_col: str,
@@ -77,14 +71,11 @@ def qgram_candidates(
     frac), id_l < id_r."""
     # localCheckpoint (eager): the kept key table feeds the per-record
     # count AND both self-join sides; unmaterialized, each of the
-    # three references re-runs the gram explode (+ df-profile join).
+    # three references re-runs the gram explode (+ purge join).
     # Slim (id, gram) rows bounded by the sliced key basis.
     keys = qgram_keys(df, id_col, key_col, q)
     if max_df is not None:
-        freq = qgram_df_profile(keys)
-        keys = keys.join(
-            freq.where(F.col("df") <= max_df).select("gram"), "gram"
-        )
+        keys = blocking.purge_blocks(keys, "gram", max_size=max_df)
     keys = keys.localCheckpoint(eager=True)
     ng = keys.groupBy("id").agg(F.count(F.lit(1)).alias("n_g"))
     pairs = (

@@ -20,7 +20,8 @@ BEFORE the self-join — the standard suffix-blocking parameter
 (Christen fig. 4.10) and the same self-bounding trade as the q-gram
 ``max_df`` cap: a suffix shared by everyone ("...com") carries no
 blocking information, and dropping it is a documented recall trade,
-not silent truncation (read ``suffix_df_profile`` to pick the cap).
+not silent truncation (read ``blocking.block_sizes(keys, "suffix")``
+over :func:`suffix_keys` to pick the cap).
 The pair aggregate shuffles once on the id pair. Everything is native
 Catalyst (sequence/transform/substring — no Python), so the whole
 plan stays in whole-stage codegen.
@@ -56,12 +57,6 @@ def suffix_keys(
     return d.select("id", F.explode(arr).alias("suffix"))
 
 
-def suffix_df_profile(keys: DataFrame) -> DataFrame:
-    """(suffix, df) doc-frequency profile of a suffix_keys output —
-    what a blocking designer reads to pick ``max_block_size``."""
-    return keys.groupBy("suffix").agg(F.count(F.lit(1)).alias("df"))
-
-
 def suffix_candidates(
     df: DataFrame,
     id_col: str,
@@ -79,15 +74,11 @@ def suffix_candidates(
     much stronger match hint than a 5-char one)."""
     # localCheckpoint (eager): the kept key table feeds BOTH self-join
     # sides; unmaterialized, each side re-runs the suffix explode (+
-    # the df-profile join). Slim (id, suffix) rows bounded by the
+    # the purge join). Slim (id, suffix) rows bounded by the
     # sliced key basis.
     keys = suffix_keys(df, id_col, key_col, min_len)
     if max_block_size is not None:
-        freq = suffix_df_profile(keys)
-        keys = keys.join(
-            freq.where(F.col("df") <= max_block_size).select("suffix"),
-            "suffix",
-        )
+        keys = blocking.purge_blocks(keys, "suffix", max_size=max_block_size)
     keys = keys.localCheckpoint(eager=True)
     return (
         blocking.self_pair_join(keys, "id", on="suffix")

@@ -42,6 +42,7 @@ from idd_hw6_record_linkage_spark.operators.clustering import clusters_from_edge
 from idd_hw6_record_linkage_spark.operators.minhash import lsh_key_table
 from idd_hw6_record_linkage_spark.operators import scoring
 from idd_hw6_record_linkage_spark.operators.evaluation import (
+    canonical_pairs,
     pairwise_cluster_f1,
     precision_recall_f1,
 )
@@ -513,8 +514,10 @@ class LinkagePipeline(StagedPlan):
     ) -> dict:
         result = _link([pages], self.cfg, labeled_pairs, self)
         if labeled_pairs is not None:
-            truth_pos = labeled_pairs.where(F.col("label") == 1).select(
-                F.col("url_l").alias("id_l"), F.col("url_r").alias("id_r")
+            # Label files may order each pair either way; candidate
+            # pairs are id_l < id_r.
+            truth_pos = canonical_pairs(
+                labeled_pairs.where(F.col("label") == 1), "url_l", "url_r"
             )
             result["edge_prf1"] = precision_recall_f1(
                 result["edges"].select("id_l", "id_r"), truth_pos

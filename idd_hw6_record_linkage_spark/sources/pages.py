@@ -41,14 +41,3 @@ def read_pages(
             )
         return spark.read.format("iceberg").load(location)
     raise ValueError(f"unknown pages format: {format}")
-
-
-def write_pages(df: DataFrame, location: str, format: str = "parquet",
-                mode: str = "append") -> None:
-    if format == "parquet":
-        df.write.mode(mode).parquet(location)
-        return
-    if format == "iceberg":
-        df.writeTo(location).append()
-        return
-    raise ValueError(f"unknown pages format: {format}")

@@ -37,6 +37,7 @@ def main() -> None:
 
     from idd_hw6_record_linkage_spark.operators import (
         attach,
+        blocking,
         cluster_audit,
         evaluation,
         meta_blocking as MB,
@@ -105,10 +106,11 @@ def main() -> None:
 
     t0 = time.time()
     slice10 = recs.where(F.col("rid") % 10 == 0)
-    keys = MB.purge_blocks(
+    keys = blocking.purge_blocks(
         MB.token_blocking(slice10, "rid", "text", min_token_len=2),
-        min_block_size=2,
-        max_block_size=200,
+        "block_key",
+        min_size=2,
+        max_size=200,
     )
     wnp = MB.prune_wnp(MB.blocking_graph(keys, "cbs"))
     out["mb_edges_kept"] = wnp.count()

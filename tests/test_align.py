@@ -214,3 +214,27 @@ def test_lower_strip_vin_zip(spark):
     gotz = {r["i"]: r["x"] for r in dfz.select("i", zip_clean_expr("z").alias("x")).collect()}
     for i, z in enumerate(ZIPS):
         assert gotz[i] == ref_zip(z), z
+
+
+def test_zip_state_enrich(spark):
+    """J6/S7: the ZIP lookup cleans both sides' zips, fills only a
+    missing state, keeps rows without a match (NULL zip included) and
+    joins the deduplicated lookup by broadcast."""
+    from idd_hw6_record_linkage_spark.operators.alignment import zip_state_enrich
+
+    lut = spark.createDataFrame(
+        [("501", "NY"), ("00501", "NY"), ("12345", "CA"), ("99999", "AK")],
+        "zip string, state string",
+    )
+    df = spark.createDataFrame(
+        [(1, "501", None), (2, "12345.0", None), (3, None, None),
+         (4, "54321", None), (5, "12345", "TX")],
+        "i int, zip string, state string",
+    )
+    out = zip_state_enrich(df, lut)
+    got = {r["i"]: (r["zip"], r["state"]) for r in out.collect()}
+    assert got == {1: ("501", "NY"), 2: ("12345.0", "CA"), 3: (None, None),
+                   4: ("54321", None), 5: ("12345", "TX")}
+    assert out.columns == ["i", "zip", "state"]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from idd_hw6_record_linkage_spark.operators import meta_blocking as MB
+from idd_hw6_record_linkage_spark.operators.blocking import purge_blocks
 
 DOCS = [
     # (id, text) — crafted so token blocks overlap non-trivially.
@@ -79,7 +80,7 @@ def test_token_blocking_matches_naive(spark, docs):
 
 def test_purge_blocks_bounds(spark, docs):
     keys = MB.token_blocking(docs, "doc_id", "text")
-    purged = MB.purge_blocks(keys, min_block_size=2, max_block_size=3)
+    purged = purge_blocks(keys, "block_key", min_size=2, max_size=3)
     sizes = {
         r["block_key"]: r["n"]
         for r in purged.groupBy("block_key")
@@ -95,8 +96,9 @@ def test_purge_blocks_bounds(spark, docs):
 
 @pytest.mark.parametrize("scheme", ["cbs", "js"])
 def test_blocking_graph_matches_naive(spark, docs, scheme):
-    keys = MB.purge_blocks(
-        MB.token_blocking(docs, "doc_id", "text"), 2, 100
+    keys = purge_blocks(
+        MB.token_blocking(docs, "doc_id", "text"), "block_key",
+        min_size=2, max_size=100,
     )
     naive = naive_graph(
         {(r["id"], r["block_key"]) for r in keys.collect()}, scheme
@@ -112,8 +114,9 @@ def test_blocking_graph_matches_naive(spark, docs, scheme):
 
 @pytest.mark.parametrize("scheme", ["cbs", "js"])
 def test_pruning_matches_naive(spark, docs, scheme):
-    keys = MB.purge_blocks(
-        MB.token_blocking(docs, "doc_id", "text"), 2, 100
+    keys = purge_blocks(
+        MB.token_blocking(docs, "doc_id", "text"), "block_key",
+        min_size=2, max_size=100,
     )
     naive = naive_graph(
         {(r["id"], r["block_key"]) for r in keys.collect()}, scheme
@@ -158,8 +161,9 @@ def test_purging_bounds_pair_blowup(spark):
     n = 400
     rows = [(i, f"stopword tok{i % 20}") for i in range(n)]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    keys = MB.purge_blocks(
-        MB.token_blocking(df, "doc_id", "text"), 2, 50
+    keys = purge_blocks(
+        MB.token_blocking(df, "doc_id", "text"), "block_key",
+        min_size=2, max_size=50,
     )
     edges = MB.blocking_graph(keys, "cbs")
     # only the 20 tok* blocks of size 20 survive: 20 * C(20,2) pairs

@@ -85,6 +85,27 @@ def test_blocking_stats_and_rr(spark, raw):
     assert 0.0 < rr < 1.0
 
 
+def test_pairs_completeness_ignores_label_order(tmp_path, spark):
+    """Label files may order a pair either way: the same labels with
+    every pair reversed give the same pairs completeness (the resumed
+    second run reads back the first run's stages)."""
+    raw = G.generate_raw(spark, 40, partitions=2)
+    pages = raw.select("url", "warc_ts", "html", "text", "lang")
+    truth = G.labeled_pairs(raw).cache()
+    reversed_truth = truth.select(
+        F.col("url_r").alias("url_l"), F.col("url_l").alias("url_r"), "label"
+    )
+    pcs = []
+    for resume, labels in ((False, truth), (True, reversed_truth)):
+        cfg = PipelineConfig(workdir=str(tmp_path / "pc"), run_id="pc",
+                             use_lsh=False, resume=resume)
+        res = LinkagePipeline(spark, cfg).run(pages, labeled_pairs=labels)
+        pcs.append(res["pairs_completeness"])
+    truth.unpersist()
+    assert pcs[0] > 0.9
+    assert pcs[1] == pcs[0]
+
+
 def test_resume_skips_completed_stages(tmp_path, spark, raw):
     pages = raw.select("url", "warc_ts", "html", "text", "lang").limit(200)
     cfg = PipelineConfig(workdir=str(tmp_path / "resume"), run_id="r1",

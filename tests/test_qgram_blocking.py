@@ -105,15 +105,13 @@ class TestQgramCandidates:
 
 class TestQgramKeysProfile:
     def test_keys_distinct_per_record(self, spark):
-        from idd_hw6_record_linkage_spark.operators.qgram_blocking import (
-            qgram_df_profile,
-            qgram_keys,
-        )
+        from idd_hw6_record_linkage_spark.operators.blocking import block_sizes
+        from idd_hw6_record_linkage_spark.operators.qgram_blocking import qgram_keys
 
         df = spark.createDataFrame([("a", "aaaa")], "id string, k string")
         keys = qgram_keys(df, "id", "k", q=3).collect()
         assert [(r.id, r.gram) for r in keys] == [("a", "aaa")]
-        prof = qgram_df_profile(
+        prof = block_sizes(
             qgram_keys(
                 spark.createDataFrame(
                     [("a", "abcd"), ("b", "abcd")], "id string, k string"
@@ -121,6 +119,7 @@ class TestQgramKeysProfile:
                 "id",
                 "k",
                 q=3,
-            )
+            ),
+            "gram",
         ).collect()
-        assert {(r.gram, r.df) for r in prof} == {("abc", 2), ("bcd", 2)}
+        assert {(r.gram, r.n) for r in prof} == {("abc", 2), ("bcd", 2)}

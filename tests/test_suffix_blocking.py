@@ -109,10 +109,8 @@ class TestSuffixCandidates:
 
 class TestSuffixKeysProfile:
     def test_keys_and_profile(self, spark):
-        from idd_hw6_record_linkage_spark.operators.suffix_blocking import (
-            suffix_df_profile,
-            suffix_keys,
-        )
+        from idd_hw6_record_linkage_spark.operators.blocking import block_sizes
+        from idd_hw6_record_linkage_spark.operators.suffix_blocking import suffix_keys
 
         df = spark.createDataFrame(
             [("a", "abcde"), ("b", "bcde")], "id string, k string"
@@ -123,8 +121,8 @@ class TestSuffixKeysProfile:
             ("a", "bcde"),
             ("b", "bcde"),
         }
-        prof = suffix_df_profile(keys).collect()
-        assert {(r.suffix, r.df) for r in prof} == {
+        prof = block_sizes(keys, "suffix").collect()
+        assert {(r.suffix, r.n) for r in prof} == {
             ("abcde", 1),
             ("bcde", 2),
         }
