@@ -3,7 +3,11 @@ flagship's pairs and score stages, one file each, plus their operator
 counts, for plan-parity diffs.
 
 Each ``<out_dir>/<name>.txt`` holds ``explain("formatted")`` of
-``queries()[name](spark, sf_dir)``, built on an empty cache;
+``queries()[name](spark, sf_dir)``, built on an empty cache. A query
+that calls ``localCheckpoint`` while it is built reads each checkpoint
+back as ``Scan ExistingRDD``, so its plan shows nothing below one;
+``<name>@ck<i>.txt`` holds the plan of the i-th table it checkpointed,
+in call order, taken just before the checkpoint (:func:`checkpoint_plans`).
 ``run_in_memory.pairs.txt`` and ``run_in_memory.score.txt`` hold the
 cached pairs and score stages of ``run_in_memory`` over a fixed
 200-entity generated corpus, and ``link_sources.pairs.txt`` the pairs
@@ -35,6 +39,7 @@ import os
 import re
 import sys
 from collections import Counter
+from contextlib import contextmanager
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -83,6 +88,27 @@ def plan_counts(text: str) -> dict[str, int]:
     return dict(sorted(counts.items()))
 
 
+@contextmanager
+def checkpoint_plans():
+    """Yield a list that gets the :func:`formatted_plan` of every
+    DataFrame checkpointed with ``localCheckpoint`` inside the block, in
+    call order, taken just before the checkpoint cuts its lineage."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    recorded: list[str] = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        recorded.append(formatted_plan(self))
+        return checkpoint(self, *args, **kwargs)
+
+    DataFrame.localCheckpoint = recording
+    try:
+        yield recorded
+    finally:
+        DataFrame.localCheckpoint = checkpoint
+
+
 def flagship_plans(spark) -> dict[str, str]:
     """Formatted plans of the flagship's cached stages over a fixed
     200-entity generated corpus: ``run_in_memory`` pairs and score, and
@@ -128,9 +154,14 @@ def main() -> None:
     for name, fn in entry.queries().items():
         spark.catalog.clearCache()
         try:
-            write(name, formatted_plan(fn(spark, sf_dir)))
+            with checkpoint_plans() as checkpoints:
+                text = formatted_plan(fn(spark, sf_dir))
         except Exception as exc:  # noqa: BLE001 — record it, keep dumping
             write(name, f"ERROR {type(exc).__name__}: {exc}\n")
+            continue
+        write(name, text)
+        for i, ck in enumerate(checkpoints):
+            write(f"{name}@ck{i}", ck)
     spark.catalog.clearCache()
     for name, text in flagship_plans(spark).items():
         write(name, text)

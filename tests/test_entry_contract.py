@@ -16,7 +16,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from scripts.check_oracles import TABLES  # noqa: E402
-from scripts.plan_dump import formatted_plan, plan_counts  # noqa: E402
+from scripts.plan_dump import checkpoint_plans, formatted_plan, plan_counts  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 PINNED_COUNTS = json.loads(Path(__file__).with_name("plan_counts.json").read_text())
@@ -53,12 +53,18 @@ QUERY_NAMES = sorted(entry_mod.queries())
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_vs_oracle(spark, duck, name):
-    """Built on an empty cache, the query's plan operator counts equal its
-    entry in tests/plan_counts.json (regenerate with scripts/plan_dump.py),
-    its result matches the oracle, and it leaves nothing cached."""
+    """Built on an empty cache, the query's plan operator counts and those
+    of each table it localCheckpoints equal its entries in
+    tests/plan_counts.json (regenerate with scripts/plan_dump.py), its
+    result matches the oracle, and it leaves nothing cached."""
     spark.catalog.clearCache()
-    df = entry_mod.queries()[name](spark, SF_DIR)
+    with checkpoint_plans() as checkpoints:
+        df = entry_mod.queries()[name](spark, SF_DIR)
     assert plan_counts(formatted_plan(df)) == PINNED_COUNTS[name]
+    n_ck = sum(key.startswith(f"{name}@ck") for key in PINNED_COUNTS)
+    assert [plan_counts(text) for text in checkpoints] == [
+        PINNED_COUNTS[f"{name}@ck{i}"] for i in range(n_ck)
+    ]
     got = df.toPandas()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
         "query left a cached table behind"

@@ -141,7 +141,8 @@ def test_flagship_stage_plan_counts(spark):
 
 
 def test_pinned_plans_lint():
-    """The plan lint over tests/plan_counts.json: no row-at-a-time
+    """The plan lint over every entry of tests/plan_counts.json, the
+    ``<query>@ck<i>`` checkpointed tables included: no row-at-a-time
     Python, and cartesian joins exactly in CARTESIAN_OK (so the list
     holds no stale names). test_query_vs_oracle and
     test_flagship_stage_plan_counts hold every live plan to its pinned
