@@ -366,15 +366,6 @@ SELECT a.doc_id AS id_l, b.doc_id AS id_r, a.block_key AS block_key
 FROM k a JOIN k b ON a.block_key = b.block_key AND a.doc_id < b.doc_id
 """
 
-_PAIR_FEATURES_SPARK_DOC = """
-Feature semantics shared with the oracle:
-  lev_sim    = 1 - levenshtein(substr(text,1,40))/greatest(len)  (C3)
-  jaccard_sim over distinct whitespace tokens                    (C6)
-  nchars_sim = 2^(-((n_chars_l-n_chars_r)/100)^2)                (C5 gauss)
-  score      = mean of the three                                 (M-scorer)
-"""
-
-
 def _pair_feature_docs(spark, sf_dir):
     """The staged comparator basis of rl_pair_features, rl_pair_token_sims,
     the match rules and the cross-source scorer: 40-char prefix, distinct
@@ -6278,20 +6269,6 @@ SELECT
   CAST((SELECT count(*) FROM customer c WHERE NOT EXISTS
         (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)) AS BIGINT)
     AS without_orders
-"""
-
-
-_MATCH_RULES_DOC = """
-Deterministic match-rule waterfall (MDM-style cascade) with per-pair
-provenance — first-true-wins over the blocked candidate pairs:
-  rank 1 exact_prefix : identical 40-char text prefix
-  rank 2 tight_edit   : levenshtein(prefix40) <= 20
-  rank 3 strong_tokens: token Jaccard >= 0.7
-  rank 4 len_tokens   : |n_chars diff| <= 10 AND token Jaccard >= 0.45
-  no rule             : matched_rule NULL (declined pair)
-Comparator bases are byte-identical to rl_pair_features (C3/C6/C5,
-reference record_linkage.py:271-381); the cascade itself is ONE
-map-only CASE chain (operators/match_rules.py) — zero extra shuffles.
 """
 
 

@@ -1,7 +1,6 @@
 from idd_hw6_record_linkage_spark.functions.cleaning import (  # noqa: F401
     clean_text_expr,
     clean_text_py,
-    clean_text_pandas_udf,
 )
 from idd_hw6_record_linkage_spark.functions.normalize import (  # noqa: F401
     block_key_b1,

@@ -8,15 +8,15 @@ runs to one space, strip.
 Two implementations:
 
 - :func:`clean_text_expr` — native Catalyst column expression (zero
-  Python on the hot path; whole-stage-codegen eligible). Java-regex
-  note: after the ASCII strip the input is pure ASCII, where Python's
+  Python on the hot path; whole-stage-codegen eligible); the one the
+  engine runs. Java-regex note: after the ASCII strip the input is
+  pure ASCII, where Python's
   unicode ``\\w``/``\\s`` and Java's default ASCII ``\\w``/``\\s``
   coincide ( ``\\s`` = ``[ \\t\\n\\x0B\\f\\r]`` both sides on ASCII ),
   so the chains are byte-equivalent — property-tested char-for-char
   against :func:`clean_text_py` in ``tests/test_cleaning.py``.
-- :func:`clean_text_py` — the exact Python expression, importable both
-  for tests and for the Arrow-batched pandas UDF fallback
-  (:func:`clean_text_pandas_udf`).
+- :func:`clean_text_py` — the exact Python expression, the reference
+  the tests hold the native expression to.
 """
 
 from __future__ import annotations
@@ -26,8 +26,6 @@ import re
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 _CTRL_RE = re.compile(r"[\n\r\t]")
 _SYM_RE = re.compile(r"[^\w\s\d\.,!\?\-]")
@@ -64,13 +62,3 @@ def clean_text_expr(col: Column | str) -> Column:
     c = F.regexp_replace(c, r"[^\w\s\d.,!?\-]", "")
     c = F.regexp_replace(c, r"\s+", " ")
     return F.trim(c)
-
-
-@pandas_udf(StringType())
-def clean_text_pandas_udf(s: pd.Series) -> pd.Series:
-    """Arrow-batched fallback running the exact Python expression.
-
-    Kept behind a flag for environments where Java-regex parity is in
-    doubt; the native expr is the default hot path.
-    """
-    return s.map(clean_text_py)

@@ -14,13 +14,19 @@
 The dot products are native (`zip_with` + `aggregate`); only the
 bucketing/assignment uses vectorized pandas UDFs (numpy matmul over
 the whole Arrow batch at once).
+
+This module owns the hyperplane bucket key (:func:`hyperplane_key`)
+and the quantized-vector salt basis (:func:`quantized_vec_basis`);
+``dedup.embedding_dup_pairs_lsh`` keys its tables with both.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
@@ -28,7 +34,6 @@ from pyspark.sql.window import Window
 
 from idd_hw6_record_linkage_spark.functions.similarity import sim_cosine_arrays
 from idd_hw6_record_linkage_spark.operators import blocking
-from idd_hw6_record_linkage_spark.operators.dedup import quantized_vec_basis
 
 _PLANE_CACHE: dict[tuple[int, int, int, int], np.ndarray] = {}
 
@@ -92,6 +97,38 @@ def hyperplane_probe_buckets_udf(
             bs.append(base[i] ^ (1 << int(order[i, j])))
         out.append([str(b) for b in bs])
     return pd.Series(out)
+
+
+def hyperplane_key(vec_col: str, table: int, num_planes: int, seed: int,
+                   probes: int) -> Column:
+    """The bucket key ``t{table}:{bucket}`` of ``vec_col`` in hyperplane
+    table ``table``: its sign-pattern bucket, or, with ``probes`` > 1,
+    an ``explode`` to one row per multi-probe bucket."""
+    args = (F.col(vec_col), F.lit(table), F.lit(num_planes), F.lit(seed))
+    prefix = F.lit(f"t{table}")
+    if probes <= 1:
+        return F.concat_ws(":", prefix, hyperplane_bucket_udf(*args))
+    return F.explode(F.transform(
+        hyperplane_probe_buckets_udf(*args, F.lit(probes)),
+        lambda b: F.concat_ws(":", prefix, b),
+    ))
+
+
+def quantized_vec_basis(vec_col: Column | str, dims: int = 8,
+                        grid: float = 0.25) -> Column:
+    """Content-derived salt basis for embedding buckets: the leading
+    ``dims`` components snapped to a ``grid``. Near-identical vectors
+    (the pairs a near-dup cap must keep co-located) share the basis, so
+    splitting a hot bucket by it costs almost no recall — the same role
+    the title-prefix basis plays for text blocks."""
+    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
+    return F.concat_ws(
+        ",",
+        F.transform(
+            F.slice(c, 1, dims),
+            lambda x: F.round(x / F.lit(grid)).cast("long").cast("string"),
+        ),
+    )
 
 
 def brute_force_topk(
@@ -366,40 +403,15 @@ def lsh_topk(
        to brute force. Production call sites at scale should pass a
        cap — the driver-gated contract queries pass 1000."""
 
-    def keyed(df: DataFrame, idc: str, probes: int) -> DataFrame:
-        out = None
-        for t in range(num_tables):
-            if probes <= 1:
-                part = df.select(
-                    F.col(idc),
-                    F.col(vec_col).alias("__v"),
-                    F.concat_ws(
-                        ":",
-                        F.lit(f"t{t}"),
-                        hyperplane_bucket_udf(
-                            F.col(vec_col), F.lit(t), F.lit(num_planes),
-                            F.lit(seed),
-                        ),
-                    ).alias("bucket"),
-                )
-            else:
-                # explode is a generator — stage the probe array first
-                part = df.select(
-                    F.col(idc),
-                    F.col(vec_col).alias("__v"),
-                    F.explode(
-                        hyperplane_probe_buckets_udf(
-                            F.col(vec_col), F.lit(t), F.lit(num_planes),
-                            F.lit(seed), F.lit(probes),
-                        )
-                    ).alias("__b"),
-                ).select(
-                    idc, "__v",
-                    F.concat_ws(":", F.lit(f"t{t}"), "__b").alias("bucket"),
-                )
-            out = part if out is None else out.unionByName(part)
-        return out
+    def keyed(df: DataFrame, idc: str, vec: str, probes: int) -> DataFrame:
+        return reduce(DataFrame.unionByName, [
+            df.select(
+                F.col(idc), F.col(vec_col).alias(vec),
+                hyperplane_key(vec_col, t, num_planes, seed, probes).alias("bucket"),
+            )
+            for t in range(num_tables)
+        ])
 
-    ck = keyed(corpus, id_col, 1).withColumnRenamed("__v", "c_vec")
-    qk = keyed(queries, query_id_col, num_probes).withColumnRenamed("__v", "q_vec")
+    ck = keyed(corpus, id_col, "c_vec", 1)
+    qk = keyed(queries, query_id_col, "q_vec", num_probes)
     return _bucket_topk(ck, qk, k, id_col, query_id_col, max_bucket_size)

@@ -2,8 +2,16 @@
 
 The reference builds ``dict {block_key: [row indices]}`` in Python
 loops and takes within-key Cartesian products (blocking_B1.py:79-89,
-130-154). Here a blocking pass is a ``(record_id, block_key)``
-DataFrame and candidate generation is an equi-join on ``block_key``
+130-154). Here a blocking pass is a :func:`key_table` — ``(id,
+block_key[, salt_basis][, extras], pass)`` rows, the one layout the cap
+and the pair join read. Its builders are the flagship's b1/b2 passes
+(``plans.pipeline``, which the streaming key index reuses), the MinHash
+band keys (``minhash.lsh_key_table``, also the flagship's LSH pass), the
+n-gram, SimHash and hyperplane near-dup keys (``operators.dedup``), the
+reference pipeline's strategies and the contract queries' b1 keys;
+meta-blocking's token blocks keep their own
+``(id, block_key)`` table, read by meta-blocking only. Candidate
+generation is an equi-join on ``block_key``
 (:func:`self_pair_join` / :func:`cross_pair_join`, the one pair join
 every blocked comparator uses) — the within-block Cartesian product is
 exactly the join output, shuffle-partitioned with AQE skew splitting.

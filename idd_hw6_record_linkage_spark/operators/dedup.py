@@ -10,12 +10,20 @@ Five strategies, all over a generic (id, text) document table:
 - embedding: cosine near-dup over an array<float> column, brute or
              random-hyperplane-bucketed
 
-Everything returns DataFrames; nothing collects. The verify step for
-LSH candidates is the same native Jaccard the blocking join feeds —
-candidates never blow up beyond band-collisions.
+The four near-dup detectors (n-gram, MinHash, SimHash, embedding) are
+one filter-and-verify shape. Filter: each builds a
+``blocking.key_table`` (one per MinHash band set, SimHash rotation or
+hyperplane table, unioned) and caps it with ``blocking.cap_blocks``.
+Verify: :func:`_verify` self-joins the keys into candidate pairs,
+attaches one attribute per side, scores it natively and keeps the pairs
+that pass — candidates never blow up beyond key collisions.
+Everything returns DataFrames; nothing collects.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -24,8 +32,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
-from idd_hw6_record_linkage_spark.functions.similarity import sim_cosine_arrays
+from idd_hw6_record_linkage_spark.functions.similarity import (
+    sim_cosine_arrays,
+    sim_jaccard_token_arrays,
+)
 from idd_hw6_record_linkage_spark.operators import blocking
+from idd_hw6_record_linkage_spark.operators.ann import hyperplane_key, quantized_vec_basis
 from idd_hw6_record_linkage_spark.operators.minhash import lsh_key_table, word_shingles
 
 
@@ -135,10 +147,22 @@ def hashed_shingles(col: Column | str, n: int = 3) -> Column:
     )
 
 
-def _array_jaccard(ls: Column, rs: Column) -> Column:
-    inter = F.size(F.array_intersect(ls, rs)).cast("double")
-    union = F.size(F.array_union(ls, rs)).cast("double")
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+def _verify(keys: DataFrame, df: DataFrame, id_col: str, attr: Column,
+            score: Callable[[Column, Column], Column], name: str,
+            keep: Callable[[Column], Column]) -> DataFrame:
+    """The verify half of every near-dup detector: the candidate pairs
+    of ``keys``, ``attr`` of ``df`` attached to both sides by
+    ``id_col``, the ``name`` score column ``score(attr_l, attr_r)``,
+    and only the pairs where ``keep(score)`` holds → (id_l, id_r,
+    name)."""
+    pairs = blocking.candidate_pairs_self(keys)
+    attrs = df.select(id_col, attr.alias("a"))
+    return (
+        blocking.attach_pair_attributes(pairs, attrs, ["a"], id_col)
+        .withColumn(name, score(F.col("a_l"), F.col("a_r")))
+        .where(keep(F.col(name)))
+        .select("id_l", "id_r", name)
+    )
 
 
 def ngram_jaccard_pairs(
@@ -154,14 +178,8 @@ def ngram_jaccard_pairs(
     excluded (see :func:`_nonblank`)."""
     df = _nonblank(df, text_col)
     keys = blocking.key_table(df, id_col, block_key, "ngram")
-    pairs = blocking.candidate_pairs_self(keys)
-    attrs = df.select(id_col, hashed_shingles(text_col, n).alias("sh"))
-    enriched = blocking.attach_pair_attributes(pairs, attrs, ["sh"], id_col)
-    return (
-        enriched.withColumn("jaccard", _array_jaccard(F.col("sh_l"), F.col("sh_r")))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_l", "id_r", "jaccard")
-    )
+    return _verify(keys, df, id_col, hashed_shingles(text_col, n),
+                   sim_jaccard_token_arrays, "jaccard", lambda j: j >= threshold)
 
 
 # --- MinHash-LSH -------------------------------------------------------------
@@ -224,14 +242,8 @@ def minhash_dedup_pairs(
     df = _nonblank(df, text_col)
     keys = minhash_lsh_keys(df, id_col, text_col, num_bands, rows_per_band,
                             shingle_n, max_block_size, base)
-    pairs = blocking.candidate_pairs_self(keys)
-    attrs = df.select(id_col, hashed_shingles(text_col, shingle_n).alias("sh"))
-    enriched = blocking.attach_pair_attributes(pairs, attrs, ["sh"], id_col)
-    return (
-        enriched.withColumn("jaccard", _array_jaccard(F.col("sh_l"), F.col("sh_r")))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_l", "id_r", "jaccard")
-    )
+    return _verify(keys, df, id_col, hashed_shingles(text_col, shingle_n),
+                   sim_jaccard_token_arrays, "jaccard", lambda j: j >= threshold)
 
 
 # --- SimHash -----------------------------------------------------------------
@@ -307,28 +319,31 @@ def simhash_candidate_pairs(
     ``max_block_size=None`` disables the cap — complete hamming-≤3
     semantics; the gated contract query uses that mode so the
     uncapped brute-force oracle stays exact at every scale factor."""
-    keys = None
-    for blk in range(64 // prefix_bits):
-        part = sim_df.select(
-            F.col("id"),
-            F.concat_ws(
-                ":",
-                F.lit(f"sh{blk}"),
-                (
-                    F.shiftrightunsigned(F.col("simhash"), blk * prefix_bits)
-                    .bitwiseAND(F.lit((1 << prefix_bits) - 1))
-                ).cast("string"),
-            ).alias("block_key"),
-            F.col("simhash").cast("string").alias("salt_basis"),
-        ).withColumn("pass", F.lit("simhash"))
-        keys = part if keys is None else keys.unionByName(part)
-    # localCheckpoint (not persist — see minhash_dedup_pairs): the
+    return blocking.candidate_pairs_self(_simhash_keys(sim_df, prefix_bits, max_block_size))
+
+
+def _simhash_keys(sim_df: DataFrame, prefix_bits: int,
+                  max_block_size: int | None) -> DataFrame:
+    """The capped key table of :func:`simhash_candidate_pairs`: one
+    ``blocking.key_table`` per rotated ``prefix_bits`` block of the
+    fingerprint, salted by the full fingerprint."""
+    mask = F.lit((1 << prefix_bits) - 1)
+    keys = reduce(DataFrame.unionByName, [
+        blocking.key_table(
+            sim_df, "id",
+            F.concat_ws(":", F.lit(f"sh{blk}"), F.shiftrightunsigned(
+                F.col("simhash"), blk * prefix_bits).bitwiseAND(mask).cast("string")),
+            "simhash", F.col("simhash").cast("string"),
+        )
+        for blk in range(64 // prefix_bits)
+    ])
+    # localCheckpoint (not persist — see minhash_lsh_keys): the
     # self-join and cap_blocks scan the key table several times;
     # without it the simhash UDF would re-run per scan x 4 rotations.
     keys = keys.localCheckpoint(eager=True)
     if max_block_size is not None:
         keys = blocking.cap_blocks(keys, max_block_size, salt_col="salt_basis")
-    return blocking.candidate_pairs_self(keys)
+    return keys
 
 
 def hamming64_expr(l: Column | str, r: Column | str) -> Column:  # noqa: E741
@@ -346,13 +361,8 @@ def simhash_dedup_pairs(
     scans plus both sides of the verify join, and checkpointed blocks
     are GC-released (a persist() would leak a CacheManager entry)."""
     sim = simhash_table(df, id_col, text_col).localCheckpoint(eager=True)
-    pairs = simhash_candidate_pairs(sim, max_block_size=max_block_size)
-    return (
-        blocking.attach_pair_attributes(pairs, sim, ["simhash"], "id")
-        .withColumn("hamming", hamming64_expr("simhash_l", "simhash_r"))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_l", "id_r", "hamming")
-    )
+    return _verify(_simhash_keys(sim, 16, max_block_size), sim, "id", F.col("simhash"),
+                   hamming64_expr, "hamming", lambda h: h <= max_hamming)
 
 
 # --- embedding cosine --------------------------------------------------------
@@ -369,23 +379,6 @@ def embedding_dup_pairs_brute(
         .withColumn("cosine", sim_cosine_arrays("v_l", "v_r"))
         .where(F.col("cosine") >= threshold)
         .select("id_l", "id_r", "cosine")
-    )
-
-
-def quantized_vec_basis(vec_col: Column | str, dims: int = 8,
-                        grid: float = 0.25) -> Column:
-    """Content-derived salt basis for embedding buckets: the leading
-    ``dims`` components snapped to a ``grid``. Near-identical vectors
-    (the pairs a near-dup cap must keep co-located) share the basis, so
-    splitting a hot bucket by it costs almost no recall — the same role
-    the title-prefix basis plays for text blocks."""
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return F.concat_ws(
-        ",",
-        F.transform(
-            F.slice(c, 1, dims),
-            lambda x: F.round(x / F.lit(grid)).cast("long").cast("string"),
-        ),
     )
 
 
@@ -408,34 +401,18 @@ def embedding_dup_pairs_lsh(
     hyperplane bucket is a quadratic bomb at 100x scale. Oversized
     buckets split on the quantized-vector basis (true near-dups stay
     co-located); the id-salt second tier hard-bounds collapse."""
-    from idd_hw6_record_linkage_spark.operators.ann import hyperplane_bucket_udf
-
-    keys = None
-    for t in range(num_tables):
-        part = df.select(
-            F.col(id_col).alias("id"),
-            F.concat_ws(
-                ":",
-                F.lit(f"hp{t}"),
-                hyperplane_bucket_udf(F.col(vec_col), F.lit(t), F.lit(num_planes),
-                                      F.lit(seed)),
-            ).alias("block_key"),
-            quantized_vec_basis(vec_col).alias("salt_basis"),
-        ).withColumn("pass", F.lit("hplsh"))
-        keys = part if keys is None else keys.unionByName(part)
+    keys = reduce(DataFrame.unionByName, [
+        blocking.key_table(df, id_col, hyperplane_key(vec_col, t, num_planes, seed, 1),
+                           "hplsh", quantized_vec_basis(vec_col))
+        for t in range(num_tables)
+    ])
     if max_block_size is not None:
         # localCheckpoint: cap_blocks + the self-join rescan the key
         # table; without it the hyperplane UDF re-runs per scan.
         keys = keys.localCheckpoint(eager=True)
         keys = blocking.cap_blocks(keys, max_block_size, salt_col="salt_basis")
-    pairs = blocking.candidate_pairs_self(keys)
-    vecs = df.select(id_col, F.col(vec_col).alias("v"))
-    return (
-        blocking.attach_pair_attributes(pairs, vecs, ["v"], id_col)
-        .withColumn("cosine", sim_cosine_arrays("v_l", "v_r"))
-        .where(F.col("cosine") >= threshold)
-        .select("id_l", "id_r", "cosine")
-    )
+    return _verify(keys, df, id_col, F.col(vec_col), sim_cosine_arrays, "cosine",
+                   lambda c: c >= threshold)
 
 
 def source_overlap_matrix(

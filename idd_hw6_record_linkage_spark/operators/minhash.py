@@ -12,7 +12,8 @@ expressions — no Python on the hot path:
   (2^31-1)`` — multiply-adds over longs instead of k string-hash
   passes — each reduced with ``array_min``;
 - bands: ``num_bands`` groups of ``rows_per_band`` signature slots,
-  each hashed to one block key, ``posexplode`` to (id, band_key) rows.
+  each hashed to one block key, exploded into a ``blocking.key_table``
+  (the one key-table layout every blocking pass shares).
 
 Two docs collide on a band iff their signatures agree on all rows of
 that band — the standard (b, r) S-curve; defaults (b=8, r=4, k=32)
@@ -23,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from idd_hw6_record_linkage_spark.operators import blocking
 
 
 def word_shingles(col: Column | str, n: int = 3) -> Column:
@@ -138,17 +141,18 @@ def lsh_key_table(
     base: str = "xxhash64",
     extra_cols: list[str] | None = None,
 ) -> DataFrame:
-    """(id, block_key, pass='lsh'[, *extra_cols]) rows — one per
-    (record, band).
+    """The :func:`blocking.key_table` of the band keys: (id, block_key
+    [, salt_basis][, *extra_cols], pass='lsh') rows, one per (record,
+    band).
 
     Feed into blocking.candidate_pairs_self like any
     other blocking pass; empty/short texts still emit a degenerate
     shingle so they can only collide with identical texts.
-    ``extra_cols`` pass through verbatim (see blocking.key_table) —
-    they ride along every staged projection, so carry only what the
-    consumer needs.
+    ``extra_cols`` pass through verbatim — they ride along every staged
+    projection, so carry only what the consumer needs.
     """
     passthrough = list(extra_cols or [])
+    salt = [] if salt_basis is None else [salt_basis.alias("salt_basis")]
     # Stage the shingle array as a real column: the k=bands*rows hash
     # transforms then reference one attribute instead of inlining the
     # shingle expression k times (which explodes codegen size —
@@ -156,31 +160,23 @@ def lsh_key_table(
     shingled = df.select(
         F.col(id_col).alias("id"),
         word_shingles(text_col, shingle_n).alias("shingles"),
-        *([] if salt_basis is None else [salt_basis.alias("salt_basis")]),
-        *[F.col(c) for c in passthrough],
+        *salt,
+        *passthrough,
     )
+    carry = shingled.columns[2:]
     # Stage the base-hash array as its own column: the k derived hash
     # functions then read longs instead of re-hashing shingle strings
     # (one string-hash pass total, not k).
     base_fn = {"xxhash64": base_hashes, "md5": base_hashes_md5}[base]
-    hashed = shingled.select(
-        "id",
-        base_fn(F.col("shingles")).alias("hbase"),
-        *([] if salt_basis is None else ["salt_basis"]),
-        *passthrough,
-    )
+    hashed = shingled.select("id", base_fn(F.col("shingles")).alias("hbase"), *carry)
     signed = hashed.select(
         "id",
         minhash_signature_from_hashes(
             F.col("hbase"), num_bands * rows_per_band
         ).alias("sig"),
-        *([] if salt_basis is None else ["salt_basis"]),
-        *passthrough,
+        *carry,
     )
-    keys = signed.select(
-        "id",
-        F.explode(band_keys(F.col("sig"), num_bands, rows_per_band)).alias("block_key"),
-        *([] if salt_basis is None else ["salt_basis"]),
-        *passthrough,
+    return blocking.key_table(
+        signed, "id", F.explode(band_keys(F.col("sig"), num_bands, rows_per_band)),
+        "lsh", F.col("salt_basis") if salt else None, passthrough,
     )
-    return keys.withColumn("pass", F.lit("lsh"))

@@ -32,9 +32,6 @@ __all__ = [
     "sample_temperature",
 ]
 
-_FATE_BUCKETS = 1_000_000
-
-
 def hash_fate(key: F.Column, salt: str = "") -> F.Column:
     """Uniform fate in [0, 1): first 60 bits of md5(salt || key) over
     2^60 — engine-reproducible (DuckDB:

@@ -93,15 +93,6 @@ WEB_P1 = ComparatorConfig(
     # title(2.0)+domain(0.4) = 2.4 < 0.5*4.9.
     weights={"domain_sim": 0.4, "title_sim": 2.0, "text_sim": 2.0, "nchars_sim": 0.5},
 )
-WEB_P3 = ComparatorConfig(
-    "P3_minimal_fast",
-    (
-        Comparator("domain_exact", "exact", "domain"),
-        Comparator("title_sim", "levenshtein", "title_norm", threshold=0.75),
-        Comparator("lang_exact", "exact", "lang"),
-        Comparator("nchars_sim", "gauss", "n_chars", scale=50.0),
-    ),
-)
 
 
 # Reference comparator configs, thresholds/scales verbatim from

@@ -13,7 +13,8 @@ cached pairs and score stages of ``run_in_memory`` over a fixed
 200-entity generated corpus, and ``link_sources.pairs.txt`` the pairs
 stage of ``link_sources`` over the same corpus split in two by url
 hash (the one block cap taken over two key tables). Expression ids
-(``#123``), RDD ids (``[123]``) and plan ids are masked, so two dumps
+(``#123``), RDD ids (``[123]``), plan ids and the session-wide lambda
+variable counters (``lambda x_123``) are masked, so two dumps
 of the same plans are byte-identical and parity between two commits is
 
     python scripts/plan_dump.py /path/to/sf0.01 /tmp/a   # commit A
@@ -49,6 +50,7 @@ _MASKS = [
     (re.compile(r"(RDD|Relation|rdd)\[\d+\]"), r"\1[N]"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"\bat [\w.<>$]+:\d+"), "at <site>"),
+    (re.compile(r"\b(lambda \w+?)_\d+"), r"\1_N"),
 ]
 
 

@@ -185,15 +185,10 @@ def test_minhash_dedup_hot_band_bounded_with_recall(spark):
     found = {(r.id_l, r.id_r) for r in pairs.collect()}
     for j in range(10):
         assert (1000 + 2 * j, 1001 + 2 * j) in found
-    # hot band bounded: no candidate block may exceed ~2x the cap
-    from idd_hw6_record_linkage_spark.operators.minhash import lsh_key_table
-
-    keys = lsh_key_table(
-        df, "doc_id", "text",
-        salt_basis=F.substring(F.trim(F.col("text")), 1, 24),
-    )
-    capped = blocking.cap_blocks(keys, 20, salt_col="salt_basis")
-    assert _max_block(capped) <= 40
+    # hot band bounded: no block of the capped table the detector
+    # self-joins may exceed ~2x the cap
+    keys = dedup.minhash_lsh_keys(df, "doc_id", "text", max_block_size=20)
+    assert _max_block(keys) <= 40
 
 
 def _hot_cluster_embeddings():
