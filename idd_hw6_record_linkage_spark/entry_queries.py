@@ -586,7 +586,7 @@ FROM s
 
 
 def rl_qgram_cosine(spark, sf_dir):
-    """Char q-gram count-vector cosine (operators.gram_cosine; the
+    """Char q-gram count-vector cosine (operators.term_vectors; the
     recordlinkage library's qgram/cosine string methods) over the
     block-join candidate pairs, on an ASCII-sanitized 32-char key
     slice — the char-level graded complement to the token-level
@@ -595,7 +595,7 @@ def rl_qgram_cosine(spark, sf_dir):
     sqrt/division/round is the only float op, so the column is
     value-exact across engines. Sparse relational (explode → counts →
     pair⋈gram join), zero UDF."""
-    from idd_hw6_record_linkage_spark.operators.gram_cosine import (
+    from idd_hw6_record_linkage_spark.operators.term_vectors import (
         qgram_cosine_for_pairs,
     )
 
@@ -646,7 +646,7 @@ LEFT JOIN n2 r ON r.id = p.id_r
 
 
 def rl_weighted_jaccard(spark, sf_dir):
-    """IDF-weighted Jaccard (operators/weighted_jaccard —
+    """IDF-weighted Jaccard (operators/term_vectors —
     Chaudhuri-Ganti-Kaushik's weighted set similarity: rare-token
     agreement dominates) over within-block candidate pairs, beside the
     unweighted Jaccard it generalizes. Integer micro-weights
@@ -655,7 +655,7 @@ def rl_weighted_jaccard(spark, sf_dir):
     across engines by construction — no float-summation-order risk.
     Token basis: distinct whitespace words of the ASCII-sanitized
     40-char slice."""
-    from idd_hw6_record_linkage_spark.operators.weighted_jaccard import (
+    from idd_hw6_record_linkage_spark.operators.term_vectors import (
         weighted_jaccard_for_pairs,
     )
 
@@ -3863,12 +3863,15 @@ def pair_tfidf_cosine(spark, sf_dir):
     formulation (explode → tf/idf aggregations → pair-token join), no
     UDF, no dense vectors; value-checked against the same relational
     algebra in DuckDB."""
-    from idd_hw6_record_linkage_spark.operators.tfidf import tfidf_cosine_for_pairs
+    from idd_hw6_record_linkage_spark.operators.term_vectors import (
+        tfidf_cosine_for_pairs,
+    )
 
     docs = _docs(spark, sf_dir)
+    n_docs = docs.select("doc_id").distinct().count()
     keys = blocking.key_table(docs, "doc_id", _block_key(), "b1")
     pairs = blocking.self_pair_join(keys, "id").select("id_l", "id_r")
-    out = tfidf_cosine_for_pairs(docs, pairs, id_col="doc_id", text_col="text")
+    out = tfidf_cosine_for_pairs(docs, pairs, "doc_id", "text", n_docs)
     return out.select(
         "id_l", "id_r", F.round("tfidf_cosine", 6).alias("tfidf_cosine")
     )

@@ -17,7 +17,11 @@ every blocked comparator uses) — the within-block Cartesian product is
 exactly the join output, shuffle-partitioned with AQE skew splitting.
 Pair attributes come back by id through :func:`attach_pair_attributes`,
 so this module alone knows the pair layout ``id_l, {c}_l…, id_r,
-{c}_r…``.
+{c}_r…``. Beyond the blocked comparators, its users are canopy's
+record ↔ center token overlap (``operators.canopy``), the corpus-weighted
+comparators' shared-term join and per-record totals
+(``operators.term_vectors``, sides from :func:`pair_side`) and the
+streaming stream-static key join (``streaming.ingest``).
 
 Skew controls (SURVEY §4 — absent in the reference, mandatory at web
 scale where mega-domains create hot keys):
@@ -181,7 +185,8 @@ def cap_blocks(keys: DataFrame, max_block_size: int,
 def pair_side(df: DataFrame, id_col: str, cols, on, sfx: str) -> DataFrame:
     """One side of a pair table: ``id{sfx}``, ``{c}{sfx}`` per carried
     column, then the key(s) — for joins the builders below do not cover
-    (the streaming stream-static key join)."""
+    (a pair table joined to per-record terms, the streaming
+    stream-static key join)."""
     return df.select(F.col(id_col).alias("id" + sfx),
                      *(F.col(c).alias(c + sfx) for c in cols), *on)
 

@@ -8,11 +8,12 @@ sequential algorithm picks centers greedily from a shuffled queue —
 inherently serial, so every distributed implementation (e.g. Mahout's
 MapReduce canopy) replaces the queue with a parallel center-selection
 rule. Here centers are a DETERMINISTIC HASH-FATE SAMPLE of the
-records (``hash_fate(id, salt) < center_rate`` — the same md5 fate
-basis as operators.sampling, so the center set is reproducible across
-engines, repartitioning, and incremental appends), and assignment is
-one inverted-index token join: record ↔ center pairs sharing a token,
-scored by set Jaccard over the capped token sets.
+records (``hash_fate(id, salt="canopy") < center_rate`` — the same
+md5 fate basis as operators.sampling, so the center set is
+reproducible across engines, repartitioning, and incremental
+appends), and assignment is one inverted-index token join: record ↔
+center pairs sharing a token, scored by set Jaccard over the capped
+token sets.
 
 Semantics (pinned, engine-reproducible):
 - token basis: the caller's array column, deduplicated, empty/NULL
@@ -57,7 +58,6 @@ def canopy_blocks(
     t1: float = 0.25,
     t2: float = 0.7,
     max_df: int | None = None,
-    salt: str = "canopy",
 ) -> DataFrame:
     """(url, canopy_id, jaccard, is_tight) canopy membership — see
     module docstring for the pinned semantics. ``df`` must carry
@@ -80,31 +80,26 @@ def canopy_blocks(
     sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
 
     centers = toks.join(
-        ids.where(hash_fate(F.col("id"), salt=salt) < center_rate), "id"
-    ).select(F.col("id").alias("canopy_id"), "token")
+        ids.where(hash_fate(F.col("id"), salt="canopy") < center_rate), "id"
+    )
 
+    # record ↔ center pairs: id_l the record, id_r the center
     overlap = (
-        toks.join(centers, "token")
-        .groupBy("id", "canopy_id")
+        blocking.cross_pair_join(toks, centers, "id", on="token")
+        .groupBy("id_l", "id_r")
         .agg(F.count(F.lit(1)).alias("ov"))
     )
     jac = (
-        overlap.join(sizes, "id")
-        .join(
-            sizes.select(
-                F.col("id").alias("canopy_id"), F.col("n").alias("n_c")
-            ),
-            "canopy_id",
-        )
+        blocking.attach_pair_attributes(overlap, sizes, ["n"], "id")
         .withColumn(
             "jaccard",
-            F.col("ov") / (F.col("n") + F.col("n_c") - F.col("ov")),
+            F.col("ov") / (F.col("n_l") + F.col("n_r") - F.col("ov")),
         )
         .where(F.col("jaccard") >= t1)
     )
     members = jac.select(
-        F.col("id").alias("url"),
-        "canopy_id",
+        F.col("id_l").alias("url"),
+        F.col("id_r").alias("canopy_id"),
         F.round("jaccard", 6).alias("jaccard"),
         (F.col("jaccard") >= t2).alias("is_tight"),
     )

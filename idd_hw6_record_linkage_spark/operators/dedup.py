@@ -13,7 +13,8 @@ Five strategies, all over a generic (id, text) document table:
 The four near-dup detectors (n-gram, MinHash, SimHash, embedding) are
 one filter-and-verify shape. Filter: each builds a
 ``blocking.key_table`` (one per MinHash band set, SimHash rotation or
-hyperplane table, unioned) and caps it with ``blocking.cap_blocks``.
+hyperplane table, unioned); :func:`_capped_keys` checkpoints the three
+LSH tables and caps them with ``blocking.cap_blocks``.
 Verify: :func:`_verify` self-joins the keys into candidate pairs,
 attaches one attribute per side, scores it natively and keeps the pairs
 that pass — candidates never blow up beyond key collisions.
@@ -147,6 +148,23 @@ def hashed_shingles(col: Column | str, n: int = 3) -> Column:
     )
 
 
+def _capped_keys(keys: DataFrame, max_block_size: int | None) -> DataFrame:
+    """``keys`` checkpointed, then capped by ``blocking.cap_blocks``
+    on its ``salt_basis`` unless ``max_block_size`` is None — the one
+    materialization rule of the near-dup key tables."""
+    # localCheckpoint (eager, not persist): the key is the expensive
+    # part (MinHash signatures, the simhash UDF, hyperplane buckets),
+    # and the cap plus the candidate self-join scan the table several
+    # times — uncapped too, where the self-join reads it twice. A
+    # persist() would leak a CacheManager entry the caller cannot
+    # release; checkpointed RDD blocks are reference-tracked and freed
+    # by the ContextCleaner when the result goes out of scope.
+    keys = keys.localCheckpoint(eager=True)
+    if max_block_size is None:
+        return keys
+    return blocking.cap_blocks(keys, max_block_size, salt_col="salt_basis")
+
+
 def _verify(keys: DataFrame, df: DataFrame, id_col: str, attr: Column,
             score: Callable[[Column, Column], Column], name: str,
             keep: Callable[[Column], Column]) -> DataFrame:
@@ -193,23 +211,14 @@ def minhash_lsh_keys(df: DataFrame, id_col: str, text_col: str,
     non-blank ``df``: banded-LSH keys salted by the text prefix, capped
     by ``blocking.cap_blocks`` unless ``max_block_size`` is None. The
     capped-recall gate checks this very table."""
-    # localCheckpoint (not persist): the minhash signature (32 hashes
-    # over shingle arrays) is the expensive part, and cap_blocks +
-    # the candidate self-join scan the key table several times — but a
-    # persist() here would leak a CacheManager entry the caller cannot
-    # release. Checkpointed RDD blocks are reference-tracked and freed
-    # by the ContextCleaner when the result goes out of scope.
-    keys = lsh_key_table(
+    return _capped_keys(lsh_key_table(
         df, id_col, text_col, shingle_n, num_bands, rows_per_band,
         salt_basis=(
             None if max_block_size is None
             else F.substring(F.trim(F.col(text_col)), 1, 24)
         ),
         base=base,
-    ).localCheckpoint(eager=True)
-    if max_block_size is None:
-        return keys
-    return blocking.cap_blocks(keys, max_block_size, salt_col="salt_basis")
+    ), max_block_size)
 
 
 def minhash_dedup_pairs(
@@ -328,7 +337,7 @@ def _simhash_keys(sim_df: DataFrame, prefix_bits: int,
     ``blocking.key_table`` per rotated ``prefix_bits`` block of the
     fingerprint, salted by the full fingerprint."""
     mask = F.lit((1 << prefix_bits) - 1)
-    keys = reduce(DataFrame.unionByName, [
+    return _capped_keys(reduce(DataFrame.unionByName, [
         blocking.key_table(
             sim_df, "id",
             F.concat_ws(":", F.lit(f"sh{blk}"), F.shiftrightunsigned(
@@ -336,14 +345,7 @@ def _simhash_keys(sim_df: DataFrame, prefix_bits: int,
             "simhash", F.col("simhash").cast("string"),
         )
         for blk in range(64 // prefix_bits)
-    ])
-    # localCheckpoint (not persist — see minhash_lsh_keys): the
-    # self-join and cap_blocks scan the key table several times;
-    # without it the simhash UDF would re-run per scan x 4 rotations.
-    keys = keys.localCheckpoint(eager=True)
-    if max_block_size is not None:
-        keys = blocking.cap_blocks(keys, max_block_size, salt_col="salt_basis")
-    return keys
+    ]), max_block_size)
 
 
 def hamming64_expr(l: Column | str, r: Column | str) -> Column:  # noqa: E741
@@ -401,16 +403,11 @@ def embedding_dup_pairs_lsh(
     hyperplane bucket is a quadratic bomb at 100x scale. Oversized
     buckets split on the quantized-vector basis (true near-dups stay
     co-located); the id-salt second tier hard-bounds collapse."""
-    keys = reduce(DataFrame.unionByName, [
+    keys = _capped_keys(reduce(DataFrame.unionByName, [
         blocking.key_table(df, id_col, hyperplane_key(vec_col, t, num_planes, seed, 1),
                            "hplsh", quantized_vec_basis(vec_col))
         for t in range(num_tables)
-    ])
-    if max_block_size is not None:
-        # localCheckpoint: cap_blocks + the self-join rescan the key
-        # table; without it the hyperplane UDF re-runs per scan.
-        keys = keys.localCheckpoint(eager=True)
-        keys = blocking.cap_blocks(keys, max_block_size, salt_col="salt_basis")
+    ]), max_block_size)
     return _verify(keys, df, id_col, F.col(vec_col), sim_cosine_arrays, "cosine",
                    lambda c: c >= threshold)
 

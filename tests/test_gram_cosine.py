@@ -1,4 +1,4 @@
-"""Q-gram count-vector cosine (operators/gram_cosine.py): naive
+"""Q-gram count-vector cosine (operators/term_vectors.py): naive
 multiset-cosine parity, zero-vector and no-shared-gram conventions,
 multiset (not set) semantics, native plan."""
 
@@ -26,7 +26,7 @@ def _naive_cos(a, b, q):
 
 
 def _run(spark, recs, pairs, q=3):
-    from idd_hw6_record_linkage_spark.operators.gram_cosine import (
+    from idd_hw6_record_linkage_spark.operators.term_vectors import (
         qgram_cosine_for_pairs,
     )
 
@@ -82,7 +82,7 @@ class TestQgramCosine:
         assert got[("a", "b")] == 0.0
 
     def test_plan_native_no_cartesian(self, spark):
-        from idd_hw6_record_linkage_spark.operators.gram_cosine import (
+        from idd_hw6_record_linkage_spark.operators.term_vectors import (
             qgram_cosine_for_pairs,
         )
 

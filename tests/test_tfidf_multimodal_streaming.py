@@ -8,7 +8,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from idd_hw6_record_linkage_spark.operators.tfidf import tfidf_cosine_for_pairs
+from idd_hw6_record_linkage_spark.operators.term_vectors import tfidf_cosine_for_pairs
 
 
 def _ref_tfidf_cosine(corpus: dict, id_l, id_r):
@@ -39,22 +39,31 @@ def test_tfidf_cosine_pairs(spark):
         "c": "completely unrelated words here",
         "d": "spark spark spark",
     }
+    # "e" is blank and "f" NULL: neither carries a term, so neither
+    # counts toward df; "x" has no record at all
     records = spark.createDataFrame(
-        list(corpus.items()), "url string, text_clean string"
+        [*corpus.items(), ("e", "   "), ("f", None)],
+        "url string, text_clean string",
     )
+    text_pairs = [("a", "b"), ("a", "c"), ("a", "d"), ("c", "d")]
+    edge_pairs = [("a", "e"), ("a", "f"), ("e", "f"), ("a", "x")]
     pairs = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("a", "d"), ("c", "d")],
-        "id_l string, id_r string",
+        text_pairs + edge_pairs, "id_l string, id_r string"
     )
     got = {
         (r["id_l"], r["id_r"]): r["tfidf_cosine"]
-        for r in tfidf_cosine_for_pairs(records, pairs).collect()
+        for r in tfidf_cosine_for_pairs(
+            records, pairs, "url", "text_clean", n_docs=4
+        ).collect()
     }
-    for (l, r), v in got.items():  # noqa: E741
+    assert set(got) == set(text_pairs + edge_pairs)
+    for l, r in text_pairs:  # noqa: E741
         expect = _ref_tfidf_cosine(corpus, l, r)
-        assert v == pytest.approx(expect, abs=1e-9), (l, r)
+        assert got[(l, r)] == pytest.approx(expect, abs=1e-9), (l, r)
     assert got[("a", "b")] > 0.5
     assert got[("c", "d")] == 0.0
+    for p in edge_pairs:
+        assert got[p] == 0.0, p
 
 
 def test_streaming_ingest_matches_batch(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""IDF-weighted Jaccard (operators/weighted_jaccard).
+"""IDF-weighted Jaccard (operators/term_vectors).
 
 Naive-recompute parity on randomized corpora (weights replicated with
 math.log in Python), the rare-token-dominance property that motivates
@@ -12,7 +12,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from idd_hw6_record_linkage_spark.operators.weighted_jaccard import (
+from idd_hw6_record_linkage_spark.operators.term_vectors import (
     weighted_jaccard_for_pairs,
 )
 
